@@ -52,19 +52,6 @@ def token_set_jaccard(l: Column, r: Column) -> Column:
     )
 
 
-def hashed_token_set_jaccard(l: Column, r: Column) -> Column:
-    """Jaccard over PRE-TOKENIZED distinct token-hash arrays (see
-    ``conversation_features.full_tokens``): the split+distinct work is paid
-    once per record instead of once per candidate pair, and the intersection
-    runs on fixed-width int64 instead of strings.  Arrays are distinct, so
-    |union| = |l| + |r| - |intersect| — no array_union materialization."""
-    inter = F.size(F.array_intersect(l, r))
-    union = F.size(l) + F.size(r) - inter
-    return F.when(l.isNull() | r.isNull(), 0.0).otherwise(
-        F.when(union == 0, 1.0).otherwise(inter / union)
-    )
-
-
 def turn_alignment_similarity(l_turns: Column, r_turns: Column) -> Column:
     """Positional turn alignment over two ordered arrays of turn texts.
 

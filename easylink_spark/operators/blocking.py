@@ -29,6 +29,8 @@ unioned with splink-style ``match_key`` retention (lowest rule index wins).
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -97,6 +99,78 @@ def _keyed(records: DataFrame, key: Column) -> DataFrame:
     ).filter(F.col("_bkey").isNotNull() & (F.col("_bkey") != ""))
 
 
+def _cross_dataset_join(
+    left: DataFrame, right: DataFrame, on: Column, select: list[Column]
+) -> DataFrame:
+    """splink link_type="link_only": only pairs SPANNING datasets.  The
+    restriction is structural, not a post-filter: one equi-join per
+    unordered dataset pair (a < b), each side pre-filtered to one dataset,
+    so intra-dataset row combinations never enter a hash bucket.  The
+    dataset list is metadata-cardinality (a handful).  Both sides must
+    carry ``_ds``; ``select`` projects each join over aliases ``l``/``r``.
+    """
+    datasets = sorted(r["_ds"] for r in left.select("_ds").distinct().collect())
+    if len(datasets) < 2:
+        raise ValueError("link_only blocking needs >= 2 datasets")
+    joined = [
+        left.filter(F.col("_ds") == a).alias("l")
+        .join(right.filter(F.col("_ds") == b).alias("r"), on)
+        .select(*select)
+        for i, a in enumerate(datasets)
+        for b in datasets[i + 1:]
+    ]
+    return reduce(DataFrame.unionByName, joined)
+
+
+def bucket_self_join(
+    rows: DataFrame,
+    keys: list[str],
+    order_col: str,
+    cap: int,
+    select: list[Column],
+    link_only: bool = False,
+) -> DataFrame:
+    """Banded self-join shared by every LSH operator: rows agreeing on all
+    ``keys`` (band + bucket) pair up once each (``l.<order_col> <
+    r.<order_col>``), projected through ``select`` over aliases ``l``/``r``.
+
+    Buckets over ``cap`` rows (boilerplate text or identical vectors that
+    would go near-Cartesian) are dropped first; ``cap=0`` keeps all.
+    The cap is a WINDOW count over the same ``keys`` partitioning the join
+    needs: it introduces exactly ONE exchange, both join sides reuse it
+    (``ReusedExchange``), and the join needs no further shuffle or sort
+    because the window already partitioned AND sorted by the join key.  A
+    groupBy + broadcast anti join would plan the banded subtree (and the
+    whole signature pipeline under it) three times -- once for the bucket
+    sizes and once per join side.  The price: rows of an over-cap bucket
+    cross the exchange once before being dropped (linear, spills
+    gracefully).
+
+    ``link_only=True`` joins across datasets only (rows need ``_ds``), via
+    the same per-dataset-pair split as ``block_on_key``.
+    """
+    if cap:
+        w_bucket = Window.partitionBy(*keys)
+        rows = (
+            rows.withColumn("_bn", F.count(F.lit(1)).over(w_bucket))
+            .filter(F.col("_bn") <= cap)
+            .drop("_bn")
+        )
+    same_bucket = reduce(
+        lambda a, b: a & b, [F.col(f"l.{k}") == F.col(f"r.{k}") for k in keys]
+    )
+    if link_only:
+        return _cross_dataset_join(rows, rows, same_bucket, select)
+    return (
+        rows.alias("l")
+        .join(
+            rows.alias("r"),
+            same_bucket & (F.col(f"l.{order_col}") < F.col(f"r.{order_col}")),
+        )
+        .select(*select)
+    )
+
+
 # ---------------------------------------------------------------------------
 # Rule 1: exact-key blocking with hot-key salting
 # ---------------------------------------------------------------------------
@@ -118,10 +192,8 @@ def block_on_key(
 
     ``link_only=True`` emits only pairs SPANNING datasets (splink
     link_type="link_only"; reference splink_blocking_and_filtering.py
-    LINK_ONLY env var).  The restriction is structural, not a post-filter:
-    each cross dataset-pair (A, B) joins the A-side rows against the B-side
-    rows, so the n^2/block intra-dataset combinations are never probed or
-    materialized.
+    LINK_ONLY env var) via ``_cross_dataset_join``: the n^2/block
+    intra-dataset combinations are never probed or materialized.
     """
     keyed = _keyed(records, key)
     # Broadcast only the HOT keys (count > threshold) — a handful even at
@@ -150,38 +222,17 @@ def block_on_key(
     right = salted.withColumn(
         "_salt", F.explode(F.sequence(F.lit(0), F.col("_s") - 1))
     )
+    same_salted_key = (F.col("l._bkey") == F.col("r._bkey")) & (
+        F.col("l._salt") == F.col("r._salt")
+    )
     if link_only:
-        # one equi-join per ordered dataset pair, sides pre-filtered to one
-        # dataset each — intra-dataset row combinations never enter a hash
-        # bucket.  The dataset list is metadata-cardinality (a handful).
-        datasets = sorted(
-            r["_ds"] for r in keyed.select("_ds").distinct().collect()
-        )
-        if len(datasets) < 2:
-            raise ValueError("link_only blocking needs >= 2 datasets")
-        joined = []
-        for i, a in enumerate(datasets):
-            for b in datasets[i + 1:]:
-                joined.append(
-                    left.filter(F.col("_ds") == a).alias("l")
-                    .join(
-                        right.filter(F.col("_ds") == b).alias("r"),
-                        (F.col("l._bkey") == F.col("r._bkey"))
-                        & (F.col("l._salt") == F.col("r._salt")),
-                    )
-                    .select(*_pair_select())
-                )
-        pairs = joined[0]
-        for j in joined[1:]:
-            pairs = pairs.unionByName(j)
+        pairs = _cross_dataset_join(left, right, same_salted_key, _pair_select())
     else:
         pairs = (
             left.alias("l")
             .join(
                 right.alias("r"),
-                (F.col("l._bkey") == F.col("r._bkey"))
-                & (F.col("l._salt") == F.col("r._salt"))
-                & (F.col("l._rk") < F.col("r._rk")),
+                same_salted_key & (F.col("l._rk") < F.col("r._rk")),
             )
             .select(*_pair_select())
         )
@@ -267,12 +318,13 @@ def block_minhash_lsh(
 
     bands * rows_per_band = num_hashes; a pair with Jaccard similarity j
     collides w.p. 1-(1-j^r)^b.  Buckets larger than ``hot_bucket_cap`` are
-    dropped (boilerplate text producing near-Cartesian buckets) with the
-    drop surfaced in the plan via an explicit filter — the exact-key rule
-    with salting is the path that owns genuinely hot keys.
+    dropped (boilerplate text producing near-Cartesian buckets) by
+    ``bucket_self_join`` — the exact-key rule with salting is the path that
+    owns genuinely hot keys.  ``hot_bucket_cap=0`` means no cap, as for
+    the textops LSH operators.
 
     ``link_only=True`` restricts to cross-dataset pairs (splink
-    link_type="link_only") via a join-side dataset split, mirroring
+    link_type="link_only") via the same join-side dataset split as
     ``block_on_key``.
     """
     assert num_hashes % bands == 0
@@ -288,62 +340,11 @@ def block_minhash_lsh(
             for b in range(bands)
         ])).alias("_bb"),
     ).select("_ds", "_id", "_rk", "_bb.band", "_bb.bucket")
-
-    # Drop HOT buckets via a WINDOW count over the same (band, bucket)
-    # partitioning the self-join below needs (round-6 optimization): the
-    # former groupBy + broadcast-anti-join planned the banded subtree (and
-    # the whole minhash signature pipeline under it) THREE times — once for
-    # the bucket-size aggregation and once per self-join side, 52 Exchange
-    # nodes and zero reuse in the round-start plan.  The window introduces
-    # exactly ONE exchange, both join sides reuse it (ReusedExchange), and
-    # the join needs no further shuffle or sort because the window already
-    # partitioned AND sorted by the join key.  Guide §2.4 (remove shuffles /
-    # share one exchange between operations keyed the same way).
-    # Trade documented: rows of an over-cap bucket now cross the exchange
-    # once before being dropped (linear, spills gracefully) where the anti
-    # join dropped them pre-shuffle — the price of computing the signature
-    # pipeline once instead of three times, which dominates at every scale.
-    w_bucket = Window.partitionBy("band", "bucket")
-    ok = (
-        banded.withColumn("_bn", F.count(F.lit(1)).over(w_bucket))
-        .filter(F.col("_bn") <= hot_bucket_cap)
-        .drop("_bn")
+    pairs = bucket_self_join(
+        banded, ["band", "bucket"], "_rk", hot_bucket_cap, _pair_select(),
+        link_only=link_only,
     )
-    if link_only:
-        datasets = sorted(
-            r["_ds"] for r in ok.select("_ds").distinct().collect()
-        )
-        if len(datasets) < 2:
-            raise ValueError("link_only blocking needs >= 2 datasets")
-        joined = []
-        for i, a in enumerate(datasets):
-            for b in datasets[i + 1:]:
-                joined.append(
-                    ok.filter(F.col("_ds") == a).alias("l")
-                    .join(
-                        ok.filter(F.col("_ds") == b).alias("r"),
-                        (F.col("l.band") == F.col("r.band"))
-                        & (F.col("l.bucket") == F.col("r.bucket")),
-                    )
-                    .select(*_pair_select())
-                )
-        pairs = joined[0]
-        for j in joined[1:]:
-            pairs = pairs.unionByName(j)
-        pairs = pairs.dropDuplicates(PAIR_COLS)
-    else:
-        pairs = (
-            ok.alias("l")
-            .join(
-                ok.alias("r"),
-                (F.col("l.band") == F.col("r.band"))
-                & (F.col("l.bucket") == F.col("r.bucket"))
-                & (F.col("l._rk") < F.col("r._rk")),
-            )
-            .select(*_pair_select())
-            .dropDuplicates(PAIR_COLS)
-        )
-    return canonicalize_pairs(pairs)
+    return canonicalize_pairs(pairs.dropDuplicates(PAIR_COLS))
 
 
 # ---------------------------------------------------------------------------

@@ -47,6 +47,10 @@ from easylink_spark.contracts import (
 )
 
 SRC, DST = "src", "dst"
+# Frontier size (edges) at or under which connected components finishes
+# with the one-task union-find instead of distributed star rounds.  That
+# task holds the whole frontier in memory, so this also bounds its size.
+SMALL_GRAPH_EDGES = 500_000
 
 
 # ---------------------------------------------------------------------------
@@ -109,10 +113,11 @@ def _union_find_assignments(edges: DataFrame) -> DataFrame:
     one task instead of paying a distinct + anti-join + union of extra
     Spark jobs after the fact (links_to_clusters' small-graph path).
 
-    Only called on frontiers below ``small_graph_edges`` (default 500k
-    pairs ≈ tens of MB of string keys), where log-n distributed rounds are
-    pure fixed overhead: each large-star/small-star round costs 2+ shuffles
-    plus a driver job barrier, which no core count speeds up — this was THE
+    Only called on frontiers below ``small_graph_edges`` (default
+    ``SMALL_GRAPH_EDGES`` = 500k pairs ≈ tens of MB of string keys), where
+    log-n distributed rounds are pure fixed overhead: each
+    large-star/small-star round costs 2+ shuffles plus a driver job
+    barrier, which no core count speeds up — this was THE
     serial tail in the round-3 scaling decomposition (CC scaled 1.79x 2->8
     vs 3.1-3.3x for every other stage).  At 100 TB the first distributed
     rounds shrink the frontier geometrically, so the tail handed to this
@@ -169,31 +174,6 @@ def _union_find_assignments(edges: DataFrame) -> DataFrame:
     )
 
 
-def _resolve_small_edges(small_graph_edges: int | None) -> int:
-    """Resolve the hybrid-CC small-graph threshold (env
-    ``EASYLINK_CC_SMALL_EDGES``, default 500k).  The union-find finish
-    funnels the whole frontier through ONE task (repartition(1) + pandas
-    concat) — its memory bound is the frontier size — so an oversized env
-    override is clamped: a typo must not route a multi-GB edge set into a
-    single executor task."""
-    import os
-
-    if small_graph_edges is not None:
-        return small_graph_edges
-    small_graph_edges = int(os.environ.get("EASYLINK_CC_SMALL_EDGES", "500000"))
-    _CAP = 5_000_000
-    if small_graph_edges > _CAP:
-        import warnings
-
-        warnings.warn(
-            f"EASYLINK_CC_SMALL_EDGES={small_graph_edges} exceeds the "
-            f"single-task union-find memory bound; clamping to {_CAP}",
-            stacklevel=2,
-        )
-        small_graph_edges = _CAP
-    return small_graph_edges
-
-
 def connected_components(
     edges: DataFrame,
     src: str = SRC,
@@ -210,8 +190,8 @@ def connected_components(
     semantics, G4).
 
     Hybrid kernel: iterate large-star/small-star (Kiveris et al.) only
-    while the frontier exceeds ``small_graph_edges`` (env
-    ``EASYLINK_CC_SMALL_EDGES``, default 500_000); below that, finish with
+    while the frontier exceeds ``small_graph_edges`` (``None`` means
+    ``SMALL_GRAPH_EDGES``); below that, finish with
     a one-job single-partition union-find (``_union_find_assignments``).
     The star rounds preserve connectivity and never drop a non-root node,
     so union-find over a partially-contracted frontier yields the same
@@ -237,7 +217,8 @@ def connected_components(
     cluster with a checkpoint dir configured, ``DataFrame.checkpoint`` is
     the durable alternative.
     """
-    small_graph_edges = _resolve_small_edges(small_graph_edges)
+    if small_graph_edges is None:
+        small_graph_edges = SMALL_GRAPH_EDGES
     cleaned = (
         edges.select(F.col(src).alias(SRC), F.col(dst).alias(DST))
         .filter(F.col(SRC).isNotNull() & F.col(DST).isNotNull())
@@ -406,15 +387,9 @@ def links_to_clusters(
     # this moves that job earlier at no extra cost and lets every caller
     # (tutorial, person-linkage, streaming merge — the round-5 VERDICT's
     # unplumbed call sites) reach the fused singleton union-find below.
-    small = _resolve_small_edges(None)
     if edge_count_hint is None:
         edge_count_hint = edges.count()
-    if (
-        edge_count_hint is not None
-        and 0 < small
-        and edge_count_hint <= small
-        and emit_singletons
-    ):
+    if edge_count_hint <= SMALL_GRAPH_EDGES and emit_singletons:
         # Small-graph fast path with singletons FUSED into the one-task
         # union-find: every node of ``keyed`` (thresholded or not) rides
         # along as an isolated-node declaration (NULL dst), so the kernel
@@ -422,7 +397,7 @@ def links_to_clusters(
         # no distinct + anti-join + union jobs after the fact.  Row volume
         # is bounded by 3x the hint (edges + both endpoints of every
         # link), well inside the single-task memory bound
-        # _resolve_small_edges enforces.  Semantics identical to the
+        # SMALL_GRAPH_EDGES sets.  Semantics identical to the
         # general path below — the singleton property tests compare them.
         null_dst = F.lit(None).cast("string").alias(DST)
         declared = keyed.select(F.col(SRC), null_dst).union(

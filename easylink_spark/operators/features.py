@@ -118,19 +118,6 @@ def conversation_features(
             "turns", lambda t: F.substring(t["text_norm"], 1, turn_text_cap)
         ).alias("turn_texts"),
     )
-    # Distinct token-hash set of the full text, materialized ONCE PER RECORD:
-    # the token-set Jaccard comparator otherwise re-tokenizes the full
-    # conversation text per candidate PAIR (each record appears in many
-    # pairs, so the split+distinct work is paid k times over) and the
-    # pair->records join has to move the whole string besides.  xxhash64
-    # per token keeps the array fixed-width; a cross-token collision within
-    # a pair (~n_tokens^2/2^64) is negligible.
-    feats = feats.withColumn(
-        "full_tokens",
-        F.array_distinct(
-            F.transform(F.split("full_text_norm", " "), lambda t: F.xxhash64(t))
-        ),
-    )
     if validate:
         return validate_records(feats)
     return feats

@@ -19,7 +19,6 @@ connected components).
 from __future__ import annotations
 
 import math
-import os
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
@@ -111,47 +110,10 @@ def _leveled(
     return g
 
 
-def default_transcript_comparisons(
-    token_hash: bool | None = None,
-) -> list[Comparison]:
+def default_transcript_comparisons() -> list[Comparison]:
     """Comparison spec for the transcript payload (north rule: JW on
     normalized first-turn text, token-set Jaccard on full text,
-    turn-alignment Levenshtein over ordered turns).
-
-    ``token_hash`` (env ``EASYLINK_TOKEN_HASH_JACCARD=1``) switches the
-    full-text Jaccard to precomputed distinct token-hash arrays
-    (``features.full_tokens``): identical gamma levels (hash collisions
-    ~n_tokens^2/2^64 aside), tokenization paid once per RECORD instead of
-    once per candidate PAIR.  Default OFF, matched to the measured host:
-    the A/B on the 60k-entity corpus cut the 1-core wall 1.46x (930 s ->
-    637 s, cpu 1008 -> 714 s) but bought ZERO wall at >= 4 threads (both
-    variants ~255-314 s; the hash path's 4-core cpu inflates 714 -> ~1100 s
-    where the split path inflates only 1008 -> ~1045 s) — on this shared
-    single-memory-bus guest the wide side is bandwidth-capped, and the
-    cache-unfriendly int64 array_intersect stalls where the compute-dense
-    per-pair split hides under the same ceiling.  On a multi-executor
-    cluster (private bus per executor, per-core behavior matches the
-    1-core measurement) turn it ON.  BENCH/attempts_r5.jsonl holds the
-    raw rows (engines 93e650e / 8885e38 vs r5a)."""
-    if token_hash is None:
-        token_hash = os.environ.get("EASYLINK_TOKEN_HASH_JACCARD", "0") == "1"
-    full_jaccard = (
-        Comparison(
-            "full_jaccard",
-            "full_tokens",
-            _leveled(C.hashed_token_set_jaccard, [0.70, 0.45]),
-            m=[0.03, 0.15, 0.82],
-            u=[0.94, 0.05, 0.01],
-        )
-        if token_hash
-        else Comparison(
-            "full_jaccard",
-            "full_text_norm",
-            _leveled(C.token_set_jaccard, [0.70, 0.45]),
-            m=[0.03, 0.15, 0.82],
-            u=[0.94, 0.05, 0.01],
-        )
-    )
+    turn-alignment Levenshtein over ordered turns)."""
     return [
         Comparison(
             "first_jw",
@@ -160,7 +122,13 @@ def default_transcript_comparisons(
             m=[0.02, 0.08, 0.90],
             u=[0.90, 0.08, 0.02],
         ),
-        full_jaccard,
+        Comparison(
+            "full_jaccard",
+            "full_text_norm",
+            _leveled(C.token_set_jaccard, [0.70, 0.45]),
+            m=[0.03, 0.15, 0.82],
+            u=[0.94, 0.05, 0.01],
+        ),
         Comparison(
             "turn_align",
             "turn_texts",

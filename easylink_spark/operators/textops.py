@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from easylink_spark.operators.blocking import bucket_self_join
+
 # ---------------------------------------------------------------------------
 # Exact dedup
 # ---------------------------------------------------------------------------
@@ -114,9 +116,9 @@ def simhash_near_dup_pairs(
 
     Degenerate-corpus defense: a (band, piece) bucket larger than
     ``hot_piece_cap`` (millions of identical/boilerplate docs sharing a
-    signature piece) would go quadratic; such buckets are dropped via a
-    broadcast anti join on the tiny hot set — same cap pattern as
-    blocking.block_minhash_lsh.  Exact-dedup owns genuinely identical text.
+    signature piece) would go quadratic; such buckets are dropped by
+    ``blocking.bucket_self_join``, the same banded self-join as
+    ``block_minhash_lsh``.  Exact-dedup owns genuinely identical text.
     """
     bits_per = n_bits // bands
     sh = simhash_signatures(df, text_col, id_col, n_bits, token_hash).select(
@@ -134,36 +136,18 @@ def simhash_near_dup_pairs(
             for b in range(bands)
         ])).alias("_bp"),
     ).select("_id", "_sh", "_bp.band", "_bp.piece")
-    if hot_piece_cap:
-        # window count over the join's own (band, piece) partitioning —
-        # one shared exchange instead of planning the banded/signature
-        # subtree three times (hot aggregation + both self-join sides);
-        # same restructure as blocking.block_minhash_lsh (round 6)
-        from pyspark.sql import Window
-
-        w_piece = Window.partitionBy("band", "piece")
-        banded = (
-            banded.withColumn("_bn", F.count(F.lit(1)).over(w_piece))
-            .filter(F.col("_bn") <= hot_piece_cap)
-            .drop("_bn")
-        )
-    pairs = (
-        banded.alias("l")
-        .join(
-            banded.alias("r"),
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.piece") == F.col("r.piece"))
-            & (F.col("l._id") < F.col("r._id")),
-        )
-        .select(
+    pairs = bucket_self_join(
+        banded, ["band", "piece"], "_id", hot_piece_cap,
+        [
             F.col("l._id").alias("left_id"),
             F.col("r._id").alias("right_id"),
             hamming64(F.col("l._sh"), F.col("r._sh")).alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
+        ],
+    )
+    return (
+        pairs.filter(F.col("hamming") <= max_hamming)
         .dropDuplicates(["left_id", "right_id"])
     )
-    return pairs
 
 
 # ---------------------------------------------------------------------------
@@ -241,8 +225,8 @@ def embedding_near_dup_pairs(
 
     Degenerate-corpus defense: a (table, sig) bucket larger than
     ``hot_sig_cap`` (e.g. millions of zero/identical embeddings) is dropped
-    via a broadcast anti join on the tiny hot set, bounding the self-join
-    at quadratic-bucket inputs (exact dedup owns identical vectors)."""
+    by ``blocking.bucket_self_join``, bounding the self-join at
+    quadratic-bucket inputs (exact dedup owns identical vectors)."""
     # Spread the hyperplane-dot computation (n_tables x n_planes x dim
     # interpreted lambda steps per row) across the cluster: a byte-small
     # embeddings table is 1-2 file splits, which serialized the measured
@@ -263,35 +247,15 @@ def embedding_near_dup_pairs(
             for t in range(n_tables)
         ])).alias("_ts"),
     ).select("_id", "_v", "_ts.table", "_ts.sig")
-    if hot_sig_cap:
-        # window count over the join's own (table, sig) partitioning — one
-        # shared exchange instead of planning the tagged subtree (with its
-        # n_tables x n_planes hyperplane dots per row) three times; same
-        # restructure as blocking.block_minhash_lsh (round 6)
-        from pyspark.sql import Window
-
-        w_sig = Window.partitionBy("table", "sig")
-        tagged = (
-            tagged.withColumn("_bn", F.count(F.lit(1)).over(w_sig))
-            .filter(F.col("_bn") <= hot_sig_cap)
-            .drop("_bn")
-        )
-    cand = (
-        tagged.alias("l")
-        .join(
-            tagged.alias("r"),
-            (F.col("l.table") == F.col("r.table"))
-            & (F.col("l.sig") == F.col("r.sig"))
-            & (F.col("l._id") < F.col("r._id")),
-        )
-        .select(
+    cand = bucket_self_join(
+        tagged, ["table", "sig"], "_id", hot_sig_cap,
+        [
             F.col("l._id").alias("left_id"),
             F.col("r._id").alias("right_id"),
             F.col("l._v").alias("_lv"),
             F.col("r._v").alias("_rv"),
-        )
-        .dropDuplicates(["left_id", "right_id"])
-    )
+        ],
+    ).dropDuplicates(["left_id", "right_id"])
     return (
         cand.withColumn("cosine", cosine(F.col("_lv"), F.col("_rv")))
         .filter(F.col("cosine") >= min_cosine)

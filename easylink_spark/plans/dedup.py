@@ -145,10 +145,7 @@ def run_dedup(
                 gammas, comparisons, cfg.prior, max_iter=cfg.em_iterations
             )
             gammas.unpersist()
-        # two-phase scoring: phase 1 runs the full-text Jaccard (string
-        # split per pair by default; EASYLINK_TOKEN_HASH_JACCARD=1 switches
-        # to per-record token-hash arrays — see
-        # default_transcript_comparisons for the measured trade), role
+        # two-phase scoring: phase 1 runs the full-text Jaccard, role
         # signature AND the Jaro-Winkler pandas UDF (short first-turn
         # strings, cheap even as pure Python); only pairs whose phase-1
         # weight can still clear the threshold join the fat per-turn

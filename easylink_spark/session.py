@@ -78,8 +78,7 @@ def get_spark(
         # On a real cluster shuffle.partitions exceeds 200 and the bypass
         # path never triggers, so this setting only removes the local /
         # small-width pathology; it does not change cluster behavior.
-        .config("spark.shuffle.sort.bypassMergeThreshold",
-                os.environ.get("EASYLINK_BYPASS_MERGE_THRESHOLD", "1"))
+        .config("spark.shuffle.sort.bypassMergeThreshold", "1")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # Comparator UDFs ship wide text batches over Arrow; keep batches
         # bounded so executor Python memory stays flat at scale.

@@ -43,7 +43,6 @@ from hashlib import sha256
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 
@@ -360,35 +359,17 @@ class StageRunner:
             n_rows, file_stats = _parquet_footer_stats(self._table_path(name))
         # content_hash folds in per-file row counts + byte sizes, so a data
         # change at equal total row count still invalidates downstream
-        # lineage in almost all cases; EASYLINK_LINEAGE_DETAIL=1 adds a
-        # true order-independent data checksum (one extra scan job) plus
-        # per-partition counters.
-        data_hash = None
-        per_part: list[tuple[int, int]] = []
-        if os.environ.get("EASYLINK_LINEAGE_DETAIL", "0") == "1":
-            rows = (
-                stored.groupBy(F.spark_partition_id().alias("p"))
-                .agg(
-                    F.count(F.lit(1)).alias("n"),
-                    F.coalesce(
-                        F.bit_xor(F.xxhash64(*[F.col(f"`{c}`") for c in stored.columns])),
-                        F.lit(0),
-                    ).alias("h"),
-                )
-                .collect()
-            )
-            per_part = sorted((r["p"], r["n"]) for r in rows)
-            data_hash = 0
-            for r in rows:
-                data_hash ^= r["h"]
+        # lineage in almost all cases.  "partitions" and "data_hash" stay in
+        # the manifest (empty / None) so its format and content_hash are
+        # unchanged.
         manifest = {
             "stage": name,
             "config_hash": self.config_hash,
             "lineage": lineage,
             "rows": n_rows,
             "files": file_stats,
-            "partitions": per_part,
-            "data_hash": data_hash,
+            "partitions": [],
+            "data_hash": None,
             "columns": stored.columns,
             "wall_sec": round(time.time() - t0, 3),
             # async mode: stage walls overlap; this is the slice of wall_sec
@@ -398,7 +379,7 @@ class StageRunner:
                 {
                     "rows": n_rows,
                     "files": file_stats,
-                    "data_hash": data_hash,
+                    "data_hash": None,
                     "config": self.config_hash,
                     "lineage": lineage,
                 }

@@ -134,3 +134,31 @@ def test_union_blocking_rules_match_key(spark):
     merged = B.union_blocking_rules([rule0, rule1])
     rows = {(r[K.LEFT_ID], r[K.RIGHT_ID]): r[B.MATCH_KEY] for r in merged.collect()}
     assert rows == {("1", "2"): 0, ("2", "3"): 1}
+
+
+def test_link_only_is_cross_dataset_subset_of_dedupe(spark):
+    """``link_only=True`` must emit exactly the cross-dataset pairs the
+    dedupe (``link_only=False``) run finds over the same records split into
+    two datasets — for the salted exact-key rule and for MinHash-LSH."""
+    from easylink_spark.operators.features import conversation_features
+    from easylink_spark.synth import synth_transcripts
+
+    t = synth_transcripts(spark, n_entities=100, seed=3).drop("entity_id")
+    recs = conversation_features(t, validate=False).withColumn(
+        K.INPUT_RECORD_DATASET,
+        F.when(F.pmod(F.xxhash64(K.INPUT_RECORD_ID), F.lit(2)) == 0, "a")
+        .otherwise("b"),
+    ).cache()
+    rules = [
+        # threshold 2 salts every block of 3+ records
+        lambda **kw: B.block_on_key(
+            recs, F.substring("first_text_norm", 1, 3),
+            hot_block_threshold=2, max_salt=4, **kw),
+        lambda **kw: B.block_minhash_lsh(recs, "full_text_norm", **kw),
+    ]
+    for rule in rules:
+        cross = {p for p in pair_set(rule()) if p[0] != p[2]}
+        linked = pair_set(rule(link_only=True))
+        assert cross
+        assert linked == cross
+    recs.unpersist()

@@ -106,6 +106,12 @@ def test_cc_hybrid_paths_identical(spark):
         assign = G.connected_components(df, small_graph_edges=thr)
         results.append({(r["node"], r["component"]) for r in assign.collect()})
     assert results[0] == results[1] == results[2]
+    # bench.py's hybrid cases pass None: the default threshold, which this
+    # graph is under, so the kernel finishes with union-find at round 0
+    stats: dict = {}
+    assign = G.connected_components(df, small_graph_edges=None, stats=stats)
+    assert {(r["node"], r["component"]) for r in assign.collect()} == results[0]
+    assert stats["finish"] == "union_find" and stats["rounds"] == 0
 
 
 def test_cc_star_rounds_are_logarithmic(spark):

@@ -38,32 +38,6 @@ def test_token_set_jaccard(spark):
                 [("a b", "a b")], "a string, b string") == 1.0
 
 
-def test_hashed_token_set_jaccard_matches_string_variant(spark):
-    """The precomputed-token-hash Jaccard (features.full_tokens path) must
-    produce the same value as token_set_jaccard on the raw strings."""
-    import random
-
-    rng = random.Random(7)
-    vocab = [f"w{i}" for i in range(40)]
-    rows = [
-        (
-            " ".join(rng.choices(vocab, k=rng.randint(0, 25))),
-            " ".join(rng.choices(vocab, k=rng.randint(0, 25))),
-        )
-        for _ in range(50)
-    ]
-    df = spark.createDataFrame(rows, "a string, b string")
-    tok = lambda c: F.array_distinct(
-        F.transform(F.split(c, " "), lambda t: F.xxhash64(t))
-    )
-    got = df.select(
-        C.token_set_jaccard(F.col("a"), F.col("b")).alias("s"),
-        C.hashed_token_set_jaccard(tok(F.col("a")), tok(F.col("b"))).alias("h"),
-    ).collect()
-    for r in got:
-        assert abs(r["s"] - r["h"]) < 1e-9
-
-
 def test_turn_alignment(spark):
     schema = "a array<string>, b array<string>"
     # identical 2-turn conversations

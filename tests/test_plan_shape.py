@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from easylink_spark.operators import blocking as B
 from easylink_spark.operators import scoring as S
+from easylink_spark.operators import textops as T
 from easylink_spark.operators.features import conversation_features
 from easylink_spark.synth import synth_transcripts
 
@@ -53,7 +54,6 @@ def test_blocking_prunes_record_columns(spark, records):
         if "ReadSchema" in line:
             assert "turn_texts" not in line, line
             assert "full_text_norm" not in line, line
-            assert "full_tokens" not in line, line
 
 
 def test_scoring_attach_uses_hash_join(spark, records):
@@ -75,3 +75,32 @@ def test_filter_pushdown_reaches_scan(spark, records):
     plan = _plan(flt)
     assert "PushedFilters: [" in plan
     assert "IsNotNull(n_turns)" in plan or "GreaterThan(n_turns,3)" in plan
+
+
+def test_lsh_hot_cap_shares_the_self_join_exchange(spark, records):
+    """The hot-bucket cap is a window over the self-join's own bucket
+    partitioning, so after execution the second join side reads the first
+    side's bucket-keyed exchange (a ``ReusedExchange`` of
+    ``hashpartitioning(<first bucket key>, ...)`` in the AQE final plan)
+    instead of re-planning the banded signature subtree — for all three
+    LSH operators."""
+    docs = records.select(
+        F.col("`Input Record ID`").alias("doc_id"), "full_text_norm"
+    )
+    vecs = spark.range(200).selectExpr(
+        "id AS vec_id",
+        "transform(sequence(1, 8), x -> CAST((id * x) % 7 + 1 AS FLOAT)) AS v",
+    )
+    callers = [
+        ("block_minhash_lsh", "band",
+         B.block_minhash_lsh(records, "full_text_norm")),
+        ("simhash_near_dup_pairs", "band",
+         T.simhash_near_dup_pairs(docs, "full_text_norm", "doc_id")),
+        ("embedding_near_dup_pairs", "table",
+         T.embedding_near_dup_pairs(vecs, "v", "vec_id", dim=8)),
+    ]
+    for name, first_key, df in callers:
+        df.collect()  # runs df's own query execution -> AQE final plan
+        reused = [ln for ln in _plan(df).splitlines() if "ReusedExchange" in ln]
+        assert any(f"hashpartitioning({first_key}#" in ln for ln in reused), (
+            name, reused)

@@ -162,41 +162,6 @@ def test_two_phase_scoring_identical_links(spark):
     assert {tuple(r) for r in one.collect()} == {tuple(r) for r in four.collect()}
 
 
-def test_token_hash_flag_produces_identical_links(spark):
-    """EASYLINK_TOKEN_HASH_JACCARD only changes WHERE the full-text
-    tokenization is paid (per record vs per pair) — the gamma levels, and
-    therefore the link set, must be identical either way.  Guards the
-    flag's correctness so the deployment choice (on for multi-executor
-    clusters, off for this bench host — see
-    default_transcript_comparisons) is purely a performance knob."""
-    from easylink_spark.operators.blocking import block_on_key
-    from easylink_spark.operators.features import conversation_features
-    from easylink_spark.synth import synth_transcripts
-
-    t = synth_transcripts(spark, n_entities=60, seed=9).drop("entity_id")
-    recs = conversation_features(t, "transcripts", 24, validate=False)
-    pairs = block_on_key(recs, F.col("first_prefix"))
-    split_path = S.score_pairs(
-        pairs, recs, S.default_transcript_comparisons(token_hash=False),
-        prior=0.01, threshold=0.85, validate=False)
-    hash_path = S.score_pairs(
-        pairs, recs, S.default_transcript_comparisons(token_hash=True),
-        prior=0.01, threshold=0.85, validate=False)
-    assert ({tuple(r) for r in split_path.collect()}
-            == {tuple(r) for r in hash_path.collect()})
-    # env plumbing: default off, =1 switches the comparator input column
-    cols = {c.name: c.input_col for c in S.default_transcript_comparisons()}
-    assert cols["full_jaccard"] == "full_text_norm"
-    import os as _os
-    _os.environ["EASYLINK_TOKEN_HASH_JACCARD"] = "1"
-    try:
-        cols = {c.name: c.input_col
-                for c in S.default_transcript_comparisons()}
-        assert cols["full_jaccard"] == "full_tokens"
-    finally:
-        _os.environ.pop("EASYLINK_TOKEN_HASH_JACCARD")
-
-
 def test_value_pairs_u_matches_bruteforce_both_universes(spark):
     """estimate_u_by_value_pairs vs brute-force u over ALL record pairs of
     the universe — link_only (cross-dataset) and dedupe (all unordered

@@ -4,6 +4,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from easylink_spark import contracts as K
+from easylink_spark.operators import blocking as B
 from easylink_spark.operators import textops as T
 
 
@@ -255,9 +257,9 @@ def test_portable_simhash_matches_python_oracle(spark):
 
 def test_hot_bucket_caps_bound_degenerate_corpora(spark):
     """A corpus of thousands of identical docs must not go quadratic: the
-    hot-piece / hot-signature caps drop the degenerate buckets (exact dedup
-    owns identical content), so both near-dup paths return quickly and
-    emit no pairs."""
+    hot-bucket / hot-piece / hot-signature caps drop the degenerate buckets
+    (exact dedup owns identical content), so all three LSH paths return
+    quickly and emit no pairs."""
     n = 4000
     docs = spark.range(n).selectExpr(
         "id AS doc_id", "'same boilerplate text for everyone' AS text"
@@ -275,3 +277,14 @@ def test_hot_bucket_caps_bound_degenerate_corpora(spark):
         emb, "embedding", "vec_id", dim=8, hot_sig_cap=100
     )
     assert epairs.count() == 0
+
+    recs = docs.selectExpr(
+        f"'d' AS `{K.INPUT_RECORD_DATASET}`",
+        f"CAST(doc_id AS STRING) AS `{K.INPUT_RECORD_ID}`",
+        "text",
+    )
+    lpairs = B.block_minhash_lsh(recs, "text", hot_bucket_cap=100)
+    assert lpairs.count() == 0
+    # hot_bucket_cap=0 is no cap: a 40-doc slice pairs up in full
+    small = recs.filter(F.col(K.INPUT_RECORD_ID).cast("int") < 40)
+    assert B.block_minhash_lsh(small, "text", hot_bucket_cap=0).count() == 40 * 39 // 2
