@@ -11,6 +11,7 @@
 - ``links_to_clusters``: G1/G2 — threshold links, CC, stable cluster ids.
   Records NOT involved in an accepted link are excluded (the reference's
   explicit semantic, one_to_many_links_to_clusters.py:80-83 comment).
+  ``known=`` folds ``update_clusters`` into the same union-find.
 - ``clusters_to_links``: J2 — within-cluster pair expansion at P=1.
 - ``update_clusters``: G3 — merge known+new cluster assignments through a
   bipartite record<->cluster-marker graph (cheaper than the reference's
@@ -47,6 +48,9 @@ from easylink_spark.contracts import (
 )
 
 SRC, DST = "src", "dst"
+# Prefix of cluster-marker nodes (update_clusters).  \x7f sorts after any
+# printable record key, so component minima are always record keys.
+MARKER = "\x7f"
 # Frontier size (edges) at or under which connected components finishes
 # with the one-task union-find instead of distributed star rounds.  That
 # task holds the whole frontier in memory, so this also bounds its size.
@@ -360,6 +364,7 @@ def links_to_clusters(
     validate: bool = True,
     emit_singletons: bool = True,
     edge_count_hint: int | None = None,
+    known: DataFrame | None = None,
 ) -> DataFrame:
     """Threshold links, run CC, emit clusters contract.
 
@@ -372,6 +377,19 @@ def links_to_clusters(
     step's exclusion semantic (one_to_many_links_to_clusters.py:80-83
     comment), kept as an explicit flag.  Cluster ID = min record key in
     component (stable; splink's representative id is likewise the min node).
+
+    ``known`` (clusters contract) merges the result into existing cluster
+    assignments: the output equals
+    ``update_clusters(known, links_to_clusters(links, threshold))`` row for
+    row, but on small graphs it is ONE union-find task instead of two (the
+    streaming merge's per-batch path).
+
+    ``edge_count_hint`` is an upper bound on the rows of ``links`` plus the
+    rows of ``known``, known to the caller without a job (e.g. parquet
+    footer metadata); with no hint, one count of those rows stands in.  At
+    or under ``SMALL_GRAPH_EDGES`` the single union-find task takes at most
+    3x the hint rows: each link's edge and its two endpoint declarations,
+    plus one row per known record.
     """
     keyed = links.select(
         record_key(f"`{LEFT_DATASET}`", f"`{LEFT_ID}`").alias(SRC),
@@ -379,31 +397,35 @@ def links_to_clusters(
         F.col(PROBABILITY).alias("_p"),
     )
     edges = keyed.filter(F.col("_p") >= F.lit(threshold)).select(SRC, DST)
-    # edge_count_hint: the caller's known row count of ``links`` (e.g. its
-    # checkpoint manifest, parquet footer metadata — no job) bounds the
-    # post-threshold edge count from above.  Round-6: when no hint is
-    # known, ONE plain count of the thresholded edges takes its place —
-    # connected_components would run an equivalent probe job anyway, so
-    # this moves that job earlier at no extra cost and lets every caller
-    # (tutorial, person-linkage, streaming merge — the round-5 VERDICT's
-    # unplumbed call sites) reach the fused singleton union-find below.
+    # Without a hint, count the rows of ``links`` (and ``known``), not the
+    # thresholded edges: the fused task below also declares both endpoints
+    # of every link, including the sub-threshold ones, so only the link
+    # count bounds its input.  One narrow scan job either way.
     if edge_count_hint is None:
-        edge_count_hint = edges.count()
-    if edge_count_hint <= SMALL_GRAPH_EDGES and emit_singletons:
+        edge_count_hint = links.count() + (
+            known.count() if known is not None else 0
+        )
+    fused = edge_count_hint <= SMALL_GRAPH_EDGES and emit_singletons
+    if fused:
         # Small-graph fast path with singletons FUSED into the one-task
         # union-find: every node of ``keyed`` (thresholded or not) rides
         # along as an isolated-node declaration (NULL dst), so the kernel
         # emits the complete assignment directly — no count-probe job and
-        # no distinct + anti-join + union jobs after the fact.  Row volume
-        # is bounded by 3x the hint (edges + both endpoints of every
-        # link), well inside the single-task memory bound
-        # SMALL_GRAPH_EDGES sets.  Semantics identical to the
-        # general path below — the singleton property tests compare them.
+        # no distinct + anti-join + union jobs after the fact.  Semantics
+        # identical to the general path below — the singleton property
+        # tests compare them.
         null_dst = F.lit(None).cast("string").alias(DST)
         declared = keyed.select(F.col(SRC), null_dst).union(
             keyed.select(F.col(DST).alias(SRC), null_dst)
         )
-        assign = _union_find_assignments(edges.union(declared))
+        rows = edges.union(declared)
+        if known is not None:
+            # update_clusters' record->marker graph without its "new"
+            # markers: the links' own edges already connect what those would
+            rows = rows.union(_cluster_marker_edges(known, "known"))
+        assign = _union_find_assignments(rows)
+        if known is not None:
+            assign = assign.filter(~F.col("node").startswith(MARKER))
     else:
         assign = connected_components(edges, edge_count_hint=edge_count_hint)
         if emit_singletons:
@@ -422,6 +444,8 @@ def links_to_clusters(
         rid.alias(INPUT_RECORD_ID),
         F.col("component").alias(CLUSTER_ID),
     )
+    if known is not None and not fused:
+        return update_clusters(known, out)
     if validate:
         return validate_clusters(out)
     return out
@@ -461,6 +485,17 @@ def clusters_to_links(clusters: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 # updating clusters (G3 + G4)
 # ---------------------------------------------------------------------------
+def _cluster_marker_edges(clusters: DataFrame, prefix: str) -> DataFrame:
+    """One edge per clustered record: record key -> its cluster's marker
+    node.  A NULL Cluster ID gives no edge (connected_components drops NULL
+    endpoints; the fused union-find would read one as a declaration)."""
+    return clusters.select(
+        record_key(f"`{INPUT_RECORD_DATASET}`", f"`{INPUT_RECORD_ID}`").alias(SRC),
+        F.concat(F.lit(MARKER + prefix + "__"),
+                 F.col(f"`{CLUSTER_ID}`").cast("string")).alias(DST),
+    ).filter(F.col(DST).isNotNull())
+
+
 def update_clusters(known_clusters: DataFrame, new_clusters: DataFrame) -> DataFrame:
     """Merge two cluster assignments transitively
     (update_clusters_by_connected_components.py:60-114).
@@ -472,18 +507,11 @@ def update_clusters(known_clusters: DataFrame, new_clusters: DataFrame) -> DataF
     every record appears in the output (reference adds isolated nodes,
     :90-92).
     """
-    def tagged(df: DataFrame, prefix: str) -> DataFrame:
-        return df.select(
-            record_key(f"`{INPUT_RECORD_DATASET}`", f"`{INPUT_RECORD_ID}`").alias(SRC),
-            F.concat(F.lit("\x7f" + prefix + "__"),
-                     F.col(f"`{CLUSTER_ID}`").cast("string")).alias(DST),
-        )
-
-    # \x7f prefix sorts cluster-marker nodes after any printable record key,
-    # so component minima are always record keys.
-    edges = tagged(known_clusters, "known").union(tagged(new_clusters, "new"))
+    edges = _cluster_marker_edges(known_clusters, "known").union(
+        _cluster_marker_edges(new_clusters, "new")
+    )
     assign = connected_components(edges)
-    records_only = assign.filter(~F.col("node").startswith("\x7f"))
+    records_only = assign.filter(~F.col("node").startswith(MARKER))
     ds, rid = split_record_key("node")
     out = records_only.select(
         ds.alias(INPUT_RECORD_DATASET),

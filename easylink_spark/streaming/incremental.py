@@ -13,15 +13,24 @@ docs 'Census PVS pattern', concepts/pipeline_schema/index.rst:559-608):
 
 Here the loop is plain driver control flow over DataFrames
 (``cascade_passes``), and ``incremental_foreachBatch`` adapts the same
-update operator to a Structured Streaming micro-batch sink: each arriving
-batch of links is merged into the running cluster state.  The reference
-has no streaming operators; this is the batch-incremental semantics it
-does have, exposed on Spark's streaming runtime.
+update to a Structured Streaming micro-batch sink: each arriving batch of
+links is merged into the running cluster state.  Steps 3 and 4 are one
+call there, ``links_to_clusters(batch, known=state)``: on small graphs a
+single union-find task over the batch's links and the state's
+record->cluster edges, with its size bound read from the state's parquet
+footers rather than a probe job.  A missing state means the first batch; a
+state that exists but cannot be read fails the batch.  The reference has
+no streaming operators; this is the batch-incremental semantics it does
+have, exposed on Spark's streaming runtime.
 """
 
 from __future__ import annotations
 
+import glob
+import os
+import shutil
 from collections.abc import Callable
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -33,10 +42,18 @@ from easylink_spark.contracts import (
     RECORD_ID,
 )
 from easylink_spark.operators import clustering as G
+from easylink_spark.sources.checkpoint import _parquet_footer_stats
 
 # A linkage pass: records-in -> clusters-out (e.g. a configured
 # blocking+scoring+clustering sub-pipeline).
 LinkagePass = Callable[[DataFrame], DataFrame]
+
+# The clusters contract as links_to_clusters emits it: all three columns
+# are strings (record ids come out of the split record key).
+CLUSTERS_SCHEMA = (
+    f"`{INPUT_RECORD_DATASET}` string, `{INPUT_RECORD_ID}` string, "
+    f"`{CLUSTER_ID}` string"
+)
 
 
 def cascade_passes(
@@ -49,11 +66,7 @@ def cascade_passes(
     """Run linkage passes in sequence, each excluding already-clustered
     records and merging its new clusters into the accumulated state
     (LoopStep unrolling, step.py:1102-1218 -> plain Python loop)."""
-    empty_clusters = spark.createDataFrame(
-        [],
-        f"`{INPUT_RECORD_DATASET}` string, `{INPUT_RECORD_ID}` string, "
-        f"`{CLUSTER_ID}` string",
-    )
+    empty_clusters = spark.createDataFrame([], CLUSTERS_SCHEMA)
     state = known_clusters if known_clusters is not None else empty_clusters
     remaining = dataset
     for i, link in enumerate(passes):
@@ -71,6 +84,68 @@ def cascade_passes(
     return state
 
 
+def merge_batch(
+    batch_df: DataFrame, batch_id: int, state_path: str, threshold: float
+) -> None:
+    """Merge one batch of links into the parquet cluster state at
+    ``state_path`` (the ``incremental_foreachBatch`` micro-batch body)."""
+    # Crash recovery: a crash between the two swap renames below leaves
+    # the state under __old_<id> with state_path absent — restore the
+    # newest such snapshot instead of silently restarting from empty.
+    if not os.path.exists(state_path):
+        leftovers = sorted(
+            glob.glob(f"{state_path}.__old_*"),
+            key=lambda p: int(p.rsplit("_", 1)[-1]),
+        )
+        if leftovers:
+            os.rename(leftovers[-1], state_path)
+            for p in leftovers[:-1]:
+                shutil.rmtree(p, ignore_errors=True)
+    # An existence check, not a try/except around the read: a state that
+    # exists but fails to read must fail the batch, never be replaced by
+    # this one batch's clusters.
+    if os.path.exists(state_path):
+        # A crash after merged.write to __new_<id> that is never retried
+        # with the same batch id would orphan that temp dir forever; once a
+        # valid state exists, any __new_* leftover is garbage by definition
+        # (the swap either completed — state_path IS the new data — or the
+        # batch will be retried and rewrites its own temp dir).
+        for p in glob.glob(f"{state_path}.__new_*"):
+            shutil.rmtree(p, ignore_errors=True)
+        # the schema merge_batch writes; stating it skips Spark's one-task
+        # schema-inference job, and a state of another shape fails the read
+        known = batch_df.sparkSession.read.schema(CLUSTERS_SCHEMA).parquet(
+            state_path
+        )
+        known_rows, _ = _parquet_footer_stats(Path(state_path))
+    else:
+        known, known_rows = None, 0
+    # One fused union-find over the batch's links and the known state; its
+    # row bound is footer metadata plus one batch count, so no probe job
+    # re-reads the state.  Called through the module so instrumentation
+    # that wraps G.links_to_clusters sees it.
+    merged = G.links_to_clusters(
+        batch_df, threshold, known=known,
+        edge_count_hint=batch_df.count() + known_rows,
+    )
+    # Never overwrite the path the plan is still reading: an in-place
+    # overwrite relies on cached blocks surviving until the write ends —
+    # eviction mid-write would recompute against deleted files and corrupt
+    # the state.  Write to a versioned temp path, then atomically swap
+    # directories (rename is atomic on a POSIX filesystem; on an object
+    # store use a pointer file / Iceberg snapshot instead).
+    tmp_path = f"{state_path}.__new_{batch_id}"
+    merged.write.mode("overwrite").parquet(tmp_path)
+    old_path = f"{state_path}.__old_{batch_id}"
+    # a retried batch may find its own old_path from a crash after the
+    # first rename — clear it or the rename below fails ENOTEMPTY
+    shutil.rmtree(old_path, ignore_errors=True)
+    if os.path.exists(state_path):
+        os.rename(state_path, old_path)
+    os.rename(tmp_path, state_path)
+    shutil.rmtree(old_path, ignore_errors=True)
+
+
 def incremental_foreachBatch(
     links_stream,
     checkpoint_dir: str,
@@ -84,62 +159,12 @@ def incremental_foreachBatch(
     ``links_stream`` is a streaming DataFrame with the links contract.
     State is a parquet table of the clusters contract at ``state_path``.
     """
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        import glob
-        import os
-        import shutil
-
-        spark = batch_df.sparkSession
-        # Crash recovery: a crash between the two swap renames below leaves
-        # the state under __old_<id> with state_path absent — restore the
-        # newest such snapshot instead of silently restarting from empty.
-        if not os.path.exists(state_path):
-            leftovers = sorted(
-                glob.glob(f"{state_path}.__old_*"),
-                key=lambda p: int(p.rsplit("_", 1)[-1]),
-            )
-            if leftovers:
-                os.rename(leftovers[-1], state_path)
-                for p in leftovers[:-1]:
-                    shutil.rmtree(p, ignore_errors=True)
-        # A crash after merged.write to __new_<id> that is never retried
-        # with the same batch id would orphan that temp dir forever; once a
-        # valid state exists, any __new_* leftover is garbage by definition
-        # (the swap either completed — state_path IS the new data — or the
-        # batch will be retried and rewrites its own temp dir).
-        if os.path.exists(state_path):
-            for p in glob.glob(f"{state_path}.__new_*"):
-                shutil.rmtree(p, ignore_errors=True)
-        new_clusters = G.links_to_clusters(batch_df, threshold, validate=False)
-        try:
-            known = spark.read.parquet(state_path)
-            have_state = True
-        except Exception:
-            have_state = False
-        if have_state:
-            merged = G.update_clusters(known, new_clusters)
-        else:
-            merged = new_clusters
-        # Never overwrite the path the plan is still reading: an in-place
-        # overwrite relies on cached blocks surviving until the write ends —
-        # eviction mid-write would recompute against deleted files and
-        # corrupt the state.  Write to a versioned temp path, then atomically
-        # swap directories (rename is atomic on a POSIX filesystem; on an
-        # object store use a pointer file / Iceberg snapshot instead).
-        tmp_path = f"{state_path}.__new_{batch_id}"
-        merged.write.mode("overwrite").parquet(tmp_path)
-        old_path = f"{state_path}.__old_{batch_id}"
-        # a retried batch may find its own old_path from a crash after the
-        # first rename — clear it or the rename below fails ENOTEMPTY
-        shutil.rmtree(old_path, ignore_errors=True)
-        if os.path.exists(state_path):
-            os.rename(state_path, old_path)
-        os.rename(tmp_path, state_path)
-        shutil.rmtree(old_path, ignore_errors=True)
-
     return (
-        links_stream.writeStream.foreachBatch(merge_batch)
+        links_stream.writeStream.foreachBatch(
+            lambda batch_df, batch_id: merge_batch(
+                batch_df, batch_id, state_path, threshold
+            )
+        )
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
     )

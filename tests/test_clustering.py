@@ -233,6 +233,100 @@ def test_update_clusters_merges_transitively(spark):
     }
 
 
+def _rows(clusters) -> list[tuple]:
+    return sorted(tuple(r) for r in clusters.collect())
+
+
+def test_links_to_clusters_known_equals_update_clusters(spark, monkeypatch):
+    """``links_to_clusters(links, t, known=K)`` returns exactly the rows of
+    ``update_clusters(K, links_to_clusters(links, t))`` — on the fused
+    small-graph path and on the large-graph fallback."""
+    monkeypatch.setenv("EASYLINK_VALIDATE", "0")  # rows are compared instead
+    links = _links(
+        spark,
+        [
+            ("d", "2", "d", "3", 0.9),   # bridges known clusters k1 and k3
+            ("d", "7", "d", "8", 0.2),   # below threshold only: singletons
+            ("d", "5", "d", "9", 0.1),   # below threshold, one end known
+            ("d", "1", "e", "1", 0.95),  # second dataset joins k1
+            ("e", "2", "e", "3", 0.99),  # new cluster, no known record
+        ],
+    )
+    known = spark.createDataFrame(
+        [
+            ("d", "1", "k1"), ("d", "2", "k1"),
+            ("d", "3", "k3"), ("d", "4", "k3"),
+            ("d", "5", "d-__-5"),
+            ("d", "10", "k10"), ("d", "11", "k10"),  # no link touches these
+            ("e", "9", "e-__-9"),
+        ],
+        f"`{K.INPUT_RECORD_DATASET}` string, `{K.INPUT_RECORD_ID}` string, "
+        f"`{K.CLUSTER_ID}` string",
+    )
+    t = 0.5
+    assert _rows(G.links_to_clusters(links, t, known=None)) == _rows(
+        G.links_to_clusters(links, t)
+    )
+    expected = _rows(G.update_clusters(known, G.links_to_clusters(links, t)))
+    assert partition_of(G.links_to_clusters(links, t, known=known)) == {
+        frozenset({"d-__-1", "d-__-2", "d-__-3", "d-__-4", "e-__-1"}),
+        frozenset({"d-__-5"}), frozenset({"d-__-7"}), frozenset({"d-__-8"}),
+        frozenset({"d-__-9"}), frozenset({"d-__-10", "d-__-11"}),
+        frozenset({"e-__-2", "e-__-3"}), frozenset({"e-__-9"}),
+    }
+    assert _rows(G.links_to_clusters(links, t, known=known)) == expected
+    hinted = G.links_to_clusters(links, t, known=known, edge_count_hint=13)
+    assert _rows(hinted) == expected
+
+    # random graphs over two datasets, known clusters overlapping the links
+    random.seed(7)
+    for _ in range(2):
+        rows = [
+            (random.choice("de"), str(random.randrange(30)),
+             random.choice("de"), str(random.randrange(30)), random.random())
+            for _ in range(40)
+        ]
+        known_rows = [
+            (ds, str(i), f"c{random.randrange(12)}")
+            for ds in "de" for i in random.sample(range(40), 15)
+        ]
+        rl = _links(spark, rows)
+        rk = spark.createDataFrame(known_rows, known.schema)
+        assert _rows(G.links_to_clusters(rl, t, known=rk)) == _rows(
+            G.update_clusters(rk, G.links_to_clusters(rl, t))
+        )
+
+    # a bound above SMALL_GRAPH_EDGES (5 links + 8 known rows) takes the
+    # distributed fallback
+    monkeypatch.setattr(G, "SMALL_GRAPH_EDGES", 12)
+    assert _rows(G.links_to_clusters(links, t, known=known)) == expected
+
+
+def test_union_find_task_rows_stay_bounded(spark, monkeypatch):
+    """Without a hint, the single union-find task never takes more than 3x
+    SMALL_GRAPH_EDGES rows — also when every link is below the threshold
+    (no edges, but two endpoint declarations per link) and with ``known``."""
+    monkeypatch.setattr(G, "SMALL_GRAPH_EDGES", 4)
+    sizes = []
+    real = G._union_find_assignments
+
+    def counting(edges):
+        sizes.append(edges.count())
+        return real(edges)
+
+    monkeypatch.setattr(G, "_union_find_assignments", counting)
+    below = _links(spark, [("d", f"1{i}", "d", f"2{i}", 0.1) for i in range(7)])
+    known = spark.createDataFrame(
+        [("d", "1", "k"), ("d", "2", "k")],
+        f"`{K.INPUT_RECORD_DATASET}` string, `{K.INPUT_RECORD_ID}` string, "
+        f"`{K.CLUSTER_ID}` string",
+    )
+    for links, k in ((below, None), (below.limit(2), None), (below.limit(1), known)):
+        expected = 2 * links.count() + (k.count() if k is not None else 0)
+        assert G.links_to_clusters(links, 0.5, known=k).count() == expected
+    assert sizes and max(sizes) <= 3 * 4, sizes
+
+
 def test_one_to_many_drop_ties(spark):
     links = _links(
         spark,

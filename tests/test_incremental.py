@@ -3,9 +3,13 @@ and 1:1 assignment (G5)."""
 
 from __future__ import annotations
 
+import os
 import shutil
 import tempfile
 
+import pyarrow as pa
+import pytest
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import functions as F
 
 from easylink_spark import contracts as K
@@ -14,6 +18,7 @@ from easylink_spark.operators.assignment import one_to_one_assignment
 from easylink_spark.streaming.incremental import (
     cascade_passes,
     incremental_foreachBatch,
+    merge_batch,
 )
 
 
@@ -84,6 +89,119 @@ def test_incremental_foreach_batch(spark, tmp_ckpt):
     got2 = partition_of(spark.read.parquet(state))
     assert got2 == {frozenset({("d", "1"), ("d", "2"), ("d", "3")})}
     shutil.rmtree(src_dir, ignore_errors=True)
+
+
+LINKS_SCHEMA = (
+    f"`{K.LEFT_DATASET}` string, `{K.LEFT_ID}` string, "
+    f"`{K.RIGHT_DATASET}` string, `{K.RIGHT_ID}` string, "
+    f"`{K.PROBABILITY}` double"
+)
+
+
+def _stream_batches(spark, src_dir, batches):
+    """Write one parquet file per batch, so maxFilesPerTrigger=1 makes one
+    micro-batch (batch ids 0, 1, ...) per file."""
+    for i, rows in enumerate(batches):
+        spark.createDataFrame(rows, LINKS_SCHEMA).coalesce(1).write.parquet(
+            f"{src_dir}/b{i}"
+        )
+        for f in os.listdir(f"{src_dir}/b{i}"):
+            if f.endswith(".parquet"):
+                os.rename(f"{src_dir}/b{i}/{f}", f"{src_dir}/part-{i:03d}.parquet")
+        shutil.rmtree(f"{src_dir}/b{i}")
+    return (
+        spark.readStream.schema(LINKS_SCHEMA)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src_dir)
+    )
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+def test_incremental_restores_state_after_crash_between_renames(
+    spark, tmp_ckpt, monkeypatch
+):
+    """A crash after ``state -> state.__old_<id>`` but before
+    ``__new_<id> -> state`` leaves no state at ``state_path``; the retried
+    batch restores the old state and merges into it."""
+    src_dir = f"{tmp_ckpt}/src"
+    state, chk = f"{tmp_ckpt}/state", f"{tmp_ckpt}/chk"
+    batches = [
+        [("d", "1", "d", "2", 0.9)],
+        [("d", "2", "d", "3", 0.95), ("d", "4", "d", "5", 0.2)],
+    ]
+    stream = _stream_batches(spark, src_dir, batches)
+    real_rename = os.rename
+
+    def crashing_rename(src, dst):
+        if src == f"{state}.__new_1":
+            raise OSError("injected crash between the two renames")
+        real_rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", crashing_rename)
+    q = incremental_foreachBatch(stream, chk, state).start()
+    with pytest.raises(StreamingQueryException, match="injected crash"):
+        q.awaitTermination(120)
+    assert not os.path.exists(state)
+    assert os.path.exists(f"{state}.__old_1")
+    assert partition_of(spark.read.parquet(f"{state}.__old_1")) == {
+        frozenset({("d", "1"), ("d", "2")})
+    }
+
+    monkeypatch.setattr(os, "rename", real_rename)
+    q = incremental_foreachBatch(stream, chk, state).start()
+    q.awaitTermination(120)
+    assert partition_of(spark.read.parquet(state)) == {
+        frozenset({("d", "1"), ("d", "2"), ("d", "3")}),
+        frozenset({("d", "4")}),
+        frozenset({("d", "5")}),
+    }
+    assert sorted(os.listdir(tmp_ckpt)) == ["chk", "src", "state"]
+
+
+def test_incremental_retried_batch_id_is_idempotent(spark, tmp_ckpt):
+    """Deleting the last commit makes the restarted query run that batch
+    again on top of the state it already wrote; the end state still equals
+    one batch ``links_to_clusters`` over every link."""
+    src_dir = f"{tmp_ckpt}/src"
+    state, chk = f"{tmp_ckpt}/state", f"{tmp_ckpt}/chk"
+    batches = [
+        [("d", "1", "d", "2", 0.9), ("e", "7", "d", "8", 0.3)],
+        [("d", "2", "d", "3", 0.95), ("d", "4", "e", "5", 0.99)],
+        [("d", "3", "e", "5", 0.88), ("d", "6", "d", "9", 0.1)],
+    ]
+    stream = _stream_batches(spark, src_dir, batches)
+    q = incremental_foreachBatch(stream, chk, state).start()
+    q.awaitTermination(120)
+    first = _rows(spark.read.parquet(state))
+
+    for f in ("2", ".2.crc"):  # the commit and its checksum sidecar
+        os.remove(f"{chk}/commits/{f}")
+    q = incremental_foreachBatch(stream, chk, state).start()
+    q.awaitTermination(120)
+    assert [p["batchId"] for p in q.recentProgress if p["numInputRows"]] == [2]
+    every_link = spark.createDataFrame(
+        [row for rows in batches for row in rows], LINKS_SCHEMA
+    )
+    assert _rows(spark.read.parquet(state)) == first == _rows(
+        G.links_to_clusters(every_link, 0.85)
+    )
+
+
+def test_incremental_unreadable_state_fails_the_batch(spark, tmp_ckpt):
+    """A state that exists but cannot be read raises; it is never replaced
+    by the batch's own clusters."""
+    state = f"{tmp_ckpt}/state"
+    os.makedirs(state)
+    with open(f"{state}/part-00000.parquet", "wb") as f:
+        f.write(b"not a parquet file")
+    batch = spark.createDataFrame([("d", "1", "d", "2", 0.9)], LINKS_SCHEMA)
+    with pytest.raises(pa.ArrowInvalid):  # the footer read of the row bound
+        merge_batch(batch, 0, state, 0.85)
+    assert os.listdir(state) == ["part-00000.parquet"]
+    assert sorted(os.listdir(tmp_ckpt)) == ["state"]
 
 
 def test_one_to_one_assignment(spark):

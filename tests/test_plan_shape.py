@@ -13,10 +13,13 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from easylink_spark import contracts as K
 from easylink_spark.operators import blocking as B
+from easylink_spark.operators import clustering as G
 from easylink_spark.operators import scoring as S
 from easylink_spark.operators import textops as T
 from easylink_spark.operators.features import conversation_features
+from easylink_spark.streaming.incremental import merge_batch
 from easylink_spark.synth import synth_transcripts
 
 
@@ -104,3 +107,38 @@ def test_lsh_hot_cap_shares_the_self_join_exchange(spark, records):
         reused = [ln for ln in _plan(df).splitlines() if "ReusedExchange" in ln]
         assert any(f"hashpartitioning({first_key}#" in ln for ln in reused), (
             name, reused)
+
+
+def test_stream_merge_job_count(spark, tmp_path, monkeypatch):
+    """One streaming merge of a ~100-link batch into a small state, state
+    write included, runs at most 4 Spark jobs: the batch count and the
+    parquet write of the one fused union-find, two jobs each under AQE.
+    The two-pass merge (``links_to_clusters`` with its own count probe, then
+    ``update_clusters`` on an inferred-schema state read) ran 9."""
+    monkeypatch.setenv("EASYLINK_VALIDATE", "0")  # validators add their own jobs
+    state, links_dir = str(tmp_path / "state"), str(tmp_path / "links")
+    spark.createDataFrame(
+        [("d", str(i), f"d-__-{i - i % 3}") for i in range(300)],
+        f"`{K.INPUT_RECORD_DATASET}` string, `{K.INPUT_RECORD_ID}` string, "
+        f"`{K.CLUSTER_ID}` string",
+    ).write.parquet(state)
+    spark.createDataFrame(
+        [("d", str(i), "d", str(i + 7), 0.6 + (i % 4) / 10) for i in range(0, 400, 4)],
+        f"`{K.LEFT_DATASET}` string, `{K.LEFT_ID}` string, "
+        f"`{K.RIGHT_DATASET}` string, `{K.RIGHT_ID}` string, "
+        f"`{K.PROBABILITY}` double",
+    ).write.parquet(links_dir)
+    batch = spark.read.parquet(links_dir)
+    expected = sorted(G.update_clusters(
+        spark.read.parquet(state), G.links_to_clusters(batch, 0.85)
+    ).collect())
+
+    sc = spark.sparkContext
+    sc.setJobGroup("stream_merge_jobs", "one merge_batch")
+    try:
+        merge_batch(batch, 0, state, 0.85)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("stream_merge_jobs")
+    assert 0 < len(jobs) <= 4, sorted(jobs)
+    assert sorted(spark.read.parquet(state).collect()) == expected
