@@ -7,7 +7,9 @@
   The reference reaches CC through splink's duckdb label propagation
   (steps/splink/splink_links_to_clusters.py:37-51) and networkx
   (steps/cascading/one_to_many_links_to_clusters.py:84-100) — both
-  single-node; this kernel is the distributed replacement.
+  single-node; this kernel is the distributed replacement.  Frontiers at
+  or under ``SMALL_GRAPH_EDGES`` skip the rounds: one Arrow collect and a
+  numpy union-find on the driver, like the reference's single node.
 - ``links_to_clusters``: G1/G2 — threshold links, CC, stable cluster ids.
   Records NOT involved in an accepted link are excluded (the reference's
   explicit semantic, one_to_many_links_to_clusters.py:80-83 comment).
@@ -52,8 +54,11 @@ SRC, DST = "src", "dst"
 # printable record key, so component minima are always record keys.
 MARKER = "\x7f"
 # Frontier size (edges) at or under which connected components finishes
-# with the one-task union-find instead of distributed star rounds.  That
-# task holds the whole frontier in memory, so this also bounds its size.
+# with the driver-side union-find instead of distributed star rounds.  The
+# driver collects the whole frontier, so this caps driver memory: at most
+# about 3x this many rows of two string keys (links_to_clusters' fused
+# input), plus the numpy kernel's arrays.  A cluster driver needs that
+# headroom.
 SMALL_GRAPH_EDGES = 500_000
 
 
@@ -105,77 +110,79 @@ def _small_star(edges: DataFrame) -> DataFrame:
 
 
 def _union_find_assignments(edges: DataFrame) -> DataFrame:
-    """Small-frontier finish: single-partition union-find over the edge
-    list, executor-side (``mapInPandas`` — no driver collect).  Emits
+    """Small-frontier finish: union-find over the edge list on the driver.
+    The ``src``/``dst`` columns are collected once with ``toArrow`` (one
+    job: no Exchange, no Python worker), a numpy kernel labels the
+    components, and the result comes back as a one-partition DataFrame of
     (node, component=min node id in component) for every node appearing in
     either column — identical semantics to the star-forest extraction, and
     a pure function of the edge set (deterministic at any parallelism).
+    This call runs that job; the returned DataFrame only rescans the
+    driver's result.
 
     Rows with a NULL ``dst`` are ISOLATED-NODE DECLARATIONS: the ``src``
     node joins the universe (and becomes its own singleton component unless
     some real edge connects it).  Callers fuse singleton emission into this
-    one task instead of paying a distinct + anti-join + union of extra
+    one pass instead of paying a distinct + anti-join + union of extra
     Spark jobs after the fact (links_to_clusters' small-graph path).
 
-    Only called on frontiers below ``small_graph_edges`` (default
-    ``SMALL_GRAPH_EDGES`` = 500k pairs ≈ tens of MB of string keys), where
-    log-n distributed rounds are pure fixed overhead: each
-    large-star/small-star round costs 2+ shuffles plus a driver job
-    barrier, which no core count speeds up — this was THE
-    serial tail in the round-3 scaling decomposition (CC scaled 1.79x 2->8
-    vs 3.1-3.3x for every other stage).  At 100 TB the first distributed
-    rounds shrink the frontier geometrically, so the tail handed to this
-    kernel stays small.
+    Only called on inputs bounded by ``SMALL_GRAPH_EDGES`` (at most 3x that
+    many rows, see links_to_clusters), where log-n distributed rounds are
+    pure fixed overhead: each large-star/small-star round costs 2+
+    shuffles plus a driver job barrier, which no core count speeds up —
+    this was THE serial tail in the round-3 scaling decomposition (CC
+    scaled 1.79x 2->8 vs 3.1-3.3x for every other stage).  The reference
+    clusters on one node too (networkx,
+    one_to_many_links_to_clusters.py:84-100).  At 100 TB the first
+    distributed rounds shrink the frontier geometrically, so the tail
+    handed to this kernel stays small.
     """
     import numpy as np
     import pandas as pd
+    import pyarrow as pa
 
-    def uf(batches):
-        srcs: list = []
-        dsts: list = []
-        for pdf in batches:
-            srcs.append(pdf[SRC])
-            dsts.append(pdf[DST])
-        if not srcs:
-            return
-        s = pd.concat(srcs, ignore_index=True)
-        d = pd.concat(dsts, ignore_index=True)
-        # sort=True: codes are STRING RANKS, so the min-code fixpoint below
-        # is directly the min-string component representative.  NULL dst
-        # (isolated-node declaration) factorizes to code -1 and is excluded
-        # from the unique universe; the edge mask below drops those rows
-        # from propagation while their src stays a (singleton) node.
-        code_of, uniq = pd.factorize(pd.concat([s, d], ignore_index=True),
-                                     sort=True)
-        n = len(uniq)
-        m = len(s)
-        src_c, dst_c = code_of[:m], code_of[m:]
-        edge_mask = (dst_c >= 0) & (src_c >= 0)
-        if not edge_mask.all():
-            src_c, dst_c = src_c[edge_mask], dst_c[edge_mask]
-        # vectorized min-label propagation with pointer jumping
-        # (Shiloach-Vishkin flavor): labels only decrease; at the fixpoint
-        # parent[i] == min code in i's component.  O(log n) outer rounds,
-        # each O(m) in numpy — no per-edge Python loop.
-        parent = np.arange(n, dtype=np.int64)
+    table = edges.select(SRC, DST).toArrow()
+    s = table.column(SRC).to_pandas()
+    d = table.column(DST).to_pandas()
+    # sort=True: codes are STRING RANKS, so the min-code fixpoint below
+    # is directly the min-string component representative.  NULL dst
+    # (isolated-node declaration) factorizes to code -1 and is excluded
+    # from the unique universe; the edge mask below drops those rows
+    # from propagation while their src stays a (singleton) node.
+    code_of, uniq = pd.factorize(pd.concat([s, d], ignore_index=True),
+                                 sort=True)
+    n = len(uniq)
+    m = len(s)
+    src_c, dst_c = code_of[:m], code_of[m:]
+    edge_mask = (dst_c >= 0) & (src_c >= 0)
+    if not edge_mask.all():
+        src_c, dst_c = src_c[edge_mask], dst_c[edge_mask]
+    # vectorized min-label propagation with pointer jumping
+    # (Shiloach-Vishkin flavor): labels only decrease; at the fixpoint
+    # parent[i] == min code in i's component.  O(log n) outer rounds,
+    # each O(m) in numpy — no per-edge Python loop.
+    parent = np.arange(n, dtype=np.int64)
+    while True:
+        before = parent.copy()
+        np.minimum.at(parent, src_c, parent[dst_c])
+        np.minimum.at(parent, dst_c, parent[src_c])
         while True:
-            before = parent.copy()
-            np.minimum.at(parent, src_c, parent[dst_c])
-            np.minimum.at(parent, dst_c, parent[src_c])
-            while True:
-                jumped = parent[parent]
-                if np.array_equal(jumped, parent):
-                    break
-                parent = jumped
-            if np.array_equal(parent, before):
+            jumped = parent[parent]
+            if np.array_equal(jumped, parent):
                 break
-        uniq = np.asarray(uniq)
-        yield pd.DataFrame({"node": uniq, "component": uniq[parent]})
-
-    return (
-        edges.repartition(1)
-        .mapInPandas(uf, schema="node string, component string")
-    )
+            parent = jumped
+        if np.array_equal(parent, before):
+            break
+    uniq = np.asarray(uniq, dtype=object)
+    # explicit string types: an empty input still yields the typed schema
+    result = pa.table({
+        "node": pa.array(uniq, type=pa.string()),
+        "component": pa.array(uniq[parent], type=pa.string()),
+    })
+    # one partition: left to itself createDataFrame splits the rows over
+    # the default parallelism, and a writer downstream then writes one
+    # file per split
+    return edges.sparkSession.createDataFrame(result).coalesce(1)
 
 
 def connected_components(
@@ -196,7 +203,8 @@ def connected_components(
     Hybrid kernel: iterate large-star/small-star (Kiveris et al.) only
     while the frontier exceeds ``small_graph_edges`` (``None`` means
     ``SMALL_GRAPH_EDGES``); below that, finish with
-    a one-job single-partition union-find (``_union_find_assignments``).
+    the driver-side union-find (``_union_find_assignments``: one collect
+    job, result in one partition).
     The star rounds preserve connectivity and never drop a non-root node,
     so union-find over a partially-contracted frontier yields the same
     (node -> component-min) map as running the rounds to fixpoint.  Set
@@ -209,8 +217,8 @@ def connected_components(
     at or under ``small_graph_edges`` the count-and-checksum probe job and
     the pre-dedup of the edge set are skipped entirely and the frontier
     goes straight to the union-find finish (duplicates and orientation do
-    not change a union-find's result, and the bound caps the single task's
-    memory the same way the measured count did).  At bench scale that probe
+    not change a union-find's result, and the bound caps the driver's
+    collect the same way the measured count did).  At bench scale that probe
     job was ~1.5-2 s of per-run fixed cost that no core count divides; at
     100 TB the hint is simply absent (no caller knows a small bound) and
     the distributed star rounds run as before.
@@ -381,15 +389,16 @@ def links_to_clusters(
     ``known`` (clusters contract) merges the result into existing cluster
     assignments: the output equals
     ``update_clusters(known, links_to_clusters(links, threshold))`` row for
-    row, but on small graphs it is ONE union-find task instead of two (the
-    streaming merge's per-batch path).
+    row, but on small graphs it is ONE driver-side union-find instead of
+    two (the streaming merge's per-batch path).
 
     ``edge_count_hint`` is an upper bound on the rows of ``links`` plus the
     rows of ``known``, known to the caller without a job (e.g. parquet
     footer metadata); with no hint, one count of those rows stands in.  At
-    or under ``SMALL_GRAPH_EDGES`` the single union-find task takes at most
-    3x the hint rows: each link's edge and its two endpoint declarations,
-    plus one row per known record.
+    or under ``SMALL_GRAPH_EDGES`` the driver collects at most 3x the hint
+    rows for the union-find: each link's edge and its two endpoint
+    declarations, plus one row per known record.  That collect runs here,
+    in this call; the returned DataFrame reads its one-partition result.
     """
     keyed = links.select(
         record_key(f"`{LEFT_DATASET}`", f"`{LEFT_ID}`").alias(SRC),
@@ -398,16 +407,16 @@ def links_to_clusters(
     )
     edges = keyed.filter(F.col("_p") >= F.lit(threshold)).select(SRC, DST)
     # Without a hint, count the rows of ``links`` (and ``known``), not the
-    # thresholded edges: the fused task below also declares both endpoints
-    # of every link, including the sub-threshold ones, so only the link
-    # count bounds its input.  One narrow scan job either way.
+    # thresholded edges: the fused union-find below also declares both
+    # endpoints of every link, including the sub-threshold ones, so only the
+    # link count bounds its input.  One narrow scan job either way.
     if edge_count_hint is None:
         edge_count_hint = links.count() + (
             known.count() if known is not None else 0
         )
     fused = edge_count_hint <= SMALL_GRAPH_EDGES and emit_singletons
     if fused:
-        # Small-graph fast path with singletons FUSED into the one-task
+        # Small-graph fast path with singletons FUSED into the driver-side
         # union-find: every node of ``keyed`` (thresholded or not) rides
         # along as an isolated-node declaration (NULL dst), so the kernel
         # emits the complete assignment directly — no count-probe job and

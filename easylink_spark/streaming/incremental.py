@@ -15,13 +15,15 @@ Here the loop is plain driver control flow over DataFrames
 (``cascade_passes``), and ``incremental_foreachBatch`` adapts the same
 update to a Structured Streaming micro-batch sink: each arriving batch of
 links is merged into the running cluster state.  Steps 3 and 4 are one
-call there, ``links_to_clusters(batch, known=state)``: on small graphs a
-single union-find task over the batch's links and the state's
-record->cluster edges, with its size bound read from the state's parquet
-footers rather than a probe job.  A missing state means the first batch; a
-state that exists but cannot be read fails the batch.  The reference has
-no streaming operators; this is the batch-incremental semantics it does
-have, exposed on Spark's streaming runtime.
+call there, ``links_to_clusters(batch, known=state)``: on small graphs one
+Arrow collect of the batch's links and the state's record->cluster edges
+and a union-find on the driver, with the collect's size bound read from the
+state's parquet footers plus one batch count rather than a probe job.  The
+merged state comes back in one partition and is written as one file.  A
+missing state means the first batch; a state that exists but cannot be
+read fails the batch.  The reference has no streaming operators; this is
+the batch-incremental semantics it does have, exposed on Spark's streaming
+runtime.
 """
 
 from __future__ import annotations
@@ -120,10 +122,10 @@ def merge_batch(
         known_rows, _ = _parquet_footer_stats(Path(state_path))
     else:
         known, known_rows = None, 0
-    # One fused union-find over the batch's links and the known state; its
-    # row bound is footer metadata plus one batch count, so no probe job
-    # re-reads the state.  Called through the module so instrumentation
-    # that wraps G.links_to_clusters sees it.
+    # One fused driver-side union-find over the batch's links and the known
+    # state; its row bound is footer metadata plus one batch count, so no
+    # probe job re-reads the state.  Called through the module so
+    # instrumentation that wraps G.links_to_clusters sees it.
     merged = G.links_to_clusters(
         batch_df, threshold, known=known,
         edge_count_hint=batch_df.count() + known_rows,

@@ -303,9 +303,10 @@ def test_links_to_clusters_known_equals_update_clusters(spark, monkeypatch):
 
 
 def test_union_find_task_rows_stay_bounded(spark, monkeypatch):
-    """Without a hint, the single union-find task never takes more than 3x
-    SMALL_GRAPH_EDGES rows — also when every link is below the threshold
-    (no edges, but two endpoint declarations per link) and with ``known``."""
+    """Without a hint, the driver-side union-find never collects more than
+    3x SMALL_GRAPH_EDGES rows — also when every link is below the threshold
+    (no edges, but two endpoint declarations per link) and with ``known`` —
+    so SMALL_GRAPH_EDGES bounds the driver's memory."""
     monkeypatch.setattr(G, "SMALL_GRAPH_EDGES", 4)
     sizes = []
     real = G._union_find_assignments
@@ -325,6 +326,26 @@ def test_union_find_task_rows_stay_bounded(spark, monkeypatch):
         expected = 2 * links.count() + (k.count() if k is not None else 0)
         assert G.links_to_clusters(links, 0.5, known=k).count() == expected
     assert sizes and max(sizes) <= 3 * 4, sizes
+
+
+def test_empty_inputs_give_empty_string_typed_frames(spark):
+    """No links (with and without an empty ``known``) and no edges give 0
+    rows with the output columns, all strings."""
+    clusters_cols = [K.INPUT_RECORD_DATASET, K.INPUT_RECORD_ID, K.CLUSTER_ID]
+    known = spark.createDataFrame(
+        [], ", ".join(f"`{c}` string" for c in clusters_cols)
+    )
+    links = _links(spark, [])
+    edges = spark.createDataFrame([], "src string, dst string")
+    for out, cols in (
+        (G.links_to_clusters(links, 0.5), clusters_cols),
+        (G.links_to_clusters(links, 0.5, known=known), clusters_cols),
+        (G.connected_components(edges), ["node", "component"]),
+    ):
+        assert out.count() == 0
+        assert [(f.name, f.dataType.simpleString()) for f in out.schema] == [
+            (c, "string") for c in cols
+        ]
 
 
 def test_one_to_many_drop_ties(spark):

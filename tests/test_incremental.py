@@ -3,6 +3,7 @@ and 1:1 assignment (G5)."""
 
 from __future__ import annotations
 
+import glob
 import os
 import shutil
 import tempfile
@@ -202,6 +203,31 @@ def test_incremental_unreadable_state_fails_the_batch(spark, tmp_ckpt):
         merge_batch(batch, 0, state, 0.85)
     assert os.listdir(state) == ["part-00000.parquet"]
     assert sorted(os.listdir(tmp_ckpt)) == ["state"]
+
+
+def test_merge_batch_writes_one_state_file(spark, tmp_ckpt):
+    """A small state is rewritten as ONE parquet file per batch, not one
+    per split of the default parallelism (which multiplies write_amp)."""
+    state = f"{tmp_ckpt}/state"
+    for batch_id, rows in enumerate([
+        [("d", str(i), "d", str(i + 1), 0.9) for i in range(0, 60, 3)],
+        [("d", str(i), "e", str(i), 0.95) for i in range(0, 60, 2)],
+    ]):
+        merge_batch(spark.createDataFrame(rows, LINKS_SCHEMA), batch_id,
+                    state, 0.85)
+        assert len(glob.glob(f"{state}/part-*.parquet")) == 1
+
+
+def test_merge_batch_empty_batch_keeps_state(spark, tmp_ckpt):
+    """An empty batch leaves the state's rows unchanged."""
+    state = f"{tmp_ckpt}/state"
+    first = [("d", "1", "d", "2", 0.9), ("d", "10", "d", "3", 0.95),
+             ("d", "4", "e", "5", 0.2)]
+    merge_batch(spark.createDataFrame(first, LINKS_SCHEMA), 0, state, 0.85)
+    before = _rows(spark.read.parquet(state))
+    assert len(before) == 6
+    merge_batch(spark.createDataFrame([], LINKS_SCHEMA), 1, state, 0.85)
+    assert _rows(spark.read.parquet(state)) == before
 
 
 def test_one_to_one_assignment(spark):

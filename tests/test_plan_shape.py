@@ -109,12 +109,51 @@ def test_lsh_hot_cap_shares_the_self_join_exchange(spark, records):
             name, reused)
 
 
+def test_small_graph_clustering_runs_no_python_or_single_partition_exchange(
+    spark, monkeypatch
+):
+    """On the small-graph path the union-find runs on the driver: neither
+    the collect it runs nor the plan it returns holds a Python-evaluation
+    node or a shuffle into one partition — with and without ``known``."""
+    links = spark.createDataFrame(
+        [("d", str(i), "d", str(i + 7), 0.6 + (i % 4) / 10) for i in range(0, 80, 4)],
+        f"`{K.LEFT_DATASET}` string, `{K.LEFT_ID}` string, "
+        f"`{K.RIGHT_DATASET}` string, `{K.RIGHT_ID}` string, "
+        f"`{K.PROBABILITY}` double",
+    )
+    known = spark.createDataFrame(
+        [("d", str(i), f"d-__-{i - i % 2}") for i in range(40)],
+        f"`{K.INPUT_RECORD_DATASET}` string, `{K.INPUT_RECORD_ID}` string, "
+        f"`{K.CLUSTER_ID}` string",
+    )
+    collected = []
+    to_arrow = type(links).toArrow
+
+    def recording_to_arrow(df):
+        table = to_arrow(df)
+        collected.append(_plan(df))
+        return table
+
+    monkeypatch.setattr(type(links), "toArrow", recording_to_arrow)
+    for k in (None, known):
+        clusters = G.links_to_clusters(links, 0.85, known=k)
+        clusters.collect()
+        plans = collected + [_plan(clusters)]
+        collected.clear()
+        assert len(plans) == 2, plans
+        for plan in plans:
+            for node in ("MapInPandas", "PythonMapInArrow", "ArrowEvalPython",
+                         "BatchEvalPython", "Exchange SinglePartition"):
+                assert node not in plan, (node, plan)
+
+
 def test_stream_merge_job_count(spark, tmp_path, monkeypatch):
     """One streaming merge of a ~100-link batch into a small state, state
-    write included, runs at most 4 Spark jobs: the batch count and the
-    parquet write of the one fused union-find, two jobs each under AQE.
-    The two-pass merge (``links_to_clusters`` with its own count probe, then
-    ``update_clusters`` on an inferred-schema state read) ran 9."""
+    write included, runs at most 4 Spark jobs: the batch count (two jobs
+    under AQE), the driver-side union-find's one collect, and the one
+    write.  The two-pass merge (``links_to_clusters`` with its own count
+    probe, then ``update_clusters`` on an inferred-schema state read) ran
+    9."""
     monkeypatch.setenv("EASYLINK_VALIDATE", "0")  # validators add their own jobs
     state, links_dir = str(tmp_path / "state"), str(tmp_path / "links")
     spark.createDataFrame(
