@@ -682,10 +682,6 @@ def main_scaling() -> None:
                "protocol": r_small.get("protocol", "cold"),
                "warmup_small": r_small.get("warmup_sec"),
                "warmup_big": r_big.get("warmup_sec"),
-               # both sides of a pair always share one checkpoint mode;
-               # stamped so mixed-mode logs stay auditable (the cpu-floor
-               # gate then naturally selects the lower-cpu mode's rows)
-               "async_ckpt": os.environ.get("EASYLINK_ASYNC_CHECKPOINT", "1"),
                # per-stage decomposition (which stage fails to scale?) —
                # the round-4 input-side diagnosis came from exactly this
                "stage_walls_small": r_small.get("stage_walls"),
@@ -1142,8 +1138,7 @@ Async-mode caveat (measured round 4, unchanged): the write-overlap trades
 ~1.3x CPU at this corpus size on THIS bandwidth-shared host while keeping
 e2e wall equal-or-better and byte-identical; on a real multi-executor
 cluster stage writes are IO-bound (object store / HDFS), where overlap is
-strictly a win.  `EASYLINK_ASYNC_CHECKPOINT=0` restores synchronous stage
-boundaries.
+strictly a win.
 
 ## Why several (N, corpus) configurations
 

@@ -190,7 +190,6 @@ def connected_components(
     src: str = SRC,
     dst: str = DST,
     max_iter: int = 50,
-    checkpoint_every: int = 1,
     small_graph_edges: int | None = None,
     stats: dict | None = None,
     edge_count_hint: int | None = None,
@@ -331,8 +330,7 @@ def connected_components(
             _plan_round(prev_sig[0])
             small_round = prev_sig[0] <= _SMALL_ROUND_EDGES
             cur = _small_star(_large_star(cur, dedup=not small_round))
-            if checkpoint_every:
-                cur = cur.localCheckpoint(eager=False)
+            cur = cur.localCheckpoint(eager=False)
             sig = signature(cur)
             rounds += 1
             if sig == prev_sig:

@@ -171,14 +171,11 @@ def run_dedup(
 
     def build_clusters() -> DataFrame:
         # The links stage row count (known with zero extra jobs: from the
-        # eager cache materialization in async mode, or the checkpoint
-        # manifest's parquet footer stats otherwise) bounds the edge count
-        # from above; when it is already under the small-graph threshold,
-        # connected_components skips its count-and-checksum probe job and
-        # goes straight to the union-find finish.  Round 6: row_counts is
-        # populated in BOTH checkpoint modes, so async runs now take the
-        # probe-free path too (they previously raced the in-flight manifest
-        # write and always paid the probe).
+        # stage's eager cache materialization, or the resumed manifest)
+        # bounds the edge count from above; when it is already under the
+        # small-graph threshold, connected_components skips its
+        # count-and-checksum probe job and goes straight to the union-find
+        # finish.
         return G.links_to_clusters(
             links,
             cfg.threshold,
@@ -192,9 +189,9 @@ def run_dedup(
         inputs=["links"],
         validator=validate_clusters,
     )
-    # Durability barrier: every stage table + manifest on disk (async mode
-    # overlaps the writes with downstream compute; by the time the clusters
-    # stage finishes only the small tail writes are still in flight).
+    # Durability barrier: every stage table + manifest on disk (the stage
+    # writes overlap downstream compute; by the time the clusters stage
+    # finishes only the small tail writes are still in flight).
     # flush() also releases every stage cache (round-5 judge findings: the
     # caches otherwise accumulate for the session's lifetime AND satisfy
     # the next identical run's plans via the CacheManager), so the returned

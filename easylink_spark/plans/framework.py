@@ -199,9 +199,9 @@ class Pipeline:
                     produced_by[slot] = f"{st.name}__{slot}"
             env.update(outs)
         if runner is not None:
-            # Durability barrier: with async checkpointing on, every slot
-            # write above may still be on a daemon thread — a caller that
-            # exits right after run() must not lose half-written tables.
+            # Durability barrier: every slot write above may still be on a
+            # daemon thread — a caller that exits right after run() must not
+            # lose half-written tables.
             runner.flush()
         return env
 

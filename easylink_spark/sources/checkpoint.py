@@ -18,16 +18,13 @@ write).
 
 Scale notes (the round-1 serial bottleneck lived here):
 
+- one write path for every stage (``StageRunner.stage``): cache, validate
+  in the caller's frame, write in the background, so the stage-boundary
+  write barrier overlaps downstream compute;
 - writes land straight from the plan's own output partitioning — NO
-  repartition by default.  Round 1 forced ``repartition(shuffle
-  partitions)`` per stage to guard against AQE coalescing a byte-small
-  output to one file (which serializes the downstream re-read); that
-  guard cost a full extra shuffle of every stage's bytes.  The session
-  defaults make it unnecessary: ``coalescePartitions.parallelismFirst``
-  (Spark's default) with ``default.parallelism = shuffle partitions``
-  keeps AQE from coalescing below the configured parallelism, so stage
-  outputs arrive with enough partitions and the re-read gets one split
-  per file.  ``write_partitions`` remains available to force a layout;
+  repartition.  Downstream stages read the cache, not the files, and
+  parquet re-reads split large files by row-group anyway, so re-shuffling
+  every stage's bytes just to shape the file count is pure overhead;
 - row counts come from parquet footer metadata via pyarrow on the driver —
   zero Spark jobs per stage boundary (the round-1 count() re-scan is gone).
 """
@@ -35,7 +32,6 @@ Scale notes (the round-1 serial bottleneck lived here):
 from __future__ import annotations
 
 import json
-import os
 import threading
 import time
 from collections.abc import Callable
@@ -72,9 +68,6 @@ class StageRunner:
         base_dir: str | Path,
         config: dict | None = None,
         iceberg_catalog: str | None = None,
-        validate: bool = True,
-        write_partitions: int | None = None,
-        async_write: bool | None = None,
     ):
         self.spark = spark
         self.base = Path(base_dir)
@@ -82,39 +75,24 @@ class StageRunner:
         self.config_hash = _stable_hash(config or {})
         self.iceberg_catalog = iceberg_catalog
         self.manifests: dict[str, dict] = {}
-        # Async mode (round-4 scaling work): a stage returns its PERSISTED
-        # DataFrame immediately and the durable write + manifest happen in a
-        # background thread, so the stage-boundary write->read barrier
-        # (~1-3 s of serial time per boundary that no core count speeds up)
-        # overlaps downstream compute.  Stages with an active validator run
-        # synchronously — validation must raise in the caller's frame.
-        self.async_write = (
-            async_write
-            if async_write is not None
-            else os.environ.get("EASYLINK_ASYNC_CHECKPOINT", "1") != "0"
-        )
+        # Background stage writers (round-4 scaling work): a stage returns
+        # its PERSISTED DataFrame immediately and the durable write +
+        # manifest happen on a daemon thread, so the stage-boundary
+        # write->read barrier (~1-3 s of serial time per boundary that no
+        # core count speeds up) overlaps downstream compute.
         self._pending: dict[str, threading.Thread] = {}
         self._errors: list[BaseException] = []
         # Row count per completed stage, known the moment the stage's cache
-        # is materialized (async) or its manifest lands (sync/resume) — no
-        # extra job.  Callers use it e.g. as connected_components'
-        # edge_count_hint without waiting for an in-flight manifest write.
+        # is materialized (or its manifest is resumed) — no extra job.
+        # Callers use it e.g. as connected_components' edge_count_hint
+        # without waiting for an in-flight manifest write.
         self.row_counts: dict[str, int] = {}
         # Live stage caches, released at flush() (the durability barrier).
         self._cached: dict[str, DataFrame] = {}
         # per-stage seconds a background writer spent WAITING on its inputs'
-        # writers (recorded in the manifest: async-mode wall_sec values
-        # overlap, so this makes the per-stage decomposition honest)
+        # writers (recorded in the manifest: wall_sec values of overlapping
+        # stages overlap, so this makes the per-stage decomposition honest)
         self._wait_secs: dict[str, float] = {}
-        # Default: NO repartition — stages write straight from the plan's
-        # own (AQE-sized) output partitioning.  Re-shuffling every stage's
-        # bytes just to shape the file count is a full extra shuffle per
-        # stage (at 100 TB, the dominant cost; at bench scale a measured
-        # ~2-4 s per stage), and parquet re-reads split large files by
-        # row-group anyway, so downstream parallelism does not depend on
-        # file count.  Pass an explicit number to force an output layout
-        # (e.g. compacting a tiny dimension to one file).
-        self.write_partitions = write_partitions
 
     # -- storage layer ------------------------------------------------------
     def _table_path(self, name: str) -> Path:
@@ -123,9 +101,7 @@ class StageRunner:
     def _manifest_path(self, name: str) -> Path:
         return self.base / f"{name}._manifest.json"
 
-    def _write(self, name: str, df: DataFrame, repartition: bool = True) -> None:
-        if repartition and self.write_partitions and self.write_partitions > 1:
-            df = df.repartition(self.write_partitions)
+    def _write(self, name: str, df: DataFrame) -> None:
         if self.iceberg_catalog:
             df.writeTo(f"{self.iceberg_catalog}.{name}").createOrReplace()
         else:
@@ -146,7 +122,7 @@ class StageRunner:
             out[dep] = m["content_hash"] if m else "external"
         return out
 
-    # -- async machinery ----------------------------------------------------
+    # -- background writers ------------------------------------------------
     def _raise_pending_errors(self) -> None:
         if self._errors:
             err = self._errors[0]
@@ -260,16 +236,16 @@ class StageRunner:
         is only written after the table write succeeds, so a killed run
         resumes from the last *completed* stage (SURVEY §7.4.4).
 
-        ``validator`` (a contracts.validate_* function) runs against the
-        *stored* table — one cheap parquet re-scan per check instead of
-        recomputing the whole stage plan per validation action.
-
-        When ``async_write`` is on and the stage has no active validator,
-        the stage returns its PERSISTED DataFrame immediately and the
-        durable write + manifest happen in a background thread that first
-        joins its inputs' writers (so lineage hashes are final).  Downstream
-        stages chain on the in-memory copy instead of waiting for a
-        write->read round-trip; ``flush()`` is the durability barrier.
+        Every stage takes one write path: its output is persisted and
+        materialized by one eager ``count()`` (published as
+        ``row_counts[name]``); ``validator`` (a contracts.validate_*
+        function) then runs on that cache in the caller's frame, so a
+        violation raises here and nothing is written.  Otherwise the stage
+        returns the PERSISTED DataFrame immediately and the durable write +
+        manifest happen in a background thread that first joins its inputs'
+        writers (so lineage hashes are final).  Downstream stages chain on
+        the in-memory copy instead of waiting for a write->read round-trip;
+        ``flush()`` is the durability barrier and releases the caches.
         """
         from easylink_spark.contracts import _validation_enabled
 
@@ -293,67 +269,45 @@ class StageRunner:
                 return self.read(name)
 
         t0 = time.time()
-        df = fn()
-        validating = validator is not None and _validation_enabled()
-        if self.async_write and not validating:
-            cached = df.persist(StorageLevel.MEMORY_AND_DISK)
-            # Materialize the cache EAGERLY (one count) before the
-            # background writer starts.  Round-6 measurement: without this,
-            # the writer's action and the downstream stage's first action
-            # race over the same unmaterialized cache and compute its
-            # partitions TWICE concurrently — async e2e measured 33.6 s vs
-            # 25.4 s sync at sf0.1/local[32], i.e. the "overlap" cost more
-            # than the write barrier it hid.  With the cache materialized
-            # first, the background thread pays only parquet encode+IO (the
-            # true stage-boundary barrier being overlapped) and downstream
-            # compute starts from the cache.  The count also publishes the
-            # stage's row count (row_counts) with no extra job — downstream
-            # operators use it (e.g. connected_components edge_count_hint)
-            # without waiting for the manifest write.
-            self.row_counts[name] = cached.count()
-            self._cached[name] = cached
+        cached = fn().persist(StorageLevel.MEMORY_AND_DISK)
+        self._cached[name] = cached
+        # Materialize the cache EAGERLY (one count) before the background
+        # writer starts.  Round-6 measurement: without this, the writer's
+        # action and the downstream stage's first action race over the same
+        # unmaterialized cache and compute its partitions TWICE concurrently
+        # (33.6 s e2e vs 25.4 s with a synchronous write->read barrier, at
+        # sf0.1/local[32]).
+        # With the cache materialized first, the background thread pays only
+        # parquet encode+IO and downstream compute (and the validator) start
+        # from the cache.  The count also publishes the stage's row count
+        # with no extra job.
+        self.row_counts[name] = cached.count()
+        if validator is not None and _validation_enabled():
+            validator(cached)
 
-            def _bg() -> None:
-                try:
-                    tw = time.time()
-                    self._join_pending(inputs)
-                    if self._errors:
-                        return  # an upstream write failed; don't pile on
-                    self._wait_secs[name] = round(time.time() - tw, 3)
-                    # no repartition: downstream consumers read the CACHE,
-                    # not these files, so shuffling every stage's bytes just
-                    # to shape the file count is pure overhead here — encode
-                    # straight from the cached partitioning (the sync path
-                    # keeps the repartition because its re-READ needs one
-                    # split per file for downstream parallelism)
-                    self._write(name, cached, repartition=False)
-                    self._emit_manifest(name, cached, inputs, t0)
-                except BaseException as e:  # surfaced via _raise_pending_errors
-                    self._errors.append(e)
+        def _bg() -> None:
+            try:
+                tw = time.time()
+                self._join_pending(inputs)
+                if self._errors:
+                    return  # an upstream write failed; don't pile on
+                self._wait_secs[name] = round(time.time() - tw, 3)
+                self._write(name, cached)
+                self._emit_manifest(name, cached, inputs, t0)
+            except BaseException as e:  # surfaced via _raise_pending_errors
+                self._errors.append(e)
 
-            t = threading.Thread(target=_bg, daemon=True, name=f"ckpt-{name}")
-            self._pending[name] = t
-            t.start()
-            return cached
-
-        self._write(name, df)
-        stored = self.read(name)
-        if validator is not None:
-            validator(stored)
-        # A validated (sync) stage can follow async stages: its inputs'
-        # manifests must be FINAL before lineage is recorded, else the
-        # dependency hashes read as "external" and resume always recomputes.
-        self._join_pending(inputs)
-        self._raise_pending_errors()
-        self._emit_manifest(name, stored, inputs, t0)
-        return stored
+        t = threading.Thread(target=_bg, daemon=True, name=f"ckpt-{name}")
+        self._pending[name] = t
+        t.start()
+        return cached
 
     def _emit_manifest(
-        self, name: str, stored: DataFrame, inputs: list[str], t0: float
+        self, name: str, df: DataFrame, inputs: list[str], t0: float
     ) -> None:
         lineage = self._lineage_of(inputs)
         if self.iceberg_catalog:
-            n_rows = stored.count()
+            n_rows = self.row_counts[name]
             file_stats: list[tuple[str, int, int]] = []
         else:
             n_rows, file_stats = _parquet_footer_stats(self._table_path(name))
@@ -370,10 +324,10 @@ class StageRunner:
             "files": file_stats,
             "partitions": [],
             "data_hash": None,
-            "columns": stored.columns,
+            "columns": df.columns,
             "wall_sec": round(time.time() - t0, 3),
-            # async mode: stage walls overlap; this is the slice of wall_sec
-            # the background writer spent blocked on upstream writers
+            # stage walls overlap; this is the slice of wall_sec the
+            # background writer spent blocked on upstream writers
             "input_wait_sec": self._wait_secs.get(name, 0.0),
             "content_hash": _stable_hash(
                 {

@@ -182,49 +182,51 @@ def test_e2e_deterministic_same_seed(spark, tmp_ckpt):
     t.unpersist()
 
 
-def test_e2e_async_checkpoint_matches_sync(spark, tmp_ckpt, monkeypatch):
-    """Async stage writes (bench mode: EASYLINK_VALIDATE=0) must produce the
-    same clusters AND a complete, resumable checkpoint dir as the sync
-    path — flush() is the durability barrier."""
-    monkeypatch.setenv("EASYLINK_VALIDATE", "0")
+def test_e2e_validated_matches_unvalidated(spark, tmp_ckpt, monkeypatch):
+    """Validated stages (EASYLINK_VALIDATE=1) and unvalidated ones (bench
+    mode) take the same write path, so both must produce the same clusters
+    AND a complete, resumable checkpoint dir — flush() is the durability
+    barrier."""
     t = synth_transcripts(spark, n_entities=50, seed=11).drop("entity_id").cache()
-    c_async = run_dedup(spark, t, tmp_ckpt + "/async", DedupConfig())
-    rows_async = {tuple(r) for r in c_async.collect()}
+    monkeypatch.setenv("EASYLINK_VALIDATE", "1")
+    c_val = run_dedup(spark, t, tmp_ckpt + "/validated", DedupConfig())
+    rows_val = {tuple(r) for r in c_val.collect()}
 
-    monkeypatch.setenv("EASYLINK_ASYNC_CHECKPOINT", "0")
-    c_sync = run_dedup(spark, t, tmp_ckpt + "/sync", DedupConfig())
-    rows_sync = {tuple(r) for r in c_sync.collect()}
-    assert rows_async == rows_sync
+    monkeypatch.setenv("EASYLINK_VALIDATE", "0")
+    c_unval = run_dedup(spark, t, tmp_ckpt + "/unvalidated", DedupConfig())
+    rows_unval = {tuple(r) for r in c_unval.collect()}
+    assert rows_val == rows_unval
 
-    # async run left a complete stage set: every manifest present, row
+    # each run left a complete stage set: every manifest present, row
     # counts consistent with the stored tables
-    for name in ("transcripts", "records", "pairs", "links", "clusters"):
-        mp = Path(tmp_ckpt) / "async" / f"{name}._manifest.json"
-        assert mp.exists(), f"missing manifest for {name}"
-        m = json.loads(mp.read_text())
-        stored = spark.read.parquet(str(Path(tmp_ckpt) / "async" / name))
-        assert stored.count() == m["rows"], name
+    for run in ("validated", "unvalidated"):
+        for name in ("transcripts", "records", "pairs", "links", "clusters"):
+            mp = Path(tmp_ckpt) / run / f"{name}._manifest.json"
+            assert mp.exists(), f"missing manifest for {run}/{name}"
+            m = json.loads(mp.read_text())
+            stored = spark.read.parquet(str(Path(tmp_ckpt) / run / name))
+            assert stored.count() == m["rows"], (run, name)
 
-    # and the async checkpoint dir resumes without rewriting anything
-    monkeypatch.setenv("EASYLINK_ASYNC_CHECKPOINT", "1")
-    manifests = sorted((Path(tmp_ckpt) / "async").glob("*._manifest.json"))
+    # and the validated checkpoint dir resumes without rewriting anything
+    monkeypatch.setenv("EASYLINK_VALIDATE", "1")
+    manifests = sorted((Path(tmp_ckpt) / "validated").glob("*._manifest.json"))
     before = {m.name: m.stat().st_mtime_ns for m in manifests}
-    run_dedup(spark, t, tmp_ckpt + "/async", DedupConfig())
+    run_dedup(spark, t, tmp_ckpt + "/validated", DedupConfig())
     after = {m.name: m.stat().st_mtime_ns for m in manifests}
     assert before == after
     t.unpersist()
 
 
-def test_async_write_failure_surfaces(spark, tmp_ckpt, monkeypatch):
-    """Failures must never vanish.  Since round 6 the async path eagerly
-    materializes the stage cache (one count in the caller's frame) before
-    the background writer starts, so a failure in the stage PLAN raises
+def test_background_write_failure_surfaces(spark, tmp_ckpt, monkeypatch):
+    """Failures must never vanish.  Since round 6 every stage eagerly
+    materializes its cache (one count in the caller's frame) before the
+    background writer starts, so a failure in the stage PLAN raises
     directly at stage(); a failure in the background WRITE itself (disk
     full, permissions) still surfaces at flush()."""
     from easylink_spark.sources.checkpoint import StageRunner
 
     monkeypatch.setenv("EASYLINK_VALIDATE", "0")
-    runner = StageRunner(spark, tmp_ckpt + "/boom", async_write=True)
+    runner = StageRunner(spark, tmp_ckpt + "/boom")
     # ANSI mode: division by zero inside the stage plan fails at the eager
     # cache materialization, in the caller's frame
     df = spark.range(10).selectExpr("id", "id / (id - id) as kaboom")
@@ -233,7 +235,7 @@ def test_async_write_failure_surfaces(spark, tmp_ckpt, monkeypatch):
 
     # a write-side failure (stage plan fine, parquet write raises) must
     # still surface at the flush() durability barrier
-    runner2 = StageRunner(spark, tmp_ckpt + "/boom2", async_write=True)
+    runner2 = StageRunner(spark, tmp_ckpt + "/boom2")
 
     def _fail_write(*a, **k):
         raise OSError("disk full")
@@ -246,6 +248,26 @@ def test_async_write_failure_surfaces(spark, tmp_ckpt, monkeypatch):
 
 def _persistent_rdd_ids(spark) -> set:
     return set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
+
+
+def test_failed_validator_raises_and_leaves_nothing(spark, tmp_ckpt, monkeypatch):
+    """A validator runs on the stage cache in the caller's frame: a
+    violation raises at stage(), the background writer never starts, and
+    after flush() there is no table, no manifest and no leaked cache."""
+    monkeypatch.setenv("EASYLINK_VALIDATE", "1")
+    before = _persistent_rdd_ids(spark)
+    runner = StageRunner(spark, tmp_ckpt + "/invalid")
+
+    def reject(df):
+        raise K.ContractViolation("rejected by test validator")
+
+    with pytest.raises(K.ContractViolation, match="rejected by test validator"):
+        runner.stage("bad", lambda: spark.range(10), validator=reject)
+    runner.flush()
+    assert not (Path(tmp_ckpt) / "invalid" / "bad").exists()
+    assert not (Path(tmp_ckpt) / "invalid" / "bad._manifest.json").exists()
+    leaked = _persistent_rdd_ids(spark) - before
+    assert not leaked, f"failed stage leaked persistent RDDs: {leaked}"
 
 
 def test_stage_caches_released_at_flush(spark, tmp_ckpt, monkeypatch):
@@ -320,8 +342,7 @@ def test_iceberg_branch_with_fake_catalog(spark, tmp_ckpt, monkeypatch):
     monkeypatch.setattr(concrete_df_cls, "writeTo", fake_writeTo)
     monkeypatch.setattr(spark, "table", fake_table)
 
-    runner = StageRunner(spark, tmp_ckpt + "/ice",
-                         iceberg_catalog="demo.ckpt", async_write=False)
+    runner = StageRunner(spark, tmp_ckpt + "/ice", iceberg_catalog="demo.ckpt")
     src = spark.range(100).select(
         F.col("id"), (F.col("id") % 7).alias("g"))
     ran = []
@@ -332,19 +353,19 @@ def test_iceberg_branch_with_fake_catalog(spark, tmp_ckpt, monkeypatch):
 
     out = runner.stage("agg", stage_fn)
     assert out.count() == 100
+    runner.flush()
     assert calls["writeTo"] == ["demo.ckpt.agg"]
     assert calls["mode"] == ["createOrReplace"]
-    assert "demo.ckpt.agg" in calls["table"]
     # count-based manifest: rows recorded, no per-file footer stats
     m = json.loads((Path(tmp_ckpt) / "ice" / "agg._manifest.json").read_text())
     assert m["rows"] == 100
     assert m["files"] == []
 
     # resume: matching config + lineage returns the catalog table, no rerun
-    runner2 = StageRunner(spark, tmp_ckpt + "/ice",
-                          iceberg_catalog="demo.ckpt", async_write=False)
+    runner2 = StageRunner(spark, tmp_ckpt + "/ice", iceberg_catalog="demo.ckpt")
     out2 = runner2.stage("agg", stage_fn)
     assert len(ran) == 1
+    assert "demo.ckpt.agg" in calls["table"]
     assert out2.count() == 100
 
     # overwrite semantics: force=True replaces the table content atomically
@@ -352,4 +373,5 @@ def test_iceberg_branch_with_fake_catalog(spark, tmp_ckpt, monkeypatch):
     src2 = spark.range(50).select(F.col("id"), (F.col("id") % 7).alias("g"))
     out3 = runner2.stage("agg", lambda: src2, force=True)
     assert out3.count() == 50
+    runner2.flush()
     assert calls["mode"].count("createOrReplace") == 2
