@@ -1,19 +1,24 @@
 """Graph / clustering operators (SURVEY.md §2.9 — the heart of the engine).
 
-- ``connected_components``: iterative **large-star / small-star** (Kiveris et
-  al., "Connected Components in MapReduce and Beyond", SoCC'14) over a
-  DataFrame edge list.  O(log n) rounds; each round is two groupBy-join
-  passes; lineage is truncated every round with ``localCheckpoint``.
-  The reference reaches CC through splink's duckdb label propagation
-  (steps/splink/splink_links_to_clusters.py:37-51) and networkx
-  (steps/cascading/one_to_many_links_to_clusters.py:84-100) — both
-  single-node; this kernel is the distributed replacement.  Frontiers at
-  or under ``SMALL_GRAPH_EDGES`` skip the rounds: one Arrow collect and a
-  numpy union-find on the driver, like the reference's single node.
+- ``connected_components``: the one connected-components primitive every
+  clustering operator calls.  Iterative **large-star / small-star**
+  (Kiveris et al., "Connected Components in MapReduce and Beyond",
+  SoCC'14) over a DataFrame edge list: O(log n) rounds, each two
+  groupBy-join passes, lineage truncated every round with
+  ``localCheckpoint``.  The reference reaches CC through splink's duckdb
+  label propagation (steps/splink/splink_links_to_clusters.py:37-51) and
+  networkx (steps/cascading/one_to_many_links_to_clusters.py:84-100) —
+  both single-node; this kernel is the distributed replacement.  Inputs
+  at or under ``SMALL_GRAPH_EDGES`` rows skip the rounds: one Arrow
+  collect and a numpy union-find on the driver, like the reference's
+  single node.  A NULL-``dst`` row declares its ``src`` as a node
+  (a singleton unless an edge reaches it).
 - ``links_to_clusters``: G1/G2 — threshold links, CC, stable cluster ids.
-  Records NOT involved in an accepted link are excluded (the reference's
-  explicit semantic, one_to_many_links_to_clusters.py:80-83 comment).
-  ``known=`` folds ``update_clusters`` into the same union-find.
+  Every linked record gets a cluster (singletons too) unless
+  ``emit_singletons=False``, which excludes records NOT involved in an
+  accepted link (the reference's explicit semantic,
+  one_to_many_links_to_clusters.py:80-83 comment).  ``known=`` folds
+  ``update_clusters`` into the same connected-components call.
 - ``clusters_to_links``: J2 — within-cluster pair expansion at P=1.
 - ``update_clusters``: G3 — merge known+new cluster assignments through a
   bipartite record<->cluster-marker graph (cheaper than the reference's
@@ -56,30 +61,22 @@ MARKER = "\x7f"
 # Frontier size (edges) at or under which connected components finishes
 # with the driver-side union-find instead of distributed star rounds.  The
 # driver collects the whole frontier, so this caps driver memory: at most
-# about 3x this many rows of two string keys (links_to_clusters' fused
-# input), plus the numpy kernel's arrays.  A cluster driver needs that
-# headroom.
+# about 3x this many rows of two string keys (links_to_clusters' edges
+# plus endpoint declarations), plus the numpy kernel's arrays.  A cluster
+# driver needs that headroom.
 SMALL_GRAPH_EDGES = 500_000
 
 
 # ---------------------------------------------------------------------------
 # Connected components: large-star / small-star fixpoint (G1)
 # ---------------------------------------------------------------------------
-def _large_star(edges: DataFrame, dedup: bool = True) -> DataFrame:
-    """For each node u: emit (v, min(N(u) ∪ {u})) for every neighbor v > u.
-
-    ``dedup=False`` skips the trailing distinct (one exchange + its
-    planning).  Semantically safe always — ``_small_star``'s groupBy-min is
-    duplicate-insensitive and its own trailing distinct restores the set —
-    but duplicates inflate the intermediate row count by up to the node
-    degree, so callers only skip it on SMALL frontiers where the inflation
-    is bounded by the frontier size itself (the round-6 low-overhead round
-    mode); large dense components keep the intermediate dedup."""
+def _large_star(edges: DataFrame) -> DataFrame:
+    """For each node u: emit (v, min(N(u) ∪ {u})) for every neighbor v > u."""
     bi = edges.select(SRC, DST).union(
         edges.select(F.col(DST).alias(SRC), F.col(SRC).alias(DST))
     )
     nbr_min = bi.groupBy(SRC).agg(F.min(DST).alias("_m"))
-    out = (
+    return (
         bi.filter(F.col(DST) > F.col(SRC))
         .join(nbr_min, SRC)
         .select(
@@ -87,8 +84,8 @@ def _large_star(edges: DataFrame, dedup: bool = True) -> DataFrame:
             F.least(F.col("_m"), F.col(SRC)).alias(DST),
         )
         .filter(F.col(SRC) != F.col(DST))
+        .distinct()
     )
-    return out.distinct() if dedup else out
 
 
 def _small_star(edges: DataFrame) -> DataFrame:
@@ -120,11 +117,10 @@ def _union_find_assignments(edges: DataFrame) -> DataFrame:
     This call runs that job; the returned DataFrame only rescans the
     driver's result.
 
-    Rows with a NULL ``dst`` are ISOLATED-NODE DECLARATIONS: the ``src``
-    node joins the universe (and becomes its own singleton component unless
-    some real edge connects it).  Callers fuse singleton emission into this
-    one pass instead of paying a distinct + anti-join + union of extra
-    Spark jobs after the fact (links_to_clusters' small-graph path).
+    Rows with a NULL ``dst`` are node declarations: the ``src`` node joins
+    the universe (and becomes its own singleton component unless some real
+    edge connects it) — the meaning ``connected_components`` gives them on
+    every path.
 
     Only called on inputs bounded by ``SMALL_GRAPH_EDGES`` (at most 3x that
     many rows, see links_to_clusters), where log-n distributed rounds are
@@ -146,9 +142,9 @@ def _union_find_assignments(edges: DataFrame) -> DataFrame:
     d = table.column(DST).to_pandas()
     # sort=True: codes are STRING RANKS, so the min-code fixpoint below
     # is directly the min-string component representative.  NULL dst
-    # (isolated-node declaration) factorizes to code -1 and is excluded
-    # from the unique universe; the edge mask below drops those rows
-    # from propagation while their src stays a (singleton) node.
+    # (node declaration) factorizes to code -1 and is excluded from the
+    # unique universe; the edge mask below drops those rows from
+    # propagation while their src stays a (singleton) node.
     code_of, uniq = pd.factorize(pd.concat([s, d], ignore_index=True),
                                  sort=True)
     n = len(uniq)
@@ -187,95 +183,68 @@ def _union_find_assignments(edges: DataFrame) -> DataFrame:
 
 def connected_components(
     edges: DataFrame,
-    src: str = SRC,
-    dst: str = DST,
     max_iter: int = 50,
     small_graph_edges: int | None = None,
     stats: dict | None = None,
     edge_count_hint: int | None = None,
 ) -> DataFrame:
-    """Edge list (any orientation, string node ids) -> (node, component)
-    where component = min node id in the component (total order = string
-    order).  Nodes with no edges do not appear (callers decide singleton
-    semantics, G4).
+    """Rows (``src``, ``dst``: string node ids, any orientation) ->
+    (node, component) where component = min node id in the component
+    (total order = string order).
 
-    Hybrid kernel: iterate large-star/small-star (Kiveris et al.) only
-    while the frontier exceeds ``small_graph_edges`` (``None`` means
-    ``SMALL_GRAPH_EDGES``); below that, finish with
-    the driver-side union-find (``_union_find_assignments``: one collect
-    job, result in one partition).
-    The star rounds preserve connectivity and never drop a non-root node,
-    so union-find over a partially-contracted frontier yields the same
-    (node -> component-min) map as running the rounds to fixpoint.  Set
-    ``small_graph_edges=0`` to force pure star rounds (property tests
-    compare the two paths).
+    A row with a NULL ``dst`` DECLARES its ``src`` as a node: it becomes
+    its own singleton component unless an edge reaches it.  Nodes that are
+    neither on an edge nor declared do not appear (callers decide
+    singleton semantics, G4); self-loop rows are neither edges nor
+    declarations.
 
-    ``edge_count_hint`` is an UPPER BOUND on the edge count the caller
-    already knows without a job (e.g. the links stage's checkpoint manifest
-    row count — parquet footer metadata, zero scans).  When the bound is
-    at or under ``small_graph_edges`` the count-and-checksum probe job and
-    the pre-dedup of the edge set are skipped entirely and the frontier
-    goes straight to the union-find finish (duplicates and orientation do
-    not change a union-find's result, and the bound caps the driver's
-    collect the same way the measured count did).  At bench scale that probe
-    job was ~1.5-2 s of per-run fixed cost that no core count divides; at
-    100 TB the hint is simply absent (no caller knows a small bound) and
-    the distributed star rounds run as before.
+    One size bound picks the path: ``edge_count_hint`` — an UPPER BOUND on
+    the rows the caller already knows without a job (e.g. the links
+    stage's checkpoint manifest row count) — or else one ``count()`` of the
+    rows.  At or under ``small_graph_edges`` (``None`` means
+    ``SMALL_GRAPH_EDGES``; ``0`` forces star rounds, which property tests
+    compare against) the rows go straight to the driver-side union-find
+    (``_union_find_assignments``: one collect job, result in one
+    partition); duplicates and orientation do not change its result, so
+    an upper bound is all the routing needs.  Above it, large-star /
+    small-star rounds (Kiveris et al.) run while the frontier exceeds
+    ``small_graph_edges``, then the union-find finishes what is left.  The
+    rounds preserve connectivity and never drop a non-root node, so that
+    gives the same (node -> component-min) map as running them to
+    fixpoint.  Declared nodes that no edge reached are appended by one
+    anti-join.
 
     Fixpoint detection: (edge count, xor-style hash checksum) stable across
     a large-star+small-star round.  Every round the result is
     localCheckpoint-ed to truncate lineage (SURVEY §4.2.2); on a real
     cluster with a checkpoint dir configured, ``DataFrame.checkpoint`` is
-    the durable alternative.
+    the durable alternative.  The rounds leave partitioning to the
+    session's settings (AQE coalesces small shuffles); they write no conf.
     """
     if small_graph_edges is None:
         small_graph_edges = SMALL_GRAPH_EDGES
-    cleaned = (
-        edges.select(F.col(src).alias(SRC), F.col(dst).alias(DST))
-        .filter(F.col(SRC).isNotNull() & F.col(DST).isNotNull())
-        .filter(F.col(SRC) != F.col(DST))
+    rows = edges.select(SRC, DST).filter(
+        F.col(SRC).isNotNull()
+        & (F.col(DST).isNull() | (F.col(SRC) != F.col(DST)))
     )
-    if (
-        edge_count_hint is not None
-        and 0 < small_graph_edges
-        and edge_count_hint <= small_graph_edges
-    ):
-        if stats is not None:
-            stats.update({
-                "rounds": 0,
-                "initial_edges": None,  # never counted — that's the point
-                "edge_count_hint": edge_count_hint,
-                "final_edges": None,
-                "finish": "union_find",
-            })
-        return _union_find_assignments(cleaned)
-    # Round-6: the no-hint probe no longer pre-deduplicates.  Routing to
-    # the union-find finish needs only an UPPER BOUND on the edge count —
-    # duplicates and orientation do not change a union-find's result (the
-    # edge_count_hint argument) — and a plain count() is one narrow-scan
-    # job, where the former distinct().localCheckpoint() probe eagerly
-    # materialized a full shuffle (under AQE, localCheckpoint plans and
-    # runs every query stage immediately even with eager=False): measured
-    # 4.8 s -> ~1.2 s for a 100k-edge frontier at local[32].  A large graph
-    # pays one extra narrow pass before the distinct below — a few percent
-    # of a single star round's 4-5 shuffles.
-    if 0 < small_graph_edges and edge_count_hint is None:
-        # a present-but-large hint is authoritative: don't pay a count job
-        # to second-guess an upper bound the caller already knows
-        n_edges_raw = cleaned.count()
-        if n_edges_raw <= small_graph_edges:
+    if 0 < small_graph_edges:
+        # a present hint is authoritative: no count job to second-guess it
+        bound = rows.count() if edge_count_hint is None else edge_count_hint
+        if bound <= small_graph_edges:
             if stats is not None:
                 stats.update({
                     "rounds": 0,
-                    # pre-dedup count: an upper bound, not the distinct size
-                    "initial_edges": n_edges_raw,
+                    # an upper bound (hint, or the pre-dedup row count),
+                    # not the distinct edge count
+                    "initial_edges": bound,
                     "edge_count_hint": edge_count_hint,
                     "final_edges": None,
                     "finish": "union_find",
                 })
-            return _union_find_assignments(cleaned)
+            return _union_find_assignments(rows)
     cur = (
-        cleaned.distinct()
+        rows.filter(F.col(DST).isNotNull())
+        .distinct()
         # lazy plan-side; under AQE the checkpoint still materializes at
         # the signature() action below — one job either way
         .localCheckpoint(eager=False)
@@ -293,57 +262,20 @@ def connected_components(
     initial_edges = prev_sig[0]
     rounds = 0
     at_fixpoint = False
-    # Round-6, scale-adaptive round planning (guide §1.2 step 1, §2.4):
-    # each star round is 4-5 Exchanges, and with AQE every exchange is a
-    # separately materialized query stage with a driver re-planning barrier
-    # — for a SMALL frontier the round wall is almost entirely that fixed
-    # driver latency (measured ~1.6 s/round for a 5k-edge frontier at
-    # local[32]).  The frontier size is known exactly from the signature,
-    # so small rounds are planned with shuffle.partitions derived from the
-    # edge count and AQE off; large frontiers keep AQE (runtime coalescing
-    # + skew-join splitting matter there, and per-stage latency amortizes).
-    # Conf mutation is safe here: the round loop is driver-sequential, and
-    # the session confs are restored in the finally below.
-    conf = edges.sparkSession.conf
-    _SMALL_ROUND_EDGES = 4_000_000  # ~a few hundred MB of string pairs
-    _ROUND_EDGES_PER_PARTITION = 250_000
-    saved_conf = {
-        k: conf.get(k)
-        for k in ("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
-    }
-
-    def _plan_round(n_edges: int) -> None:
-        if n_edges <= _SMALL_ROUND_EDGES:
-            conf.set(
-                "spark.sql.shuffle.partitions",
-                str(max(1, n_edges // _ROUND_EDGES_PER_PARTITION)),
-            )
-            conf.set("spark.sql.adaptive.enabled", "false")
-        else:
-            for k, v in saved_conf.items():
-                conf.set(k, v)
-
-    try:
-        for _ in range(max_iter):
-            if prev_sig[0] <= small_graph_edges:
-                break
-            _plan_round(prev_sig[0])
-            small_round = prev_sig[0] <= _SMALL_ROUND_EDGES
-            cur = _small_star(_large_star(cur, dedup=not small_round))
-            cur = cur.localCheckpoint(eager=False)
-            sig = signature(cur)
-            rounds += 1
-            if sig == prev_sig:
-                at_fixpoint = True
-                break
-            prev_sig = sig
-        else:
-            raise RuntimeError(
-                f"connected_components: no fixpoint in {max_iter} rounds"
-            )
-    finally:
-        for k, v in saved_conf.items():
-            conf.set(k, v)
+    for _ in range(max_iter):
+        if prev_sig[0] <= small_graph_edges:
+            break
+        cur = _small_star(_large_star(cur)).localCheckpoint(eager=False)
+        sig = signature(cur)
+        rounds += 1
+        if sig == prev_sig:
+            at_fixpoint = True
+            break
+        prev_sig = sig
+    else:
+        raise RuntimeError(
+            f"connected_components: no fixpoint in {max_iter} rounds"
+        )
 
     if stats is not None:
         stats.update({
@@ -354,11 +286,33 @@ def connected_components(
             else "union_find",
         })
     if not at_fixpoint and prev_sig[0] > 0:
-        return _union_find_assignments(cur)
-    # At the fixpoint the edge set is a star forest: (node -> component min).
-    members = cur.select(F.col(SRC).alias("node"), F.col(DST).alias("component"))
-    roots = cur.select(F.col(DST).alias("node"), F.col(DST).alias("component")).distinct()
-    return members.union(roots).distinct()
+        assign = _union_find_assignments(cur)
+    else:
+        # At the fixpoint the edge set is a star forest: (node -> min).
+        members = cur.select(F.col(SRC).alias("node"),
+                             F.col(DST).alias("component"))
+        roots = cur.select(F.col(DST).alias("node"),
+                           F.col(DST).alias("component"))
+        assign = members.union(roots).distinct()
+    declared = rows.filter(F.col(DST).isNull()).select(
+        F.col(SRC).alias("node")
+    ).distinct()
+    singles = declared.join(assign, "node", "left_anti").select(
+        "node", F.col("node").alias("component")
+    )
+    return assign.union(singles)
+
+
+def _clusters(assign: DataFrame, validate: bool = True) -> DataFrame:
+    """(node, component) -> clusters contract: cluster-marker nodes
+    dropped, the record key split back into dataset and id."""
+    ds, rid = split_record_key("node")
+    out = assign.filter(~F.col("node").startswith(MARKER)).select(
+        ds.alias(INPUT_RECORD_DATASET),
+        rid.alias(INPUT_RECORD_ID),
+        F.col("component").alias(CLUSTER_ID),
+    )
+    return validate_clusters(out) if validate else out
 
 
 # ---------------------------------------------------------------------------
@@ -387,8 +341,9 @@ def links_to_clusters(
     ``known`` (clusters contract) merges the result into existing cluster
     assignments: the output equals
     ``update_clusters(known, links_to_clusters(links, threshold))`` row for
-    row, but on small graphs it is ONE driver-side union-find instead of
-    two (the streaming merge's per-batch path).
+    row, from one connected-components call over the thresholded edges,
+    the endpoint declarations and ``known``'s record->marker edges (the
+    streaming merge's per-batch path).
 
     ``edge_count_hint`` is an upper bound on the rows of ``links`` plus the
     rows of ``known``, known to the caller without a job (e.g. parquet
@@ -403,59 +358,26 @@ def links_to_clusters(
         record_key(f"`{RIGHT_DATASET}`", f"`{RIGHT_ID}`").alias(DST),
         F.col(PROBABILITY).alias("_p"),
     )
-    edges = keyed.filter(F.col("_p") >= F.lit(threshold)).select(SRC, DST)
+    rows = keyed.filter(F.col("_p") >= F.lit(threshold)).select(SRC, DST)
+    if emit_singletons:
+        # every endpoint, thresholded or not, is a node (NULL dst)
+        null_dst = F.lit(None).cast("string").alias(DST)
+        rows = rows.union(keyed.select(F.col(SRC), null_dst)).union(
+            keyed.select(F.col(DST).alias(SRC), null_dst)
+        )
+    if known is not None:
+        # update_clusters' record->marker graph without its "new"
+        # markers: the links' own edges already connect what those would
+        rows = rows.union(_cluster_marker_edges(known, "known"))
     # Without a hint, count the rows of ``links`` (and ``known``), not the
-    # thresholded edges: the fused union-find below also declares both
-    # endpoints of every link, including the sub-threshold ones, so only the
-    # link count bounds its input.  One narrow scan job either way.
+    # thresholded edges: the declarations make every link a row, so only
+    # the link count bounds the union-find's input.  One narrow scan job.
     if edge_count_hint is None:
         edge_count_hint = links.count() + (
             known.count() if known is not None else 0
         )
-    fused = edge_count_hint <= SMALL_GRAPH_EDGES and emit_singletons
-    if fused:
-        # Small-graph fast path with singletons FUSED into the driver-side
-        # union-find: every node of ``keyed`` (thresholded or not) rides
-        # along as an isolated-node declaration (NULL dst), so the kernel
-        # emits the complete assignment directly — no count-probe job and
-        # no distinct + anti-join + union jobs after the fact.  Semantics
-        # identical to the general path below — the singleton property
-        # tests compare them.
-        null_dst = F.lit(None).cast("string").alias(DST)
-        declared = keyed.select(F.col(SRC), null_dst).union(
-            keyed.select(F.col(DST).alias(SRC), null_dst)
-        )
-        rows = edges.union(declared)
-        if known is not None:
-            # update_clusters' record->marker graph without its "new"
-            # markers: the links' own edges already connect what those would
-            rows = rows.union(_cluster_marker_edges(known, "known"))
-        assign = _union_find_assignments(rows)
-        if known is not None:
-            assign = assign.filter(~F.col("node").startswith(MARKER))
-    else:
-        assign = connected_components(edges, edge_count_hint=edge_count_hint)
-        if emit_singletons:
-            nodes = (
-                keyed.select(F.col(SRC).alias("node"))
-                .union(keyed.select(F.col(DST).alias("node")))
-                .distinct()
-            )
-            singles = nodes.join(assign, "node", "left_anti").select(
-                "node", F.col("node").alias("component")
-            )
-            assign = assign.union(singles)
-    ds, rid = split_record_key("node")
-    out = assign.select(
-        ds.alias(INPUT_RECORD_DATASET),
-        rid.alias(INPUT_RECORD_ID),
-        F.col("component").alias(CLUSTER_ID),
-    )
-    if known is not None and not fused:
-        return update_clusters(known, out)
-    if validate:
-        return validate_clusters(out)
-    return out
+    assign = connected_components(rows, edge_count_hint=edge_count_hint)
+    return _clusters(assign, validate)
 
 
 # ---------------------------------------------------------------------------
@@ -494,8 +416,8 @@ def clusters_to_links(clusters: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 def _cluster_marker_edges(clusters: DataFrame, prefix: str) -> DataFrame:
     """One edge per clustered record: record key -> its cluster's marker
-    node.  A NULL Cluster ID gives no edge (connected_components drops NULL
-    endpoints; the fused union-find would read one as a declaration)."""
+    node.  A NULL Cluster ID gives no edge (connected_components would
+    read a NULL dst as a node declaration)."""
     return clusters.select(
         record_key(f"`{INPUT_RECORD_DATASET}`", f"`{INPUT_RECORD_ID}`").alias(SRC),
         F.concat(F.lit(MARKER + prefix + "__"),
@@ -517,15 +439,7 @@ def update_clusters(known_clusters: DataFrame, new_clusters: DataFrame) -> DataF
     edges = _cluster_marker_edges(known_clusters, "known").union(
         _cluster_marker_edges(new_clusters, "new")
     )
-    assign = connected_components(edges)
-    records_only = assign.filter(~F.col("node").startswith(MARKER))
-    ds, rid = split_record_key("node")
-    out = records_only.select(
-        ds.alias(INPUT_RECORD_DATASET),
-        rid.alias(INPUT_RECORD_ID),
-        F.col("component").alias(CLUSTER_ID),
-    )
-    return validate_clusters(out)
+    return _clusters(connected_components(edges))
 
 
 # ---------------------------------------------------------------------------
@@ -602,15 +516,9 @@ def one_to_many_links_to_clusters(
     else:
         raise ValueError(f"Unknown break_ties_method {break_ties_method}")
 
-    assign = connected_components(best.select(F.col("_lk").alias(SRC),
-                                              F.col("_rk").alias(DST)))
-    ds, rid = split_record_key("node")
-    out = assign.select(
-        ds.alias(INPUT_RECORD_DATASET),
-        rid.alias(INPUT_RECORD_ID),
-        F.col("component").alias(CLUSTER_ID),
-    )
-    return validate_clusters(out)
+    return _clusters(connected_components(
+        best.select(F.col("_lk").alias(SRC), F.col("_rk").alias(DST))
+    ))
 
 
 # ---------------------------------------------------------------------------

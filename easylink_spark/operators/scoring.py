@@ -331,8 +331,10 @@ def score_pairs(
     both — at web scale most candidate pairs die in the first tier.
 
     ``validate=False`` skips the in-plan contract check — callers that
-    checkpoint the result validate the *stored* table instead (each
-    validator action would otherwise recompute the whole scoring plan).
+    checkpoint the result pass ``validate_links`` as the stage validator,
+    which checks the stage's cached table once it is materialized (an
+    in-plan validator action would otherwise recompute the whole scoring
+    plan).
     """
     comparisons = comparisons or default_transcript_comparisons()
     if any(c.tf_adjustment for c in comparisons):

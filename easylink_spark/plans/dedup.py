@@ -10,7 +10,9 @@ block -> compare -> score -> cluster over a transcripts table
   scoring    : pairs ⋈ records ×2 -> gammas (JW pandas UDF + built-in
                Jaccard / turn-alignment) -> Fellegi-Sunter probability ->
                threshold (scoring.py)
-  clustering : large-star/small-star connected components -> stable
+  clustering : thresholded links + endpoint declarations -> one
+               connected-components call (driver union-find under
+               SMALL_GRAPH_EDGES, large-star/small-star above) -> stable
                cluster ids (clustering.py)
 
 Every stage lands in a checkpoint table with a lineage manifest
@@ -172,10 +174,10 @@ def run_dedup(
     def build_clusters() -> DataFrame:
         # The links stage row count (known with zero extra jobs: from the
         # stage's eager cache materialization, or the resumed manifest)
-        # bounds the edge count from above; when it is already under the
-        # small-graph threshold, connected_components skips its
-        # count-and-checksum probe job and goes straight to the union-find
-        # finish.
+        # is the size bound links_to_clusters needs, so it runs no count
+        # job; under the small-graph threshold its one
+        # connected_components call goes straight to the driver
+        # union-find.
         return G.links_to_clusters(
             links,
             cfg.threshold,

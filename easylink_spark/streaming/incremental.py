@@ -122,8 +122,8 @@ def merge_batch(
         known_rows, _ = _parquet_footer_stats(Path(state_path))
     else:
         known, known_rows = None, 0
-    # One fused driver-side union-find over the batch's links and the known
-    # state; its row bound is footer metadata plus one batch count, so no
+    # One connected-components call over the batch's links and the known
+    # state (a driver-side union-find on small graphs); its row bound is footer metadata plus one batch count, so no
     # probe job re-reads the state.  Called through the module so
     # instrumentation that wraps G.links_to_clusters sees it.
     merged = G.links_to_clusters(

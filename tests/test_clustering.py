@@ -113,6 +113,45 @@ def test_cc_hybrid_paths_identical(spark):
     assert {(r["node"], r["component"]) for r in assign.collect()} == results[0]
     assert stats["finish"] == "union_find" and stats["rounds"] == 0
 
+    # NULL-dst rows declare nodes: some already on edges (no change), some
+    # isolated (each its own singleton) — on every path
+    on_edges = sorted({a for a, _ in edges})[::7]
+    isolated = [f"iso_{i:02d}" for i in range(5)]
+    declared = spark.createDataFrame(
+        edges + [(x, None) for x in on_edges + isolated + isolated[:2]],
+        "src string, dst string",
+    )
+    maps = []
+    for thr in (0, len(edges) // 3, 10**9):
+        assign = G.connected_components(declared, small_graph_edges=thr)
+        maps.append({r["node"]: r["component"] for r in assign.collect()})
+    assert maps[0] == maps[1] == maps[2]
+    assert maps[0] == {**dict(results[0]), **{x: x for x in isolated}}
+
+
+def test_star_rounds_leave_session_conf_alone(spark, monkeypatch):
+    """Star rounds plan with the session's settings and write no conf: a
+    conf write would race the stage writers planning on other threads."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    keys = ("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
+    before = {k: spark.conf.get(k) for k in keys}
+    sets = []
+    real_set = RuntimeConfig.set
+
+    def recording_set(self, key, value):
+        sets.append((key, value))
+        return real_set(self, key, value)
+
+    monkeypatch.setattr(RuntimeConfig, "set", recording_set)
+    edges = [(f"p{i:03d}", f"p{i + 1:03d}") for i in range(40)]
+    df = spark.createDataFrame(edges, "src string, dst string")
+    stats: dict = {}
+    assign = G.connected_components(df, small_graph_edges=0, stats=stats)
+    assert assign.count() == 41 and stats["rounds"] > 0
+    assert sets == []
+    assert {k: spark.conf.get(k) for k in keys} == before
+
 
 def test_cc_star_rounds_are_logarithmic(spark):
     """Large-star/small-star is provably O(log n) rounds; lock in the round
@@ -182,9 +221,9 @@ def test_links_to_clusters_threshold_and_exclusion(spark):
 
 
 def test_links_to_clusters_hint_path_identical(spark):
-    """The edge_count_hint fast path (fused singleton union-find, no probe
-    job) must produce exactly the general path's clusters — singletons from
-    sub-threshold links included."""
+    """A call with ``edge_count_hint`` (no count job) must produce exactly
+    the clusters of a call without one — singletons from sub-threshold
+    links included."""
     random.seed(11)
     rows = []
     for i in range(200):
@@ -239,8 +278,9 @@ def _rows(clusters) -> list[tuple]:
 
 def test_links_to_clusters_known_equals_update_clusters(spark, monkeypatch):
     """``links_to_clusters(links, t, known=K)`` returns exactly the rows of
-    ``update_clusters(K, links_to_clusters(links, t))`` — on the fused
-    small-graph path and on the large-graph fallback."""
+    ``update_clusters(K, links_to_clusters(links, t))`` — on the driver
+    union-find path and on the star-rounds path, with and without
+    singletons."""
     monkeypatch.setenv("EASYLINK_VALIDATE", "0")  # rows are compared instead
     links = _links(
         spark,
@@ -277,6 +317,12 @@ def test_links_to_clusters_known_equals_update_clusters(spark, monkeypatch):
     assert _rows(G.links_to_clusters(links, t, known=known)) == expected
     hinted = G.links_to_clusters(links, t, known=known, edge_count_hint=13)
     assert _rows(hinted) == expected
+    expected_linked = _rows(G.update_clusters(
+        known, G.links_to_clusters(links, t, emit_singletons=False)
+    ))
+    assert _rows(G.links_to_clusters(
+        links, t, emit_singletons=False, known=known
+    )) == expected_linked
 
     # random graphs over two datasets, known clusters overlapping the links
     random.seed(7)
@@ -297,9 +343,12 @@ def test_links_to_clusters_known_equals_update_clusters(spark, monkeypatch):
         )
 
     # a bound above SMALL_GRAPH_EDGES (5 links + 8 known rows) takes the
-    # distributed fallback
+    # star rounds
     monkeypatch.setattr(G, "SMALL_GRAPH_EDGES", 12)
     assert _rows(G.links_to_clusters(links, t, known=known)) == expected
+    assert _rows(G.links_to_clusters(
+        links, t, emit_singletons=False, known=known
+    )) == expected_linked
 
 
 def test_union_find_task_rows_stay_bounded(spark, monkeypatch):
