@@ -98,7 +98,11 @@ def provision_corpus(spark) -> tuple[str, float, bool]:
         return fixed, 0.0, False
     out = fixed or tempfile.mkdtemp(prefix="elspark_corpus_")
     t0 = time.time()
-    t = synth_transcripts(spark, n_entities=N_ENTITIES, seed=SEED).drop("entity_id")
+    # one generator task per shuffle partition (4 x cores here), the corpus
+    # layout this benchmark has always measured
+    t = synth_transcripts(spark, n_entities=N_ENTITIES, seed=SEED,
+                          partitions=spark.sparkContext.defaultParallelism
+                          ).drop("entity_id")
     t.write.mode("overwrite").parquet(out)
     return out, round(time.time() - t0, 2), fixed is None
 
@@ -127,9 +131,9 @@ def warmup_dedup(spark) -> float:
     corpus = tempfile.mkdtemp(prefix="elspark_warm_corpus_")
     ckpt = tempfile.mkdtemp(prefix="elspark_warm_ckpt_")
     try:
-        synth_transcripts(spark, n_entities=n, seed=7).drop(
-            "entity_id"
-        ).write.mode("overwrite").parquet(corpus)
+        synth_transcripts(spark, n_entities=n, seed=7,
+                          partitions=spark.sparkContext.defaultParallelism
+                          ).drop("entity_id").write.mode("overwrite").parquet(corpus)
         run_dedup(spark, corpus, ckpt, DedupConfig()).count()
     finally:
         shutil.rmtree(corpus, ignore_errors=True)

@@ -259,6 +259,7 @@ def minhash_signatures(
     text_col: str,
     num_hashes: int = 32,
     shingle_k: int = 3,
+    partitions: int | None = None,
 ) -> DataFrame:
     """(_ds, _id, _rk, h0..h{H-1}) minhash signature table.
 
@@ -267,9 +268,10 @@ def minhash_signatures(
     expression with map-side partial aggregation, instead of one giant
     H-way nested-transform expression (which Catalyst compiles slowly and
     which AQE happily schedules on a single task for byte-small inputs).
-    The explicit repartition spreads the CPU-heavy hashing across the
-    cluster even when the input is few bytes — minhash cost scales with
-    rows x shingles, not bytes, so file-size-based partitioning
+    The explicit repartition to ``partitions`` tasks (``None``: the default
+    parallelism) spreads the CPU-heavy hashing across the cluster even
+    when the input is few bytes — minhash cost scales with rows x
+    shingles, not bytes, so file-size-based partitioning
     under-parallelizes it.
 
     The exploded rows carry only a COMPACT 8-byte record key (xxhash64 of
@@ -281,17 +283,13 @@ def minhash_signatures(
     downstream scoring verifies every candidate pair, so a collision can
     add a spurious candidate, never a wrong final link.
     """
-    # multiple task waves (shuffle.partitions, not defaultParallelism) so
-    # the CPU-heavy hashing stage doesn't end on its slowest single task
-    sc_parallelism = int(
-        records.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    )
+    par = partitions or records.sparkSession.sparkContext.defaultParallelism
     keyed = records.select(
         F.col(f"`{INPUT_RECORD_DATASET}`").alias("_ds"),
         F.col(f"`{INPUT_RECORD_ID}`").alias("_id"),
         record_key(f"`{INPUT_RECORD_DATASET}`", f"`{INPUT_RECORD_ID}`").alias("_rk"),
         F.col(f"`{text_col}`").alias("_txt"),
-    ).withColumn("_k8", F.xxhash64("_rk")).repartition(sc_parallelism, "_k8")
+    ).withColumn("_k8", F.xxhash64("_rk")).repartition(par, "_k8")
     exploded = keyed.select(
         "_k8", F.explode(_shingles(F.col("_txt"), shingle_k)).alias("_sh")
     )
@@ -313,6 +311,7 @@ def block_minhash_lsh(
     shingle_k: int = 3,
     hot_bucket_cap: int = 2000,
     link_only: bool = False,
+    partitions: int | None = None,
 ) -> DataFrame:
     """Candidate pairs whose minhash signatures collide in >=1 LSH band.
 
@@ -326,10 +325,14 @@ def block_minhash_lsh(
     ``link_only=True`` restricts to cross-dataset pairs (splink
     link_type="link_only") via the same join-side dataset split as
     ``block_on_key``.
+
+    ``partitions`` is the signature task count (see
+    ``minhash_signatures``).  The pairs do not depend on it.
     """
     assert num_hashes % bands == 0
     r = num_hashes // bands
-    sig = minhash_signatures(records, text_col, num_hashes, shingle_k)
+    sig = minhash_signatures(records, text_col, num_hashes, shingle_k,
+                             partitions)
     banded = sig.select(
         "_ds", "_id", "_rk",
         F.explode(F.array(*[

@@ -219,37 +219,48 @@ def with_term_frequencies(
 # Pairs -> attribute join -> gammas (J3)
 # ---------------------------------------------------------------------------
 def attach_pair_attributes(
-    pairs: DataFrame, records: DataFrame, cols: list[str]
+    pairs: DataFrame,
+    records: DataFrame,
+    cols: list[str],
+    partitions: int | None = None,
 ) -> DataFrame:
     """Join candidate pairs to the records table twice, materializing
     ``<col>_l`` / ``<col>_r`` attribute columns (reference J3:
-    compute_comparison_vector_values_from_id_pairs joins, lifecycle §3.3)."""
+    compute_comparison_vector_values_from_id_pairs joins, lifecycle §3.3).
+
+    ``partitions`` hash-partitions both sides of both joins to that many
+    tasks, so the comparators computed over the result run in that many
+    tasks; ``None`` leaves the joins to the session's shuffle settings and
+    AQE.  Spark raises a count below ``spark.sql.shuffle.partitions`` to
+    it: a join whose sides are all shuffles takes the shuffle width as its
+    minimum."""
+    def by(df: DataFrame, ds: str, rid: str) -> DataFrame:
+        if partitions is None:
+            return df
+        return df.repartition(partitions, F.col(f"`{ds}`"), F.col(f"`{rid}`"))
+
     def side(suffix: str) -> DataFrame:
         # SHUFFLE_HASH: the records table carries fat text/array attribute
         # columns — a driver-built broadcast of it is a measured serial
         # bottleneck, and at 10^11 records it would not fit anyway.  A
         # shuffle-hash join partitions both sides and builds per-partition
         # hash tables (no sort on the fat side).
-        return records.hint("SHUFFLE_HASH").select(
+        return by(records.select(
             F.col(f"`{INPUT_RECORD_DATASET}`").alias(f"_ds_{suffix}"),
             F.col(f"`{INPUT_RECORD_ID}`").alias(f"_id_{suffix}"),
             *[F.col(f"`{c}`").alias(f"{c}_{suffix}") for c in cols],
-        )
+        ), f"_ds_{suffix}", f"_id_{suffix}").hint("SHUFFLE_HASH")
 
-    out = (
-        pairs.join(
-            side("l"),
-            (F.col(f"`{LEFT_DATASET}`") == F.col("_ds_l"))
-            & (F.col(f"`{LEFT_ID}`") == F.col("_id_l")),
-        )
-        .join(
-            side("r"),
-            (F.col(f"`{RIGHT_DATASET}`") == F.col("_ds_r"))
-            & (F.col(f"`{RIGHT_ID}`") == F.col("_id_r")),
-        )
-        .drop("_ds_l", "_id_l", "_ds_r", "_id_r")
+    out = by(pairs, LEFT_DATASET, LEFT_ID).join(
+        side("l"),
+        (F.col(f"`{LEFT_DATASET}`") == F.col("_ds_l"))
+        & (F.col(f"`{LEFT_ID}`") == F.col("_id_l")),
     )
-    return out
+    return by(out, RIGHT_DATASET, RIGHT_ID).join(
+        side("r"),
+        (F.col(f"`{RIGHT_DATASET}`") == F.col("_ds_r"))
+        & (F.col(f"`{RIGHT_ID}`") == F.col("_id_r")),
+    ).drop("_ds_l", "_id_l", "_ds_r", "_id_r")
 
 
 def compute_gammas(
@@ -308,9 +319,13 @@ def score_pairs(
     threshold: float = 0.5,
     validate: bool = True,
     expensive_cols: set[str] | list[set[str]] | None = None,
+    partitions: int | None = None,
 ) -> DataFrame:
     """End-to-end scoring: attach attributes, gammas, FS probability,
     threshold filter (P2) -> links contract.
+
+    ``partitions`` is the scoring task count (``None``: the default
+    parallelism).  The links do not depend on it.
 
     ``expensive_cols`` enables MULTI-PHASE scoring (splink's "filter on
     match weight before expensive comparisons" idea): phase 1 attaches only
@@ -340,12 +355,10 @@ def score_pairs(
     if any(c.tf_adjustment for c in comparisons):
         records = with_term_frequencies(records, comparisons)
     # Comparator cost scales with pairs x text length, not bytes; a byte-small
-    # pairs table would otherwise land on one input split and score on a
-    # single task.  Spread pairs across the cluster before the double join —
-    # to shuffle.partitions (multiple task waves), not defaultParallelism
-    # (one wave = every stage waits on its slowest task).
-    par = int(pairs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    pairs = pairs.repartition(par, F.col(f"`{LEFT_DATASET}`"), F.col(f"`{LEFT_ID}`"))
+    # pairs table would otherwise land on one input split, or be coalesced
+    # by AQE, and score on a single task.  Every attribute join runs at the
+    # caller's task count.
+    par = partitions or pairs.sparkSession.sparkContext.defaultParallelism
 
     if isinstance(expensive_cols, (set, frozenset)):
         phase_cols: list[set[str]] = [set(expensive_cols)]
@@ -387,7 +400,7 @@ def score_pairs(
 
         scored = list(cheap)
         cur = compute_gammas(
-            attach_pair_attributes(pairs, records, cols_of(cheap)), cheap
+            attach_pair_attributes(pairs, records, cols_of(cheap), par), cheap
         )
         for i, phase in enumerate(deferred):
             # prune on the scored-so-far weight + the best case of EVERY
@@ -415,13 +428,14 @@ def score_pairs(
                     ),
                     records,
                     cols_of(phase),
+                    par,
                 ),
                 phase,
             )
             scored += phase
         gammas = cur
     else:
-        attrs = attach_pair_attributes(pairs, records, cols_of(comparisons))
+        attrs = attach_pair_attributes(pairs, records, cols_of(comparisons), par)
         gammas = compute_gammas(attrs, comparisons)
     scored = fs_probability(gammas, comparisons, prior)
     links = scored.filter(F.col(PROBABILITY) >= F.lit(threshold)).select(
@@ -534,7 +548,7 @@ def estimate_u_by_value_pairs(
         col = F.col(f"`{c.input_col}`")
         # value tables are tiny in bytes but the cross product is comparator
         # CPU-heavy — spread the streamed side across tasks explicitly
-        par = int(records.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+        par = records.sparkSession.sparkContext.defaultParallelism
         if link_only:
             counts = (
                 records.filter(col.isNotNull())

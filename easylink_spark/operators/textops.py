@@ -71,7 +71,7 @@ def simhash_signatures(
     # evaluations (same rationale, and same fix, as
     # blocking.minhash_signatures).  Work scales with rows x tokens, not
     # bytes, so file-size-based partitioning under-parallelizes it.
-    par = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    par = df.sparkSession.sparkContext.defaultParallelism
     exploded = df.select(
         F.col(id_col).alias("_id"), F.explode(toks).alias("_t")
     ).repartition(par, "_id").select("_id", token_hash(F.col("_t")).alias("_h"))
@@ -232,7 +232,7 @@ def embedding_near_dup_pairs(
     # embeddings table is 1-2 file splits, which serialized the measured
     # bulk of this operator's wall (round 6; same fix as
     # blocking.minhash_signatures).
-    par = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    par = df.sparkSession.sparkContext.defaultParallelism
     base = df.select(
         F.col(id_col).alias("_id"),
         F.transform(vec_col, lambda x: x.cast("double")).alias("_v"),

@@ -6,8 +6,11 @@ sandbox we run local[N].  All settings here are scale-oriented defaults:
 - AQE on (runtime coalescing + skew-join splitting),
 - Arrow on (every comparator UDF is a vectorized pandas UDF),
 - UTC session timezone (oracle comparisons against DuckDB),
-- shuffle partitions sized to cores for local mode (callers override for
-  cluster runs; at 100 TB you want O(2-3x total-cores) partitions).
+- one wave of tasks by default: shuffle partitions equal the default
+  parallelism (the cores; AQE coalesces below that).  CPU-heavy operators
+  take an explicit ``partitions=`` count, ``None`` meaning the default
+  parallelism; callers that want a wider session pass
+  ``shuffle_partitions=``.
 """
 
 from __future__ import annotations
@@ -15,7 +18,6 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
-
 
 def get_spark(
     app_name: str = "easylink_spark",
@@ -43,17 +45,16 @@ def get_spark(
     if cores is None and cores_env:
         cores = int(cores_env)
     master = f"local[{cores}]" if cores else "local[*]"
-    # 4 waves of tasks per core: with exactly one wave (partitions == cores)
-    # every stage ends on its slowest task and measured utilization sits at
-    # ~64%; 4x smaller tasks amortize the tail (measured: scoring stage 48s
-    # -> 35s at local[16]).  Same rule a real cluster uses (2-4x total cores).
-    n_shuffle = shuffle_partitions or (4 * cores if cores else 128)
+    # One wave of tasks per core.  Four waves amortize a stage's slowest
+    # task, but at the engine's usual sizes the fixed cost of the extra
+    # tasks (and of the files each writes) is what a run pays for.  Without
+    # a known core count the width is set after the session starts, from
+    # the default parallelism the master reports.
+    n_shuffle = shuffle_partitions or cores
 
     builder = (
         SparkSession.builder.appName(app_name)
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.shuffle.partitions", str(n_shuffle))
-        .config("spark.default.parallelism", str(n_shuffle))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -68,8 +69,8 @@ def get_spark(
         .config("spark.sql.parquet.aggregatePushdown", "true")
         # Always use the sort-based shuffle writer (round 6).  Below the
         # default bypassMergeThreshold (200) Spark's bypass-merge writer
-        # opens ONE FILE PER REDUCE PARTITION PER MAP TASK; at the engine's
-        # 4x-cores shuffle width that is map_tasks x partitions file
+        # opens ONE FILE PER REDUCE PARTITION PER MAP TASK; at a 4x-cores
+        # shuffle width that is map_tasks x partitions file
         # creates per shuffle — measured ~0.2 ms/block = 3.4 s of pure
         # filesystem overhead for a 40 KB repartition at local[32]/128
         # (guide §2.2: block count grows quadratically).  The sort writer
@@ -87,9 +88,22 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
+    if n_shuffle:
+        builder = (
+            builder.config("spark.sql.shuffle.partitions", str(n_shuffle))
+            .config("spark.default.parallelism", str(n_shuffle))
+        )
     # Only force a master when none is configured (spark-submit sets one).
     if not os.environ.get("SPARK_MASTER") and "SPARK_SUBMIT" not in os.environ:
         builder = builder.master(master)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    # local[*] or a spark-submit master: match the width to the parallelism
+    # unless the submitter chose one (Spark's own default is 200)
+    if not n_shuffle and not spark.sparkContext.getConf().contains(
+        "spark.sql.shuffle.partitions"
+    ):
+        spark.conf.set("spark.sql.shuffle.partitions",
+                       str(spark.sparkContext.defaultParallelism))
+    return spark

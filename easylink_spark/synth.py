@@ -180,11 +180,11 @@ def synth_transcripts(
     ``select("conv_id", "entity_id").distinct()`` for labels).
     """
     n_templates = n_templates or max(1, n_entities // 4)
-    # multiple waves of generator tasks (entity cost varies with turns/copies
-    # drawn per entity; one wave per core ends on the slowest batch)
-    n_parts = partitions or int(
-        spark.conf.get("spark.sql.shuffle.partitions", "32")
-    )
+    # four waves of generator tasks (entity cost varies with turns/copies
+    # drawn per entity; one wave per core ends on the slowest batch).  Tied
+    # to the default parallelism, not the shuffle width, so a corpus keeps
+    # its file count whatever the session's shuffle setting.
+    n_parts = partitions or 4 * spark.sparkContext.defaultParallelism
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

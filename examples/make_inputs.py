@@ -74,7 +74,7 @@ def main(out: str = "examples/data", n_entities: int = 200,
     from easylink_spark.synth import synth_transcripts
 
     spark = get_spark("examples_make_inputs", cores=4, shuffle_partitions=4)
-    (synth_transcripts(spark, n_entities=n_entities, seed=7)
+    (synth_transcripts(spark, n_entities=n_entities, seed=7, partitions=4)
      .drop("entity_id")
      .write.mode("overwrite")
      .parquet(os.path.join(out, "transcripts.parquet")))

@@ -10,6 +10,9 @@ the plan text itself.
 
 from __future__ import annotations
 
+import pathlib
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -107,6 +110,39 @@ def test_lsh_hot_cap_shares_the_self_join_exchange(spark, records):
         reused = [ln for ln in _plan(df).splitlines() if "ReusedExchange" in ln]
         assert any(f"hashpartitioning({first_key}#" in ln for ln in reused), (
             name, reused)
+
+
+def test_operator_task_count_reaches_the_exchange(spark, records):
+    """The CPU-heavy operators' explicit ``partitions`` is the partition
+    count of their exchanges, not the session's shuffle width.  MinHash
+    signatures keep any count.  Scoring runs all four attribute-join
+    exchanges at the count; a join side below the shuffle width is raised
+    to it by Spark's planner (a join whose sides are all shuffles takes
+    ``spark.sql.shuffle.partitions`` as their minimum), hence a count above
+    the width here.  The width is read, never set: other tests' sessions
+    share this conf."""
+    width = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    sigs = B.minhash_signatures(records, "full_text_norm", partitions=3)
+    assert re.search(r"hashpartitioning\(_k8#\w+, 3\)", _plan(sigs))
+    pairs = B.block_on_key(records, F.col("first_prefix"))
+    n = width + 4
+    plan = _plan(S.score_pairs(pairs, records, validate=False, partitions=n))
+    by_num = re.findall(r"hashpartitioning\([^()]*, (\d+)\), REPARTITION_BY_NUM",
+                        plan)
+    assert by_num == [str(n)] * 4, (width, by_num)
+
+
+def test_no_operator_reads_the_shuffle_width():
+    """Task counts are parameters: no engine module sizes its tasks by
+    reading ``spark.sql.shuffle.partitions`` from the session conf."""
+    root = pathlib.Path(K.__file__).parent
+    readers = [
+        f"{path.relative_to(root)}:{n}"
+        for path in sorted(root.rglob("*.py"))
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if 'conf.get("spark.sql.shuffle.partitions' in line
+    ]
+    assert readers == []
 
 
 def test_small_graph_clustering_runs_no_python_or_single_partition_exchange(
