@@ -6,11 +6,16 @@ The reference's records contract carries flat attribute columns per record
 *group of rows* per record (one conversation = many turns), so this stage
 aggregates turns into one feature row per conversation:
 
-- ordered full-text concatenation (stable (conv_id, turn_idx) ordering —
-  the per-row invariant from BASELINE.json),
-- normalized first-turn text (lower/trim/punct-strip/space-collapse),
+- the ordered, uncapped array of normalized turn texts (stable
+  (conv_id, turn_idx) ordering — the per-row invariant from BASELINE.json),
+- the normalized first-turn prefix (the exact-blocking key),
 - role/tool signature string,
 - turn count, char count.
+
+The normalized text is stored once.  ``text_views`` derives the columns the
+comparators and the LSH rule read (first turn, full text, capped per-turn
+texts) from that array when a stage reads the records, so the checkpointed
+records table never holds the same text twice.
 
 Everything here is built-in column functions — single shuffle (the groupBy),
 whole-stage-codegen eligible, no Python in the hot path.
@@ -45,16 +50,16 @@ def conversation_features(
     transcripts: DataFrame,
     dataset_name: str = "transcripts",
     prefix_len: int = 24,
-    turn_text_cap: int = 200,
     validate: bool = True,
 ) -> DataFrame:
     """Aggregate turns -> one records-contract row per conversation.
 
     Output columns: the records contract key (`Input Record Dataset`,
-    `Input Record ID`) plus feature attributes used by blocking and scoring:
-    ``first_text_norm``, ``first_prefix``, ``full_text_norm``,
-    ``role_tool_sig``, ``n_turns``, ``n_chars``, ``turn_texts`` (ordered
-    array of normalized per-turn texts, for turn-alignment scoring).
+    `Input Record ID`) plus ``turn_norm`` (ordered array of
+    ``normalize_text`` over every turn, uncapped), ``first_prefix`` (the
+    first ``prefix_len`` chars of the normalized first turn),
+    ``role_tool_sig``, ``n_turns`` and ``n_chars``.  Apply ``text_views``
+    to get the text columns scoring and LSH blocking compare.
     """
     # The expensive per-turn work (two regexp_replace passes over every
     # text) runs AFTER the groupBy, inside F.transform on the reduce side:
@@ -74,31 +79,19 @@ def conversation_features(
     agg = (
         transcripts.groupBy("conv_id")
         .agg(
-            F.sort_array(F.collect_list(turn)).alias("turns_raw"),
+            F.sort_array(F.collect_list(turn)).alias("turns"),
             F.count(F.lit(1)).alias("n_turns"),
             F.sum(F.length("text")).alias("n_chars"),
         )
     )
     agg = agg.withColumn(
-        "turns",
-        F.transform(
-            "turns_raw",
-            lambda t: F.struct(
-                t["turn_idx"].alias("turn_idx"),
-                normalize_text(t["text"]).alias("text_norm"),
-                t["role"].alias("role"),
-                t["tool"].alias("tool"),
-            ),
-        ),
+        "turn_norm", F.transform("turns", lambda t: normalize_text(t["text"]))
     )
-    first = F.element_at(F.col("turns"), 1)
     feats = agg.select(
         F.lit(dataset_name).alias(INPUT_RECORD_DATASET),
         F.col("conv_id").alias(INPUT_RECORD_ID),
-        first["text_norm"].alias("first_text_norm"),
-        F.substring(first["text_norm"], 1, prefix_len).alias("first_prefix"),
-        F.concat_ws(" ", F.transform("turns", lambda t: t["text_norm"])).alias(
-            "full_text_norm"
+        F.substring(F.element_at("turn_norm", 1), 1, prefix_len).alias(
+            "first_prefix"
         ),
         F.concat_ws(
             "|",
@@ -111,13 +104,32 @@ def conversation_features(
         ).alias("role_tool_sig"),
         F.col("n_turns").cast("int").alias("n_turns"),
         F.col("n_chars").cast("long").alias("n_chars"),
-        # per-turn texts capped for the O(len^2) turn-alignment Levenshtein;
-        # the first `turn_text_cap` chars carry the alignment signal, and the
-        # cap bounds comparator cost per pair at scale
-        F.transform(
-            "turns", lambda t: F.substring(t["text_norm"], 1, turn_text_cap)
-        ).alias("turn_texts"),
+        F.col("turn_norm"),
     )
     if validate:
         return validate_records(feats)
     return feats
+
+
+def text_views(records: DataFrame, turn_text_cap: int = 200) -> DataFrame:
+    """Add the text columns the comparators and LSH blocking read, derived
+    from ``turn_norm`` (records as built by ``conversation_features``):
+
+    - ``first_text_norm``: the normalized first turn;
+    - ``full_text_norm``: the normalized turns joined by single spaces;
+    - ``turn_texts``: each normalized turn capped at ``turn_text_cap``
+      chars, for the O(len^2) turn-alignment Levenshtein — the first chars
+      carry the alignment signal, and the cap bounds comparator cost per
+      pair at scale.
+
+    Projections only: column pruning still reaches the records scan, so a
+    plan that reads none of these columns does not read ``turn_norm``.
+    """
+    norm = F.col("turn_norm")
+    return records.withColumns({
+        "first_text_norm": F.element_at(norm, 1),
+        "full_text_norm": F.concat_ws(" ", norm),
+        "turn_texts": F.transform(
+            norm, lambda t: F.substring(t, 1, turn_text_cap)
+        ),
+    })

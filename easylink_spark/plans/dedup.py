@@ -42,7 +42,7 @@ from easylink_spark.contracts import (
 from easylink_spark.operators import blocking as B
 from easylink_spark.operators import clustering as G
 from easylink_spark.operators import scoring as S
-from easylink_spark.operators.features import conversation_features
+from easylink_spark.operators.features import conversation_features, text_views
 from easylink_spark.sources.checkpoint import StageRunner
 
 
@@ -76,6 +76,13 @@ def run_dedup(
     ``transcripts`` is either an ephemeral DataFrame or a PATH to a durable
     parquet/Iceberg-style table (the production shape: the corpus already
     exists as a table).
+
+    The clusters cover linked records only.  A record with no link at or
+    above ``cfg.threshold`` (never blocked, or every one of its pairs
+    scored below the threshold) gets no cluster row: ``score_pairs`` keeps
+    only links that clear the threshold, and ``links_to_clusters`` declares
+    link endpoints only, the reference's singleton rule (PARITY.md G4).
+    Such a record is still in the ``records`` stage table.
     """
     cfg = config or DedupConfig()
     runner = StageRunner(spark, checkpoint_dir, cfg.as_dict())
@@ -105,10 +112,14 @@ def run_dedup(
         validator=validate_records,
     )
 
+    # The records table stores the normalized turn text once (turn_norm);
+    # the stages that compare text derive their columns from it when they
+    # build their plans, so a resumed stage never needs them.
     def build_pairs() -> DataFrame:
+        recs = text_views(records)
         rules = [
             B.block_on_key(
-                records,
+                recs,
                 F.col("first_prefix"),
                 hot_block_threshold=cfg.hot_block_threshold,
             )
@@ -116,7 +127,7 @@ def run_dedup(
         if cfg.use_lsh:
             rules.append(
                 B.block_minhash_lsh(
-                    records,
+                    recs,
                     "full_text_norm",
                     num_hashes=cfg.lsh_num_hashes,
                     bands=cfg.lsh_bands,
@@ -125,7 +136,7 @@ def run_dedup(
         if cfg.use_sorted_neighborhood:
             rules.append(
                 B.block_sorted_neighborhood(
-                    records, "first_text_norm", window=cfg.snm_window
+                    recs, "first_text_norm", window=cfg.snm_window
                 )
             )
         return B.union_blocking_rules(rules)
@@ -135,13 +146,14 @@ def run_dedup(
     )
 
     def build_links() -> DataFrame:
+        recs = text_views(records)
         comparisons = S.default_transcript_comparisons()
         if cfg.estimate_u:
-            comparisons = S.estimate_u(records, comparisons)
+            comparisons = S.estimate_u(recs, comparisons)
         if cfg.em_iterations:
             cols = sorted({c.input_col for c in comparisons})
             gammas = S.compute_gammas(
-                S.attach_pair_attributes(pairs, records, cols), comparisons
+                S.attach_pair_attributes(pairs, recs, cols), comparisons
             ).persist()
             comparisons, _ = S.estimate_m_u_em(
                 gammas, comparisons, cfg.prior, max_iter=cfg.em_iterations
@@ -161,7 +173,7 @@ def run_dedup(
         # so the extra tier pruned almost nothing and its pairs<->records
         # join + Arrow boundary were pure overhead.
         return S.score_pairs(
-            pairs, records, comparisons, prior=cfg.prior,
+            pairs, recs, comparisons, prior=cfg.prior,
             threshold=cfg.threshold, validate=False,
             expensive_cols=[{"turn_texts"}],
         )

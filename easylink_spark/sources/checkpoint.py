@@ -21,6 +21,9 @@ Scale notes (the round-1 serial bottleneck lived here):
 - one write path for every stage (``StageRunner.stage``): cache, validate
   in the caller's frame, write in the background, so the stage-boundary
   write barrier overlaps downstream compute;
+- parquet stage tables are zstd-compressed (set on the stage write, not
+  the session), so the checkpoint costs fewer bytes than the snappy
+  default at the same row layout;
 - writes land straight from the plan's own output partitioning — NO
   repartition.  Downstream stages read the cache, not the files, and
   parquet re-reads split large files by row-group anyway, so re-shuffling
@@ -105,7 +108,12 @@ class StageRunner:
         if self.iceberg_catalog:
             df.writeTo(f"{self.iceberg_catalog}.{name}").createOrReplace()
         else:
-            df.write.mode("overwrite").parquet(str(self._table_path(name)))
+            # zstd on this write only: the session's default codec also
+            # governs inputs and streaming state this runner does not own.
+            # (Iceberg tables already default to zstd.)
+            df.write.mode("overwrite").option("compression", "zstd").parquet(
+                str(self._table_path(name))
+            )
 
     def read(self, name: str) -> DataFrame:
         if self.iceberg_catalog:

@@ -140,11 +140,14 @@ def test_link_only_is_cross_dataset_subset_of_dedupe(spark):
     """``link_only=True`` must emit exactly the cross-dataset pairs the
     dedupe (``link_only=False``) run finds over the same records split into
     two datasets — for the salted exact-key rule and for MinHash-LSH."""
-    from easylink_spark.operators.features import conversation_features
+    from easylink_spark.operators.features import (
+        conversation_features,
+        text_views,
+    )
     from easylink_spark.synth import synth_transcripts
 
     t = synth_transcripts(spark, n_entities=100, seed=3).drop("entity_id")
-    recs = conversation_features(t, validate=False).withColumn(
+    recs = text_views(conversation_features(t, validate=False)).withColumn(
         K.INPUT_RECORD_DATASET,
         F.when(F.pmod(F.xxhash64(K.INPUT_RECORD_ID), F.lit(2)) == 0, "a")
         .otherwise("b"),

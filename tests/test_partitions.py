@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 
 from easylink_spark.operators import blocking as B
 from easylink_spark.operators import scoring as S
-from easylink_spark.operators.features import conversation_features
+from easylink_spark.operators.features import conversation_features, text_views
 from easylink_spark.synth import synth_transcripts
 
 _PROBE = """
@@ -53,7 +53,8 @@ def test_session_without_cores_matches_width_to_parallelism():
 @pytest.fixture(scope="module")
 def records(spark):
     t = synth_transcripts(spark, n_entities=60, seed=9).drop("entity_id")
-    recs = conversation_features(t, "transcripts", 24, validate=False).cache()
+    recs = text_views(
+        conversation_features(t, "transcripts", 24, validate=False)).cache()
     yield recs
     recs.unpersist()
 

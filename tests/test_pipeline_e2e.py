@@ -182,6 +182,83 @@ def test_e2e_deterministic_same_seed(spark, tmp_ckpt):
     t.unpersist()
 
 
+def _checksum(clusters) -> int:
+    return clusters.select(F.expr(
+        "bit_xor(xxhash64(`Input Record Dataset`, `Input Record ID`, "
+        "`Cluster ID`))")).collect()[0][0]
+
+
+def test_e2e_checkpoint_format(spark, tmp_ckpt):
+    """The records table stores the normalized text once (the slim column
+    set), every stage table is zstd parquet down to each column chunk, and
+    a resumed run returns the same clusters checksum."""
+    import pyarrow.parquet as pq
+
+    t = synth_transcripts(spark, n_entities=30, seed=11).drop("entity_id").cache()
+    first = _checksum(run_dedup(spark, t, tmp_ckpt, DedupConfig()))
+    ckpt = Path(tmp_ckpt)
+    assert spark.read.parquet(str(ckpt / "records")).columns == [
+        K.INPUT_RECORD_DATASET, K.INPUT_RECORD_ID, "first_prefix",
+        "role_tool_sig", "n_turns", "n_chars", "turn_norm",
+    ]
+    for name in ("transcripts", "records", "pairs", "links", "clusters"):
+        files = sorted((ckpt / name).glob("*.parquet"))
+        assert files, name
+        codecs = set()
+        for f in files:
+            md = pq.ParquetFile(f).metadata
+            codecs |= {
+                md.row_group(g).column(c).compression
+                for g in range(md.num_row_groups)
+                for c in range(md.row_group(g).num_columns)
+            }
+        assert codecs == {"ZSTD"}, (name, codecs)
+    manifests = sorted(ckpt.glob("*._manifest.json"))
+    before = {m.name: m.stat().st_mtime_ns for m in manifests}
+    assert _checksum(run_dedup(spark, t, tmp_ckpt, DedupConfig())) == first
+    assert {m.name: m.stat().st_mtime_ns for m in manifests} == before
+    t.unpersist()
+
+
+def test_e2e_unlinked_records_have_no_cluster_row(spark, tmp_ckpt):
+    """Pins the clusters row set (PARITY.md G4): only link endpoints get a
+    cluster row.  ``c`` shares ``a``'s first turn, so it is blocked with
+    ``a`` and ``b``, but both its pairs score below the threshold; ``d``
+    is never blocked.  Neither gets a row, singleton or otherwise."""
+    import datetime
+
+    ts = datetime.datetime(2024, 1, 1)
+    convs = {
+        "a": ["How do I reset my router password today?",
+              "Unplug the router and hold the reset button for ten seconds.",
+              "Thanks, that worked perfectly."],
+        "b": ["how do I reset my ROUTER password today",
+              "Unplug the router, and hold the reset button for ten seconds",
+              "thanks that worked perfectly!"],
+        "c": ["How do I reset my router password today?",
+              "Which firmware version is printed on the sticker underneath?",
+              "Version nine point four from the old warehouse batch.",
+              "Then download the signed image before any factory restore."],
+        "d": ["Recommend a vegetarian lasagna recipe for six guests.",
+              "Layer spinach, ricotta and roasted peppers between sheets."],
+    }
+    rows = [
+        (cid, i, ("user", "assistant")[i % 2], text, None, ts)
+        for cid, turns in convs.items() for i, text in enumerate(turns)
+    ]
+    t = spark.createDataFrame(
+        rows, "conv_id string, turn_idx int, role string, text string, "
+        "tool string, ts timestamp")
+    clusters = run_dedup(spark, t, tmp_ckpt, DedupConfig())
+    runner = StageRunner(spark, tmp_ckpt)
+    assert runner.read("records").count() == 4
+    paired = {r[0] for r in runner.read("pairs").select(K.RIGHT_ID).collect()}
+    assert "c" in paired
+    assert partition_of(clusters) == {frozenset({"a", "b"})}
+    assert sorted(r[0] for r in clusters.select(K.INPUT_RECORD_ID).collect()) \
+        == ["a", "b"]
+
+
 def test_e2e_validated_matches_unvalidated(spark, tmp_ckpt, monkeypatch):
     """Validated stages (EASYLINK_VALIDATE=1) and unvalidated ones (bench
     mode) take the same write path, so both must produce the same clusters

@@ -21,7 +21,7 @@ from easylink_spark.operators import blocking as B
 from easylink_spark.operators import clustering as G
 from easylink_spark.operators import scoring as S
 from easylink_spark.operators import textops as T
-from easylink_spark.operators.features import conversation_features
+from easylink_spark.operators.features import conversation_features, text_views
 from easylink_spark.streaming.incremental import merge_batch
 from easylink_spark.synth import synth_transcripts
 
@@ -33,11 +33,12 @@ def _plan(df) -> str:
 @pytest.fixture(scope="module")
 def records(spark, tmp_path_factory):
     """Records read from PARQUET (not an in-memory frame) so scan-level
-    pushdown/pruning is actually observable in the plan."""
+    pushdown/pruning is actually observable in the plan, with the derived
+    text columns on top, as ``run_dedup``'s blocking and scoring see them."""
     d = str(tmp_path_factory.mktemp("plan") / "records")
     t = synth_transcripts(spark, n_entities=60, seed=5).drop("entity_id")
     conversation_features(t, validate=False).write.parquet(d)
-    return spark.read.parquet(d)
+    return text_views(spark.read.parquet(d))
 
 
 def test_blocking_has_no_cartesian_product(spark, records):
@@ -53,13 +54,15 @@ def test_blocking_has_no_cartesian_product(spark, records):
 def test_blocking_prunes_record_columns(spark, records):
     """The pairs plan must not drag the fat per-turn array through the
     blocking shuffles: the parquet scans feeding pair generation read only
-    the key + id columns."""
+    the key + id columns — neither the stored ``turn_norm`` nor the text
+    columns derived from it."""
     pairs = B.block_on_key(records, F.col("first_prefix"))
     plan = _plan(pairs)
     for line in plan.splitlines():
         if "ReadSchema" in line:
             assert "turn_texts" not in line, line
             assert "full_text_norm" not in line, line
+            assert "turn_norm" not in line, line
 
 
 def test_scoring_attach_uses_hash_join(spark, records):

@@ -137,11 +137,15 @@ def test_two_phase_scoring_identical_links(spark):
     single-phase — the bound is sound, pruning only pairs that cannot
     reach the threshold."""
     from easylink_spark.operators.blocking import block_on_key
-    from easylink_spark.operators.features import conversation_features
+    from easylink_spark.operators.features import (
+        conversation_features,
+        text_views,
+    )
     from easylink_spark.synth import synth_transcripts
 
     t = synth_transcripts(spark, n_entities=60, seed=9).drop("entity_id")
-    recs = conversation_features(t, "transcripts", 24, validate=False)
+    recs = text_views(
+        conversation_features(t, "transcripts", 24, validate=False))
     pairs = block_on_key(recs, F.col("first_prefix"))
     one = S.score_pairs(pairs, recs, prior=0.01, threshold=0.85,
                         validate=False)

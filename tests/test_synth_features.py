@@ -5,7 +5,11 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from easylink_spark import contracts as K
-from easylink_spark.operators.features import conversation_features, normalize_text
+from easylink_spark.operators.features import (
+    conversation_features,
+    normalize_text,
+    text_views,
+)
 from easylink_spark.synth import labels_of, synth_transcripts
 
 
@@ -49,7 +53,7 @@ def test_normalize_text(spark):
 
 def test_conversation_features(spark):
     t = synth_transcripts(spark, n_entities=20, seed=42).drop("entity_id")
-    feats = conversation_features(t).cache()
+    feats = text_views(conversation_features(t)).cache()
     n_convs = t.select("conv_id").distinct().count()
     assert feats.count() == n_convs
     row = feats.filter(
@@ -61,6 +65,81 @@ def test_conversation_features(spark):
     assert row["n_turns"] == len(row["turn_texts"])
     assert row["role_tool_sig"].startswith("user|assistant")
     feats.unpersist()
+
+
+def _corpus_with_long_turn(spark):
+    """A synth corpus plus one conversation whose second turn is over 300
+    chars, so the 200-char ``turn_texts`` cap really cuts (no synth turn
+    reaches it)."""
+    import datetime
+
+    t = synth_transcripts(spark, n_entities=20, seed=42).drop("entity_id")
+    long_text = " ".join(f"Word{i}, AND more!" for i in range(40))
+    assert len(long_text) > 300
+    ts = datetime.datetime(2024, 1, 1)
+    extra = spark.createDataFrame(
+        [
+            ("conv_long", 0, "user", "Hello,  THERE!", None, ts),
+            ("conv_long", 1, "assistant", long_text, "search", ts),
+            ("conv_long", 2, "user", None, None, ts),
+        ],
+        t.schema,
+    )
+    return t.unionByName(extra)
+
+
+def test_text_views_match_the_stored_columns_they_replace(spark):
+    """``text_views(conversation_features(t))`` gives the same first-turn,
+    full-text and capped per-turn columns the records table used to store,
+    here rebuilt inline with the expressions that built them."""
+    t = _corpus_with_long_turn(spark).cache()
+    rid = F.col(f"`{K.INPUT_RECORD_ID}`")
+    views = text_views(conversation_features(t, validate=False)).select(
+        rid, "first_text_norm", "full_text_norm", "turn_texts")
+    turns = (
+        t.groupBy("conv_id")
+        .agg(F.sort_array(F.collect_list(F.struct("turn_idx", "text")))
+             .alias("turns"))
+        .withColumn("turns", F.transform(
+            "turns", lambda x: F.struct(normalize_text(x["text"]).alias("n"))))
+    )
+    stored = turns.select(
+        F.col("conv_id").alias(K.INPUT_RECORD_ID),
+        F.element_at("turns", 1)["n"].alias("first_text_norm"),
+        F.concat_ws(" ", F.transform("turns", lambda x: x["n"]))
+        .alias("full_text_norm"),
+        F.transform("turns", lambda x: F.substring(x["n"], 1, 200))
+        .alias("turn_texts"),
+    )
+    n_convs = t.select("conv_id").distinct().count()
+    assert views.count() == stored.count() == n_convs
+    assert views.exceptAll(stored).count() == 0
+    assert stored.exceptAll(views).count() == 0
+    row = views.filter(rid == "conv_long").collect()[0]
+    assert row["first_text_norm"] == "hello there"
+    assert [len(x) for x in row["turn_texts"][:2]] == [11, 200]
+    assert row["turn_texts"][2] is None
+    assert len(row["full_text_norm"]) > 300
+    t.unpersist()
+
+
+def test_turn_norm_holds_every_turn_uncapped(spark):
+    """Per-turn text equality (BASELINE.json's per-row invariant):
+    ``turn_norm[turn_idx + 1]`` is ``normalize_text(text)`` for every
+    ``(conv_id, turn_idx)``, uncapped, and the array has no extra element."""
+    t = _corpus_with_long_turn(spark).cache()
+    feats = conversation_features(t, validate=False)
+    stored = feats.select(
+        F.col(f"`{K.INPUT_RECORD_ID}`").alias("conv_id"),
+        F.posexplode("turn_norm").alias("turn_idx", "norm"),
+    )
+    expected = t.select("conv_id", "turn_idx",
+                        normalize_text(F.col("text")).alias("norm"))
+    assert stored.count() == expected.count()
+    assert stored.exceptAll(expected).count() == 0
+    assert expected.exceptAll(stored).count() == 0
+    assert stored.agg(F.max(F.length("norm"))).collect()[0][0] > 300
+    t.unpersist()
 
 
 def test_duplicate_first_turns_normalize_identically(spark):
