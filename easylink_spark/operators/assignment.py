@@ -18,8 +18,6 @@ Input: links contract + precomputed block column.  Output: the accepted
 
 from __future__ import annotations
 
-import math
-
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F

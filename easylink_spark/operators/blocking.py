@@ -14,9 +14,9 @@ semantics are Spark-native, with three rule families per the north rule:
    hot key — that needs this salt-replication, SURVEY §4.2.1.)
 2. **MinHash-LSH** (``block_minhash_lsh``): token-shingle MinHash signatures
    banded into buckets; pairs = within-bucket self-join.  Hand-rolled with
-   built-in functions (xxhash64 / transform / array_min) so the whole
-   signature computation stays inside whole-stage codegen — no Python, no
-   MLlib overhead, deterministic across parallelism levels.
+   built-in functions (xxhash64 / transform / array_min), one projection
+   per record — no Python, no MLlib overhead, deterministic across
+   parallelism levels.
 3. **Sorted neighborhood** (``block_sorted_neighborhood``): rows within a
    +/-w window of the records sorted by a key.  Distributed via fixed prefix
    bucketing + per-bucket ranks + cumulative bucket offsets -> exact global
@@ -263,25 +263,18 @@ def minhash_signatures(
 ) -> DataFrame:
     """(_ds, _id, _rk, h0..h{H-1}) minhash signature table.
 
-    Formulated as explode(shingles) -> H simple xxhash64 columns ->
-    groupBy(record).min per column: each aggregate is a trivial codegen'd
-    expression with map-side partial aggregation, instead of one giant
-    H-way nested-transform expression (which Catalyst compiles slowly and
-    which AQE happily schedules on a single task for byte-small inputs).
+    One projection per record: ``h<i>`` is the ``array_min`` of the
+    record's shingle hashes rehashed with seed ``i``.  A per-record min
+    needs no other record's rows, so there is no explode, aggregation or
+    join back, and the shingle array is built once per record, in a
+    Project below the H ``array_min`` columns.
+
     The explicit repartition to ``partitions`` tasks (``None``: the default
     parallelism) spreads the CPU-heavy hashing across the cluster even
     when the input is few bytes — minhash cost scales with rows x
     shingles, not bytes, so file-size-based partitioning
-    under-parallelizes it.
-
-    The exploded rows carry only a COMPACT 8-byte record key (xxhash64 of
-    the string key) through the rows*shingles hash-aggregation — string
-    keys on every shingle row triple the memory traffic of the hottest
-    stage; the readable key columns are joined back onto the aggregated
-    (one-row-per-record) signatures afterwards.  A 64-bit key collision
-    merges two records' shingle sets in CANDIDATE generation only —
-    downstream scoring verifies every candidate pair, so a collision can
-    add a spurious candidate, never a wrong final link.
+    under-parallelizes it.  The exchange carries the text, not the
+    shingles: they are built after it, as the arrays outweigh the text.
     """
     par = partitions or records.sparkSession.sparkContext.defaultParallelism
     keyed = records.select(
@@ -289,18 +282,20 @@ def minhash_signatures(
         F.col(f"`{INPUT_RECORD_ID}`").alias("_id"),
         record_key(f"`{INPUT_RECORD_DATASET}`", f"`{INPUT_RECORD_ID}`").alias("_rk"),
         F.col(f"`{text_col}`").alias("_txt"),
-    ).withColumn("_k8", F.xxhash64("_rk")).repartition(par, "_k8")
-    exploded = keyed.select(
-        "_k8", F.explode(_shingles(F.col("_txt"), shingle_k)).alias("_sh")
+    ).repartition(par, "_rk")
+    shingled = keyed.select(
+        "_ds", "_id", "_rk", _shingles(F.col("_txt"), shingle_k).alias("_sh")
     )
-    hashed = exploded.select(
-        "_k8",
-        *[F.xxhash64(F.lit(i), "_sh").alias(f"h{i}") for i in range(num_hashes)],
-    )
-    sigs = hashed.groupBy("_k8").agg(
-        *[F.min(f"h{i}").alias(f"h{i}") for i in range(num_hashes)]
-    )
-    return sigs.join(keyed.select("_k8", "_ds", "_id", "_rk"), "_k8").drop("_k8")
+
+    def seeded(i: int):
+        # closure factory: a default-arg lambda would be mistaken for
+        # Spark's two-argument (element, index) higher-order lambda
+        return lambda s: F.xxhash64(F.lit(i), s)
+
+    return shingled.select("_ds", "_id", "_rk", *[
+        F.array_min(F.transform("_sh", seeded(i))).alias(f"h{i}")
+        for i in range(num_hashes)
+    ])
 
 
 def block_minhash_lsh(

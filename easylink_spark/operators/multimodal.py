@@ -147,8 +147,7 @@ def extract_features(
     (module docstring); ``"deterministic_fake"`` runs the digest encoder
     for any payload.  Partition count is forced up-front: payload bytes
     dominate partition sizing, and decode cost scales with items, so we
-    spread by id hash rather than bytes (same reasoning as
-    minhash_signatures).
+    spread by id hash rather than bytes.
     """
     if decode not in ("real", "deterministic_fake"):
         raise ValueError(f"unknown decode mode {decode!r}")

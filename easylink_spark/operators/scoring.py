@@ -20,7 +20,7 @@ from __future__ import annotations
 
 import math
 from collections.abc import Callable
-from dataclasses import dataclass, field
+from dataclasses import dataclass, replace
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -163,45 +163,11 @@ def with_term_frequencies(
         return records
     total = records.agg(F.count(F.lit(1)).alias("_tot"))  # 1 row, broadcast
 
-    if len(tf_comps) >= 3:
-        # MANY tf columns: one consolidated join instead of k full-table
-        # shuffle joins.  Melt the tf-adjusted columns to long form
-        # (record_key, col, value), join a single (col, value) -> tf table,
-        # pivot the k tf values back into one map, and join records once —
-        # 2 data-sized shuffles total, independent of k.
-        rk = record_key(f"`{INPUT_RECORD_DATASET}`", f"`{INPUT_RECORD_ID}`")
-        melted = records.select(
-            rk.alias("_rk"),
-            F.explode(F.array(*[
-                F.struct(F.lit(c.name).alias("_c"),
-                         F.col(f"`{c.input_col}`").cast("string").alias("_v"))
-                for c in tf_comps
-            ])).alias("_cv"),
-        ).select("_rk", "_cv._c", "_cv._v")
-        tf_table = (
-            melted.groupBy("_c", "_v").agg(F.count(F.lit(1)).alias("_n"))
-            .join(F.broadcast(total))
-            .select("_c", "_v", (F.col("_n") / F.col("_tot")).alias("_tf"))
-        )
-        per_record = (
-            melted.join(tf_table, ["_c", "_v"], "left")
-            .groupBy("_rk")
-            .agg(*[
-                F.max(F.when(F.col("_c") == c.name, F.col("_tf"))).alias(c.tf_col())
-                for c in tf_comps
-            ])
-        )
-        return records.withColumn("_rk_tf", rk).join(
-            per_record, F.col("_rk_tf") == per_record["_rk"], "left"
-        ).drop("_rk", "_rk_tf")
-
     out = records
     for c in tf_comps:
         col = f"`{c.input_col}`"
-        # count on the SAME string cast as the consolidated (>=3 tf cols)
-        # path above — otherwise adding a third tf comparison would silently
-        # shift tf values for non-string columns when the engine switches
-        # paths (the cast is injective for the primitive types used here)
+        # count on the value's string cast, as the join below matches on it
+        # (the cast is injective for the primitive types used here)
         counts = records.groupBy(F.col(col).cast("string").alias("_v")).agg(
             F.count(F.lit(1)).alias("_n")
         )
@@ -505,7 +471,7 @@ def estimate_u_exact(
             ).collect()[0]
             total = row["_N"] * (row["_N"] - 1) / 2.0
         u1 = max(floor, min(1.0 - floor, (row["_m"] or 0.0) / max(total, 1.0)))
-        out.append(replace_u(c, [1.0 - u1, u1]))
+        out.append(replace(c, u=[1.0 - u1, u1]))
     return out
 
 
@@ -590,16 +556,8 @@ def estimate_u_by_value_pairs(
         tot = row["_tot"] or 1.0
         u = [max(floor, (row[f"_u{k}"] or 0.0) / tot) for k in range(c.n_levels)]
         s = sum(u)
-        out.append(replace_u(c, [x / s for x in u]))
+        out.append(replace(c, u=[x / s for x in u]))
     return out
-
-
-def replace_u(c: Comparison, u: list[float]) -> Comparison:
-    return Comparison(
-        c.name, c.input_col, c.gamma, list(c.m), u,
-        tf_adjustment=c.tf_adjustment, tf_weight=c.tf_weight,
-        is_exact_equality=c.is_exact_equality,
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -689,7 +647,7 @@ def estimate_u(
         total = sum(aggs[f"{c.gamma_col()}_{k}"] for k in range(c.n_levels)) or 1
         u = [max(floor, aggs[f"{c.gamma_col()}_{k}"] / total) for k in range(c.n_levels)]
         s = sum(u)
-        out.append(replace_u(c, [x / s for x in u]))
+        out.append(replace(c, u=[x / s for x in u]))
     return out
 
 
@@ -725,12 +683,7 @@ def estimate_m_u_em(
     """
     import numpy as np
 
-    comps = [
-        Comparison(c.name, c.input_col, c.gamma, list(c.m), list(c.u),
-                   tf_adjustment=c.tf_adjustment, tf_weight=c.tf_weight,
-                   is_exact_equality=c.is_exact_equality)
-        for c in comparisons
-    ]
+    comps = [replace(c, m=list(c.m), u=list(c.u)) for c in comparisons]
     gcols = [c.gamma_col() for c in comps]
     pat_rows = (
         gammas.groupBy(*[F.col(g) for g in gcols])

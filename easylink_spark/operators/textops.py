@@ -55,10 +55,10 @@ def simhash_signatures(
     """(id, simhash) — n-bit SimHash: bit i of the result = 1 iff the sum
     over distinct tokens of (+1 if bit i of hash(token) else -1) > 0.
 
-    Same explode -> simple-aggregates layout as minhash_signatures: one row
-    per (doc, token), n trivially-codegen'd conditional sums with map-side
-    partial aggregation, then the signature assembled from the sums with
-    literal shifts.  Unweighted (term frequency 1 per distinct token).
+    Explode -> simple-aggregates layout: one row per (doc, token), n
+    trivially-codegen'd conditional sums with map-side partial
+    aggregation, then the signature assembled from the sums with literal
+    shifts.  Unweighted (term frequency 1 per distinct token).
     ``token_hash`` defaults to xxhash64; pass :func:`portable_token_hash60`
     (with ``n_bits=60``) for a signature any SQL engine can recompute.
     """
@@ -68,9 +68,8 @@ def simhash_signatures(
     # conditional sums run in the groupBy's MAP-SIDE partial aggregation,
     # whose parallelism is the scan's file-split count — a byte-small
     # corpus lands on 1-2 tasks and serializes ~n_bits x tokens condition
-    # evaluations (same rationale, and same fix, as
-    # blocking.minhash_signatures).  Work scales with rows x tokens, not
-    # bytes, so file-size-based partitioning under-parallelizes it.
+    # evaluations.  Work scales with rows x tokens, not bytes, so
+    # file-size-based partitioning under-parallelizes it.
     par = df.sparkSession.sparkContext.defaultParallelism
     exploded = df.select(
         F.col(id_col).alias("_id"), F.explode(toks).alias("_t")
@@ -230,8 +229,7 @@ def embedding_near_dup_pairs(
     # Spread the hyperplane-dot computation (n_tables x n_planes x dim
     # interpreted lambda steps per row) across the cluster: a byte-small
     # embeddings table is 1-2 file splits, which serialized the measured
-    # bulk of this operator's wall (round 6; same fix as
-    # blocking.minhash_signatures).
+    # bulk of this operator's wall (round 6).
     par = df.sparkSession.sparkContext.defaultParallelism
     base = df.select(
         F.col(id_col).alias("_id"),

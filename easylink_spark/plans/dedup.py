@@ -27,7 +27,7 @@ links_to_clusters` (pipeline_schema_constants/main.py).
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F

@@ -79,6 +79,50 @@ def test_minhash_lsh_finds_near_duplicates(spark):
     assert not any("3" in (p[1], p[3]) for p in got)
 
 
+def test_minhash_signatures_match_an_explode_min_reference(spark):
+    """The per-row signatures equal the explode -> groupBy(min) formulation,
+    row for row, on a synth corpus plus hand-made rows: a text under k
+    tokens, an empty string, repeated shingles and two identical texts."""
+    from easylink_spark.operators.features import (
+        conversation_features,
+        text_views,
+    )
+    from easylink_spark.synth import synth_transcripts
+
+    t = synth_transcripts(spark, n_entities=40, seed=7).drop("entity_id")
+    synth = text_views(conversation_features(t, validate=False)).select(
+        F.col(f"`{K.INPUT_RECORD_DATASET}`"),
+        F.col(f"`{K.INPUT_RECORD_ID}`"),
+        F.col("full_text_norm").alias("text"),
+    )
+    hand = _records(spark, [
+        ("h", "short", "", "two words"),
+        ("h", "empty", "", ""),
+        ("h", "repeat", "", "a b c a b c a b c d"),
+        ("h", "same1", "", "the same text in both rows"),
+        ("h", "same2", "", "the same text in both rows"),
+    ]).drop("key")
+    recs = synth.unionByName(hand).cache()
+    cols = ["_ds", "_id", "_rk"] + [f"h{i}" for i in range(32)]
+    got = B.minhash_signatures(recs, "text").select(*cols).cache()
+    ref = recs.select(
+        F.col(f"`{K.INPUT_RECORD_DATASET}`").alias("_ds"),
+        F.col(f"`{K.INPUT_RECORD_ID}`").alias("_id"),
+        K.record_key(f"`{K.INPUT_RECORD_DATASET}`",
+                     f"`{K.INPUT_RECORD_ID}`").alias("_rk"),
+        F.explode(B._shingles(F.col("text"), 3)).alias("_sh"),
+    ).groupBy("_ds", "_id", "_rk").agg(*[
+        F.min(F.xxhash64(F.lit(i), "_sh")).alias(f"h{i}") for i in range(32)
+    ]).select(*cols)
+    assert got.count() == recs.count()
+    assert got.exceptAll(ref).count() == 0
+    assert ref.exceptAll(got).count() == 0
+    same = got.filter(F.col("_id").isin("same1", "same2")).drop("_id", "_rk")
+    assert same.distinct().count() == 1
+    got.unpersist()
+    recs.unpersist()
+
+
 def test_sorted_neighborhood(spark):
     recs = _records(
         spark,

@@ -126,13 +126,34 @@ def test_operator_task_count_reaches_the_exchange(spark, records):
     share this conf."""
     width = int(spark.conf.get("spark.sql.shuffle.partitions"))
     sigs = B.minhash_signatures(records, "full_text_norm", partitions=3)
-    assert re.search(r"hashpartitioning\(_k8#\w+, 3\)", _plan(sigs))
+    assert re.search(r"hashpartitioning\(_rk#\w+, 3\)", _plan(sigs))
     pairs = B.block_on_key(records, F.col("first_prefix"))
     n = width + 4
     plan = _plan(S.score_pairs(pairs, records, validate=False, partitions=n))
     by_num = re.findall(r"hashpartitioning\([^()]*, (\d+)\), REPARTITION_BY_NUM",
                         plan)
     assert by_num == [str(n)] * 4, (width, by_num)
+
+
+def test_minhash_signatures_are_one_projection_per_record(spark, records):
+    """A per-record min needs no other record's rows: after execution the
+    signature plan holds the repartition's one exchange and projections, no
+    aggregate, join or Generate (explode) node.  The shingle array is built
+    once, in a Project below the per-hash ``array_min`` columns."""
+    sigs = B.minhash_signatures(records, "full_text_norm", partitions=3)
+    sigs.collect()
+    final = _plan(sigs).split("== Initial Plan ==")[0]
+    lines = final.splitlines()
+    exchanges = [ln for ln in lines if re.search(r"\bExchange ", ln)]
+    assert len(exchanges) == 1, exchanges
+    assert re.search(r"hashpartitioning\(_rk#\w+, 3\)", exchanges[0])
+    for node in ("Aggregate", "Join", "Generate"):
+        assert node not in final, node
+    assert final.count("array_distinct") == 1
+    shingles = next(i for i, ln in enumerate(lines) if "array_distinct" in ln)
+    hashes = next(i for i, ln in enumerate(lines) if "array_min" in ln)
+    assert hashes < shingles
+    assert "array_min" not in lines[shingles]
 
 
 def test_no_operator_reads_the_shuffle_width():

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import math
+from collections import Counter
 
 from pyspark.sql import functions as F
 
@@ -129,6 +130,25 @@ def test_tf_adjusted_weights_common_vs_rare(spark):
     # exact arithmetic: w = log2(prior odds)=0 + log2(m / tf)
     assert abs(w["1"] - math.log2(0.9 / (4 / 6))) < 1e-9
     assert abs(w["5"] - math.log2(0.9 / (2 / 6))) < 1e-9
+
+    # three tf comparisons, one on an int column: each tf_<name> column is
+    # count(value) / N over the records
+    comps3 = [
+        S.Comparison(name, name, S._leveled(C.exact_match, [0.5]),
+                     m=[0.1, 0.9], u=[0.9, 0.1], tf_adjustment=True)
+        for name in ("name", "parity", "band")
+    ]
+    rid = F.col(f"`{K.INPUT_RECORD_ID}`")
+    recs3 = recs.withColumns({
+        "parity": rid.cast("int") % 2,
+        "band": F.when(rid == "1", "a").otherwise("b"),
+    })
+    rows = S.with_term_frequencies(recs3, comps3).collect()
+    assert len(rows) == 6
+    for c in comps3:
+        counts = Counter(r[c.input_col] for r in rows)
+        for r in rows:
+            assert r[c.tf_col()] == counts[r[c.input_col]] / 6, (c.name, r)
 
 
 def test_two_phase_scoring_identical_links(spark):
