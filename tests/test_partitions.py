@@ -19,9 +19,12 @@ from easylink_spark.synth import synth_transcripts
 
 _PROBE = """
 from easylink_spark.session import get_spark
-s = get_spark("width_probe")
+# no class-data-sharing archive: the probe must not build the user's cache
+s = get_spark("width_probe",
+              extra_conf={"spark.driver.defaultJavaOptions": "-Xshare:auto"})
 print("ONE_WAVE", s.conf.get("spark.sql.shuffle.partitions"),
-      s.sparkContext.defaultParallelism)
+      s.sparkContext.defaultParallelism,
+      s.conf.get("spark.sql.codegen.cache.maxEntries"))
 s.stop()
 s = get_spark("width_probe", extra_conf={"spark.sql.shuffle.partitions": "3"})
 print("CHOSEN", s.conf.get("spark.sql.shuffle.partitions"))
@@ -45,8 +48,9 @@ def test_session_without_cores_matches_width_to_parallelism():
     assert out.returncode == 0, out.stderr[-2000:]
     lines = {ln.split()[0]: ln.split()[1:] for ln in out.stdout.splitlines()
              if ln.startswith(("ONE_WAVE", "CHOSEN"))}
-    width, parallelism = lines["ONE_WAVE"]
+    width, parallelism, codegen_cache = lines["ONE_WAVE"]
     assert width == parallelism
+    assert codegen_cache == "1000"
     assert lines["CHOSEN"] == ["3"]
 
 
