@@ -45,7 +45,6 @@ RIGHT_DATASET = "Right Record Dataset"
 RIGHT_ID = "Right Record ID"
 PROBABILITY = "Probability"
 CLUSTER_ID = "Cluster ID"
-BLOCK_ID = "block_id"  # our addition: blocks live in one DataFrame, not dirs
 
 PAIR_COLS = [LEFT_DATASET, LEFT_ID, RIGHT_DATASET, RIGHT_ID]
 RECORD_KEY_COLS = [INPUT_RECORD_DATASET, INPUT_RECORD_ID]

@@ -35,7 +35,6 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from easylink_spark.contracts import (
-    BLOCK_ID,
     INPUT_RECORD_DATASET,
     INPUT_RECORD_ID,
     LEFT_DATASET,
@@ -441,13 +440,4 @@ def union_blocking_rules(rule_pairs: list[DataFrame]) -> DataFrame:
     return (
         allp.groupBy(*[F.col(f"`{c}`") for c in PAIR_COLS])
         .agg(F.min(MATCH_KEY).alias(MATCH_KEY))
-    )
-
-
-def with_block_id(pairs: DataFrame) -> DataFrame:
-    """Stamp a deterministic block id (reference's blocks-directory analog:
-    one DataFrame with a block column instead of block_*/ subdirs)."""
-    return pairs.withColumn(
-        BLOCK_ID, F.pmod(F.xxhash64(F.col(f"`{LEFT_DATASET}`"),
-                                    F.col(f"`{LEFT_ID}`")), F.lit(4096))
     )

@@ -24,6 +24,7 @@ from easylink_spark import contracts as K
 from easylink_spark.operators import blocking as B
 from easylink_spark.operators import clustering as G
 from easylink_spark.operators import scoring as S
+from easylink_spark.operators import textops as T
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 REGISTRY: dict[str, tuple[QueryFn, str | None]] = {}
@@ -522,10 +523,7 @@ def connected_components_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents")
-    return docs.groupBy(F.md5(F.col("text")).alias("text_hash")).agg(
-        F.count(F.lit(1)).alias("n_docs"), F.min("doc_id").alias("canonical_id")
-    )
+    return T.exact_dedup_keys(_t(spark, sf_dir, "documents"), "text", "doc_id")
 
 
 @q(
@@ -605,26 +603,8 @@ def ngram_jaccard_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Round-6: per-row array_min over the shingle-hash array instead of
-    # explode + groupBy(min) (guide §2.4 "remove shuffles outright"): the
-    # min of one document's shingle hashes needs no data movement, so the
-    # explode (rows x shingles intermediate) and the aggregation exchange
-    # both disappear — the plan is a single scan+project.  Identical
-    # values: array_min over the same md5 strings = MIN(h) GROUP BY doc
-    # (same UTF8 ordering, no nulls).  1.7 s -> 0.2 s at sf0.1, 1 -> 0
-    # Exchanges.
-    docs = _t(spark, sf_dir, "documents")
-    toks = F.split(F.col("text"), " ")
-    n = F.greatest(F.size(toks) - 4, F.lit(1))
-    return docs.select(
-        "doc_id",
-        F.array_min(
-            F.transform(
-                F.sequence(F.lit(1), n),
-                lambda i: F.md5(F.concat_ws(" ", F.slice(toks, i, 5))),
-            )
-        ).alias("fingerprint"),
-    )
+    return T.fingerprint_minhash(_t(spark, sf_dir, "documents"), "text",
+                                 "doc_id")
 
 
 # ---------------------------------------------------------------------------
@@ -760,14 +740,12 @@ def events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Language ID + quality scoring (textops) with SQL oracles
 # ---------------------------------------------------------------------------
 def _lang_sql() -> str:
-    from easylink_spark.operators.textops import _LANG_PROFILES
-
     cnt = {
         lang: (
             "len(list_filter(str_split(lower(text), ' '), "
             f"x -> x IN ({', '.join(repr(w) for w in words)})))"
         )
-        for lang, words in sorted(_LANG_PROFILES.items())
+        for lang, words in sorted(T._LANG_PROFILES.items())
     }
     langs = sorted(cnt)
     best = "GREATEST(" + ", ".join(cnt[l] for l in langs) + ")"
@@ -781,10 +759,8 @@ def _lang_sql() -> str:
 
 @q("language_id", _lang_sql())
 def language_id_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from easylink_spark.operators.textops import language_id
-
     docs = _t(spark, sf_dir, "documents")
-    return docs.select("doc_id", language_id(F.col("text")).alias("lang_pred"))
+    return docs.select("doc_id", T.language_id(F.col("text")).alias("lang_pred"))
 
 
 @q(
@@ -802,10 +778,8 @@ def language_id_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def quality_score_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from easylink_spark.operators.textops import quality_features
-
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    out = quality_features(docs, "text")
+    out = T.quality_features(docs, "text")
     return out.select("doc_id", "n_tokens", "n_chars", "punct_ratio",
                       "quality_ok")
 
@@ -820,10 +794,8 @@ def quality_score_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def token_count_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from easylink_spark.operators.textops import token_count
-
     docs = _t(spark, sf_dir, "documents")
-    tc = token_count(F.col("text"))
+    tc = T.token_count(F.col("text"))
     return docs.select("doc_id", tc["ws_tokens"].alias("ws_tokens"),
                        tc["bpe_est_tokens"].alias("bpe_est_tokens"))
 
@@ -865,15 +837,10 @@ def _simhash_sql(n_bits: int = 60, max_hamming: int = 3) -> str:
 
 @q("simhash_near_dup", _simhash_sql())
 def simhash_near_dup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from easylink_spark.operators.textops import (
-        portable_token_hash60,
-        simhash_near_dup_pairs,
-    )
-
     docs = _t(spark, sf_dir, "documents")
-    pairs = simhash_near_dup_pairs(
+    pairs = T.simhash_near_dup_pairs(
         docs, "text", "doc_id", max_hamming=3, bands=4, n_bits=60,
-        token_hash=portable_token_hash60,
+        token_hash=T.portable_token_hash60,
     )
     return pairs.select(
         "left_id", "right_id", F.col("hamming").cast("int").alias("hamming")
@@ -999,8 +966,6 @@ def embedding_near_dup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly the >= 0.98 pairs (recall 1 here: a scaled copy has identical
     hyperplane signs, and random 64-dim pairs sit ~N(0, 1/8) away from the
     0.98 cutoff)."""
-    from easylink_spark.operators.textops import embedding_near_dup_pairs
-
     emb = _t(spark, sf_dir, "embeddings")
     planted = (
         emb.filter("vec_id < 20")
@@ -1010,8 +975,8 @@ def embedding_near_dup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     both = emb.select("vec_id", "embedding").unionByName(planted)
-    pairs = embedding_near_dup_pairs(both, "embedding", "vec_id", dim=64,
-                                     min_cosine=0.98)
+    pairs = T.embedding_near_dup_pairs(both, "embedding", "vec_id", dim=64,
+                                       min_cosine=0.98)
     return pairs.select(
         F.col("left_id").cast("long").alias("left_id"),
         F.col("right_id").cast("long").alias("right_id"),

@@ -42,9 +42,12 @@ launcher reads no template, so nothing changes.
   ``<key>.jsa`` only if its JVM exited with code 0: a truncated archive
   crashes the JVM that maps it.  The build takes ~25 s, once per host, after
   the first process's own work is done; its output goes nowhere.
+- Rejected: the JVM starts normally from an archive it cannot map (a
+  garbage file).  The process reads the JVM's ``UseSharedSpaces`` flag
+  after the launch; if it is off, it deletes ``<key>.jsa`` and builds a new
+  one at exit, as on a miss.
 - Fallback: an unwritable cache, a non-empty conf dir or any of the inputs
-  above give a normal start; so does an archive the JVM rejects (a garbage
-  file).
+  above give a normal start.
 
 The JVM's CDS log is off, so a rejected archive prints nothing to stdout.
 Delete the cache directory to clear the archive; the next process rebuilds
@@ -131,6 +134,16 @@ def _cds_paths(extra_conf: dict[str, str]) -> tuple[str, str] | None:
     if not os.path.isfile(archive) and not os.access(cache, os.W_OK):
         return None
     return archive, empty_conf
+
+
+def _maps_archive(spark: SparkSession) -> bool:
+    """Whether the driver JVM runs from a class-data-sharing archive; it
+    starts normally, and silently, from one it rejects."""
+    jvm = spark.sparkContext._jvm
+    bean = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
+        jvm.java.lang.Class.forName(
+            "com.sun.management.HotSpotDiagnosticMXBean"))
+    return bean.getVMOption("UseSharedSpaces").getValue() == "true"
 
 
 def _stop_jvm(gateway) -> int | None:
@@ -298,7 +311,8 @@ def get_spark(
     for k, v in extra_conf.items():
         builder = builder.config(k, v)
     cds = _cds_paths(extra_conf)
-    if cds is not None and os.path.isfile(cds[0]):
+    hit = cds is not None and os.path.isfile(cds[0])
+    if hit:
         archive, empty_conf = cds
         builder = builder.config(
             "spark.driver.defaultJavaOptions",
@@ -314,8 +328,13 @@ def get_spark(
                 os.environ["SPARK_CONF_DIR"] = conf_env
     else:
         spark = builder.getOrCreate()
-        if cds is not None:
-            atexit.register(_build_at_exit, SparkContext._gateway, *cds)
+    if cds is not None and not (hit and _maps_archive(spark)):
+        if hit:  # rejected: drop it so that this process's exit rebuilds it
+            try:
+                os.remove(cds[0])
+            except OSError:
+                pass
+        atexit.register(_build_at_exit, SparkContext._gateway, *cds)
     # local[*] or a spark-submit master: match the width to the parallelism
     # unless the submitter chose one (Spark's own default is 200)
     if not n_shuffle and not spark.sparkContext.getConf().contains(

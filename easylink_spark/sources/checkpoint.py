@@ -203,8 +203,6 @@ class StageRunner:
             "by_reference": str(path),
             "rows": n_rows,
             "files": file_stats,
-            "partitions": [],
-            "data_hash": None,
             "columns": None,
             "wall_sec": round(time.time() - t0, 3),
             "content_hash": _stable_hash(
@@ -321,17 +319,13 @@ class StageRunner:
             n_rows, file_stats = _parquet_footer_stats(self._table_path(name))
         # content_hash folds in per-file row counts + byte sizes, so a data
         # change at equal total row count still invalidates downstream
-        # lineage in almost all cases.  "partitions" and "data_hash" stay in
-        # the manifest (empty / None) so its format and content_hash are
-        # unchanged.
+        # lineage in almost all cases.
         manifest = {
             "stage": name,
             "config_hash": self.config_hash,
             "lineage": lineage,
             "rows": n_rows,
             "files": file_stats,
-            "partitions": [],
-            "data_hash": None,
             "columns": df.columns,
             "wall_sec": round(time.time() - t0, 3),
             # stage walls overlap; this is the slice of wall_sec the
@@ -341,7 +335,6 @@ class StageRunner:
                 {
                     "rows": n_rows,
                     "files": file_stats,
-                    "data_hash": None,
                     "config": self.config_hash,
                     "lineage": lineage,
                 }

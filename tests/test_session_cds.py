@@ -21,9 +21,10 @@ ROOT = str(pathlib.Path(__file__).resolve().parents[1])
 # one job, then what the launch chose; the test reads the tagged lines
 _JOB = """
 import os
-from easylink_spark.session import get_spark
+from easylink_spark.session import _maps_archive, get_spark
 s = get_spark("cds_probe", cores=1)
 conf = s.sparkContext.getConf()
+print("SHARED", _maps_archive(s))
 print("OPTS", conf.get("spark.driver.defaultJavaOptions", "-"))
 print("CONF_DIR", os.environ.get("SPARK_CONF_DIR", "-"))
 print("PROBE", conf.get("spark.easylink.probe", "-"))
@@ -99,20 +100,31 @@ def test_cold_process_builds_archive_warm_process_maps_it(tmp_path):
     assert cold["CONF_DIR"] == "-"
     assert {p.name for p in cds.iterdir()} == {"conf", f"{key}.jsa"}
     assert not list((cds / "conf").iterdir())
+    built = (cds / f"{key}.jsa").stat()
     warm = _run(_JOB, cache)
     assert warm["OPTS"].startswith(f"-XX:SharedArchiveFile={cds}/{key}.jsa ")
+    assert warm["SHARED"] == "True"
     assert warm["CONF_DIR"] == "-"  # restored after the launch
     assert {p.name for p in cds.iterdir()} == {"conf", f"{key}.jsa"}
+    kept = (cds / f"{key}.jsa").stat()  # a valid hit keeps its archive
+    assert (kept.st_ino, kept.st_mtime_ns) == (built.st_ino, built.st_mtime_ns)
 
 
 @needs_cds
 def test_garbage_archive_or_unwritable_cache_starts_normally(tmp_path):
+    """A rejected archive gives a normal start and is gone after the
+    process exits, or replaced by one the next process maps."""
     cache = tmp_path / "cache"
     cds = _cds(cache)
     cds.mkdir(parents=True)
     key = session._cds_key(_find_spark_home())
-    (cds / f"{key}.jsa").write_bytes(os.urandom(1 << 20))
-    assert "-XX:SharedArchiveFile=" in _run(_JOB, cache)["OPTS"]
+    archive = cds / f"{key}.jsa"
+    archive.write_bytes(os.urandom(1 << 20))
+    out = _run(_JOB, cache)
+    assert "-XX:SharedArchiveFile=" in out["OPTS"]
+    assert out["SHARED"] == "False"
+    if archive.exists():
+        assert _run(_JOB, cache)["SHARED"] == "True"
     # a regular file where the cache directory should be
     blocked = tmp_path / "not_a_dir"
     blocked.write_text("")

@@ -1,4 +1,4 @@
-"""Text-corpus operator tests (dedup family, text analysis, multimodal)."""
+"""Text-corpus operator tests (dedup family, text analysis)."""
 
 from __future__ import annotations
 
@@ -105,129 +105,9 @@ def test_token_count(spark):
 def test_fingerprint_stability(spark):
     df = _docs(spark, [(1, "a b c d e f g h"), (2, "a b c d e f g h"),
                        (3, "totally different words here now ok yes")])
-    fp = {r["_id"]: r["fingerprint"]
+    fp = {r["doc_id"]: r["fingerprint"]
           for r in T.fingerprint_minhash(df, "text", "doc_id").collect()}
     assert fp[1] == fp[2] != fp[3]
-
-
-def test_multimodal_plumbing(spark):
-    from easylink_spark.operators import multimodal as M
-
-    rows = [
-        ("m1", "image", bytearray(b"imgbytes1"), ("image/png", 64, 48, None, None)),
-        ("m2", "audio", bytearray(b"audiobytes"), ("audio/wav", None, None, 16000, 2000)),
-        ("m3", "video", bytearray(b"videobytes"), ("video/mp4", 320, 240, None, 2500)),
-    ]
-    media = spark.createDataFrame(rows, M.MEDIA_SCHEMA)
-    feats = M.extract_features(media).collect()
-    assert len(feats) == 3
-    by_id = {r["media_id"]: r for r in feats}
-    assert len(by_id["m1"]["feature"]) == M.FEATURE_DIM
-    assert by_id["m1"]["n_bytes"] == 9
-    # deterministic: same payload -> same features
-    feats2 = {r["media_id"]: r["feature"]
-              for r in M.extract_features(media).collect()}
-    assert feats2["m2"] == by_id["m2"]["feature"]
-
-    frames = M.sample_video_frames(media, every_ms=1000).collect()
-    assert {r["frame_ts_ms"] for r in frames} == {0, 1000, 2000}
-
-    import pytest
-
-    # video real-decode genuinely needs ffmpeg: raised from the executor
-    with pytest.raises(Exception, match="NotImplementedError"):
-        M.extract_features(
-            media.filter("kind = 'video'"), decode="real"
-        ).collect()
-
-
-def test_sample_video_frames_matches_explode_semantics(spark):
-    """Round-6: the frame expansion moved inside the mapInPandas kernel so
-    the video payload crosses the Arrow boundary once per VIDEO instead of
-    once per FRAME.  Pin the output against the former explode formulation
-    (same timestamps incl. the null-duration -> single-frame case, same
-    per-frame digests)."""
-    import hashlib
-
-    from easylink_spark.operators import multimodal as M
-
-    rows = [
-        ("v1", "video", bytearray(b"payload-one"), ("video/mp4", 1, 1, None, 3500)),
-        ("v2", "video", bytearray(b"payload-two"), ("video/mp4", 1, 1, None, 3000)),
-        ("v3", "video", bytearray(b"payload-nul"), ("video/mp4", 1, 1, None, None)),
-        ("x1", "image", bytearray(b"not-a-video"), ("image/png", 1, 1, None, 9999)),
-    ]
-    media = spark.createDataFrame(rows, M.MEDIA_SCHEMA)
-    got = sorted(
-        (r["media_id"], r["frame_ts_ms"], bytes(r["frame"]))
-        for r in M.sample_video_frames(media, every_ms=1000).collect()
-    )
-    # former plan: explode(sequence(0, greatest(duration_ms - 1, 0), step))
-    # per video row (greatest ignores the null duration -> [0]), then
-    # sha256(payload + ts-le64) per exploded row
-    expected = []
-    for mid, payload, dur in [("v1", b"payload-one", 3500),
-                              ("v2", b"payload-two", 3000),
-                              ("v3", b"payload-nul", None)]:
-        stop = max(dur - 1, 0) if dur is not None else 0
-        for t in range(0, stop + 1, 1000):
-            expected.append((mid, t, hashlib.sha256(
-                payload + t.to_bytes(8, "little")).digest()))
-    assert got == sorted(expected)
-
-
-def _wav_bytes(freq=440.0, rate=8000, sec=0.25, amp=0.5):
-    import io
-    import wave
-
-    import numpy as np
-
-    t = np.arange(int(rate * sec)) / rate
-    x = (amp * np.sin(2 * np.pi * freq * t) * 32767).astype("<i2")
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as w:
-        w.setnchannels(1)
-        w.setsampwidth(2)
-        w.setframerate(rate)
-        w.writeframes(x.tobytes())
-    return buf.getvalue()
-
-
-def _ppm_bytes(w=12, h=9):
-    import numpy as np
-
-    px = (np.arange(w * h * 3) % 256).astype("u1")
-    return b"P6\n%d %d\n255\n" % (w, h) + px.tobytes()
-
-
-def test_multimodal_real_decode_end_to_end(spark):
-    """decode="real" runs the pure-Python WAV + PPM codecs through the
-    distributed mapInPandas kernel: generated fixtures in, physically
-    meaningful features out (audio rms/duration, image dims/channel
-    means) — the plumbing flag is gone for these kinds."""
-    import numpy as np
-
-    from easylink_spark.operators import multimodal as M
-
-    wav, ppm = _wav_bytes(), _ppm_bytes()
-    rows = [
-        ("a1", "audio", bytearray(wav), ("audio/wav", None, None, 8000, 250)),
-        ("i1", "image", bytearray(ppm), ("image/x-ppm", 12, 9, None, None)),
-    ]
-    media = spark.createDataFrame(rows, M.MEDIA_SCHEMA)
-    by_id = {r["media_id"]: r["feature"]
-             for r in M.extract_features(media, decode="real").collect()}
-    # audio: [duration_s, rate_khz, rms, peak, zcr, dc] + fft bands
-    dur, khz, rms = by_id["a1"][0], by_id["a1"][1], by_id["a1"][2]
-    assert abs(dur - 0.25) < 1e-6 and khz == 8.0
-    assert abs(rms - 0.5 / np.sqrt(2)) < 0.01  # 0.5-amp sine
-    # image: [width, height, mean r,g,b, std r,g,b] + gray histogram
-    assert by_id["i1"][0] == 12.0 and by_id["i1"][1] == 9.0
-    assert len(by_id["i1"]) == M.FEATURE_DIM
-
-    # real resize through the kernel: P6 re-encoded at the target dims
-    out = M.resize_images(media, 4, 3).filter("media_id = 'i1'").collect()[0]
-    assert M.decode_ppm(bytes(out["payload"])).shape == (3, 4, 3)
 
 
 def test_portable_simhash_matches_python_oracle(spark):
