@@ -241,12 +241,3 @@ def validate_ids_to_remove(df: DataFrame) -> DataFrame:
     assert_unique(df, [INPUT_RECORD_ID], "ids_to_remove")
     return df
 
-
-VALIDATORS = {
-    "dataset": validate_dataset,
-    "records": validate_records,
-    "pairs": validate_pairs,
-    "links": validate_links,
-    "clusters": validate_clusters,
-    "ids_to_remove": validate_ids_to_remove,
-}

@@ -194,16 +194,18 @@ def attach_pair_attributes(
     ``<col>_l`` / ``<col>_r`` attribute columns (reference J3:
     compute_comparison_vector_values_from_id_pairs joins, lifecycle §3.3).
 
-    ``partitions`` hash-partitions both sides of both joins to that many
-    tasks, so the comparators computed over the result run in that many
-    tasks; ``None`` leaves the joins to the session's shuffle settings and
-    AQE.  Spark raises a count below ``spark.sql.shuffle.partitions`` to
-    it: a join whose sides are all shuffles takes the shuffle width as its
-    minimum."""
+    ``partitions`` (``None``: the default parallelism) hash-partitions both
+    sides of both joins to that many tasks, so the comparators computed
+    over the result run in that many tasks.  Comparator cost scales with
+    pairs x text length, not bytes; a byte-small pairs table would
+    otherwise land on one input split, or be coalesced by AQE, and score
+    on a single task.  Spark raises a count below
+    ``spark.sql.shuffle.partitions`` to it: a join whose sides are all
+    shuffles takes the shuffle width as its minimum."""
+    par = partitions or pairs.sparkSession.sparkContext.defaultParallelism
+
     def by(df: DataFrame, ds: str, rid: str) -> DataFrame:
-        if partitions is None:
-            return df
-        return df.repartition(partitions, F.col(f"`{ds}`"), F.col(f"`{rid}`"))
+        return df.repartition(par, F.col(f"`{ds}`"), F.col(f"`{rid}`"))
 
     def side(suffix: str) -> DataFrame:
         # SHUFFLE_HASH: the records table carries fat text/array attribute
@@ -240,6 +242,26 @@ def compute_gammas(
             c.gamma(F.col(f"`{c.input_col}_l`"), F.col(f"`{c.input_col}_r`")),
         )
     return out
+
+
+def comparison_vectors(
+    pairs: DataFrame,
+    records: DataFrame,
+    comparisons: list[Comparison],
+    partitions: int | None = None,
+) -> DataFrame:
+    """Pairs -> comparison-vector table: the pair columns, ``<col>_l`` /
+    ``<col>_r`` for every comparison's input column and ``tf_<name>``
+    column, and one ``gamma_<name>`` per comparison (reference lifecycle
+    steps 1-2).  Term frequencies attach to the records BEFORE the pair
+    join (splink's df_concat_with_tf), so the fat pairs table never joins
+    a tf table.  ``partitions`` as in :func:`attach_pair_attributes`."""
+    cols = sorted({c.input_col for c in comparisons})
+    cols += sorted(c.tf_col() for c in comparisons if c.tf_adjustment)
+    attrs = attach_pair_attributes(
+        pairs, with_term_frequencies(records, comparisons), cols, partitions
+    )
+    return compute_gammas(attrs, comparisons)
 
 
 # ---------------------------------------------------------------------------
@@ -284,32 +306,22 @@ def score_pairs(
     prior: float = 0.01,
     threshold: float = 0.5,
     validate: bool = True,
-    expensive_cols: set[str] | list[set[str]] | None = None,
+    expensive_cols: set[str] | None = None,
     partitions: int | None = None,
 ) -> DataFrame:
-    """End-to-end scoring: attach attributes, gammas, FS probability,
-    threshold filter (P2) -> links contract.
+    """End-to-end scoring: comparison vectors, FS probability, threshold
+    filter (P2) -> links contract.
 
     ``partitions`` is the scoring task count (``None``: the default
     parallelism).  The links do not depend on it.
 
-    ``expensive_cols`` enables MULTI-PHASE scoring (splink's "filter on
+    ``expensive_cols`` enables TWO-PHASE scoring (splink's "filter on
     match weight before expensive comparisons" idea): phase 1 attaches only
-    the cheap attribute columns and computes their gammas; a pair is pruned
-    when even the MAXIMUM possible weight from the not-yet-scored
+    the other comparisons' attribute columns and computes their gammas; a
+    pair is pruned when even the MAXIMUM possible weight of the deferred
     comparisons cannot lift it over the threshold — a sound bound, so the
     surviving link set is byte-identical to single-phase scoring.  Only
     survivors join the deferred columns and pay their comparators.
-
-    A ``set`` defers all named columns in one second phase.  A ``list`` of
-    sets defers them as an ORDERED CASCADE, cheapest first: each phase
-    re-tightens the bound with the weights it just computed before the next
-    (more expensive) phase joins its columns.  With pure-Python comparators
-    in the middle tier (e.g. Jaro-Winkler without a native fast path) and
-    an O(L^2) alignment comparator at the end, the cascade prunes most
-    pairs on pure-JVM expressions, sends only plausible ones across the
-    Arrow boundary, and reserves the alignment work for pairs that survive
-    both — at web scale most candidate pairs die in the first tier.
 
     ``validate=False`` skips the in-plan contract check — callers that
     checkpoint the result pass ``validate_links`` as the stage validator,
@@ -318,91 +330,43 @@ def score_pairs(
     plan).
     """
     comparisons = comparisons or default_transcript_comparisons()
-    if any(c.tf_adjustment for c in comparisons):
-        records = with_term_frequencies(records, comparisons)
-    # Comparator cost scales with pairs x text length, not bytes; a byte-small
-    # pairs table would otherwise land on one input split, or be coalesced
-    # by AQE, and score on a single task.  Every attribute join runs at the
-    # caller's task count.
-    par = partitions or pairs.sparkSession.sparkContext.defaultParallelism
-
-    if isinstance(expensive_cols, (set, frozenset)):
-        phase_cols: list[set[str]] = [set(expensive_cols)]
-    else:
-        phase_cols = [set(s) for s in (expensive_cols or [])]
-    deferred_all = set().union(*phase_cols) if phase_cols else set()
-    cheap = [c for c in comparisons if c.input_col not in deferred_all]
-    deferred = [
-        p
-        for p in ([c for c in comparisons if c.input_col in s] for s in phase_cols)
-        if p
-    ]
-
-    def cols_of(comps: list[Comparison]) -> list[str]:
-        out = sorted({c.input_col for c in comps})
-        out += sorted(c.tf_col() for c in comps if c.tf_adjustment)
-        return out
+    deferred = [c for c in comparisons if c.input_col in (expensive_cols or ())]
+    cheap = [c for c in comparisons if c.input_col not in (expensive_cols or ())]
 
     if deferred and cheap:
         # The pruning bound below assumes a deferred comparison's weight is
         # capped by max_k log2(m_k/u_k); a tf-adjusted deferred comparison
         # can exceed it by tf_weight*log2(u_k/tf(v)) — unbounded for rare
         # values — which would break the byte-identical guarantee.
-        if any(c.tf_adjustment for p in deferred for c in p):
+        if any(c.tf_adjustment for c in deferred):
             raise ValueError(
-                "multi-phase scoring (expensive_cols) does not support "
+                "two-phase scoring (expensive_cols) does not support "
                 "tf-adjusted deferred comparisons; score them single-phase"
             )
         # threshold in weight space: p >= t  <=>  w >= log2(t/(1-t))
         w_t = math.log2(threshold / (1.0 - threshold))
-
-        def max_weight(comps: list[Comparison]) -> float:
-            # 0.0 included: the null level (gamma -1) contributes zero
-            # weight, which is the max when every level weight is negative
-            return sum(
-                max([math.log2(m / u) for m, u in zip(c.m, c.u)] + [0.0])
-                for c in comps
-            )
-
-        scored = list(cheap)
-        cur = compute_gammas(
-            attach_pair_attributes(pairs, records, cols_of(cheap), par), cheap
+        # best case of the deferred comparisons; 0.0 included: the null
+        # level (gamma -1) contributes zero weight, which is the max when
+        # every level weight is negative
+        rest = sum(
+            max([math.log2(m / u) for m, u in zip(c.m, c.u)] + [0.0])
+            for c in deferred
         )
-        for i, phase in enumerate(deferred):
-            # prune on the scored-so-far weight + the best case of EVERY
-            # not-yet-scored comparison (this phase's and later phases')
-            rest = max_weight([c for p in deferred[i:] for c in p])
-            bound = fs_probability(cur, scored, prior).withColumnRenamed(
-                "match_weight", "_w_partial"
-            )
-            survivors = bound.filter(
-                F.col("_w_partial") + F.lit(rest) >= F.lit(w_t)
-            )
-            cur = compute_gammas(
-                attach_pair_attributes(
-                    survivors.select(
-                        *[F.col(f"`{c}`") for c in PAIR_COLS],
-                        *[F.col(c.gamma_col()) for c in scored],
-                        # tf columns of scored tf-adjusted comparisons feed
-                        # the final fs_probability and must survive the
-                        # phase boundary
-                        *[
-                            F.col(f"`{c.tf_col()}_l`")
-                            for c in scored
-                            if c.tf_adjustment
-                        ],
-                    ),
-                    records,
-                    cols_of(phase),
-                    par,
-                ),
-                phase,
-            )
-            scored += phase
-        gammas = cur
+        partial = fs_probability(
+            comparison_vectors(pairs, records, cheap, partitions), cheap, prior
+        )
+        survivors = partial.filter(
+            F.col("match_weight") + F.lit(rest) >= F.lit(w_t)
+        ).select(
+            *[F.col(f"`{c}`") for c in PAIR_COLS],
+            *[F.col(c.gamma_col()) for c in cheap],
+            # the scored tf-adjusted comparisons' tf columns feed the final
+            # fs_probability
+            *[F.col(f"`{c.tf_col()}_l`") for c in cheap if c.tf_adjustment],
+        )
+        gammas = comparison_vectors(survivors, records, deferred, partitions)
     else:
-        attrs = attach_pair_attributes(pairs, records, cols_of(comparisons), par)
-        gammas = compute_gammas(attrs, comparisons)
+        gammas = comparison_vectors(pairs, records, comparisons, partitions)
     scored = fs_probability(gammas, comparisons, prior)
     links = scored.filter(F.col(PROBABILITY) >= F.lit(threshold)).select(
         *[F.col(f"`{c}`") for c in PAIR_COLS], F.col(PROBABILITY)
@@ -410,6 +374,16 @@ def score_pairs(
     if validate:
         return validate_links(links)
     return links
+
+
+def _normalized(counts: list[float], floor: float) -> list[float]:
+    """Per-level counts -> probabilities: each share floored at ``floor``
+    (no level may get probability 0: its log weight would be infinite),
+    then renormalized to sum 1."""
+    tot = sum(counts) or 1.0
+    p = [max(floor, x / tot) for x in counts]
+    s = sum(p)
+    return [x / s for x in p]
 
 
 # ---------------------------------------------------------------------------
@@ -432,8 +406,8 @@ def estimate_u_exact(
 
     One groupBy per column over (value, dataset) — count-table scale, never
     pairs — deterministic at any parallelism, unlike sampled estimates whose
-    noise can flip threshold-marginal patterns.  Non-exact comparisons pass
-    through unchanged (estimate them with :func:`estimate_u`).  Reference:
+    noise can flip threshold-marginal patterns.  Every other comparison
+    gets its exact u from :func:`estimate_u_by_value_pairs`.  Reference:
     splink estimates the same quantity by random sampling
     (splink_evaluating_pairs.py:67); the closed form is the scale-correct
     replacement for equality levels.
@@ -441,7 +415,7 @@ def estimate_u_exact(
     out = []
     for c in comparisons:
         if not c.is_exact_equality:
-            out.append(c)
+            out += estimate_u_by_value_pairs(records, [c], link_only, floor)
             continue
         if c.n_levels != 2:
             raise ValueError(
@@ -553,10 +527,8 @@ def estimate_u_by_value_pairs(
                 for k in range(c.n_levels)
             ],
         ).collect()[0]
-        tot = row["_tot"] or 1.0
-        u = [max(floor, (row[f"_u{k}"] or 0.0) / tot) for k in range(c.n_levels)]
-        s = sum(u)
-        out.append(replace(c, u=[x / s for x in u]))
+        u = [row[f"_u{k}"] or 0.0 for k in range(c.n_levels)]
+        out.append(replace(c, u=_normalized(u, floor)))
     return out
 
 
@@ -644,10 +616,8 @@ def estimate_u(
     for c in comparisons:
         # per-comparison denominator: non-null sampled pairs only (rows at
         # the null level -1 fall in no k-bucket and must not dilute u)
-        total = sum(aggs[f"{c.gamma_col()}_{k}"] for k in range(c.n_levels)) or 1
-        u = [max(floor, aggs[f"{c.gamma_col()}_{k}"] / total) for k in range(c.n_levels)]
-        s = sum(u)
-        out.append(replace(c, u=[x / s for x in u]))
+        u = [aggs[f"{c.gamma_col()}_{k}"] for k in range(c.n_levels)]
+        out.append(replace(c, u=_normalized(u, floor)))
     return out
 
 
@@ -716,17 +686,11 @@ def estimate_m_u_em(
             g = gv[c.gamma_col()]
             m_counts = [float((p * n)[g == k].sum()) for k in range(c.n_levels)]
             u_counts = [float(((1 - p) * n)[g == k].sum()) for k in range(c.n_levels)]
-            m_tot = sum(m_counts) or 1.0
-            u_tot = sum(u_counts) or 1.0
-            new_m = [max(floor, x / m_tot) for x in m_counts]
-            sm = sum(new_m)
-            new_m = [x / sm for x in new_m]
+            new_m = _normalized(m_counts, floor)
             delta = max(delta, max(abs(a - b) for a, b in zip(new_m, c.m)))
             c.m = new_m
             if update_u:
-                new_u = [max(floor, x / u_tot) for x in u_counts]
-                su = sum(new_u)
-                new_u = [x / su for x in new_u]
+                new_u = _normalized(u_counts, floor)
                 delta = max(delta, max(abs(a - b) for a, b in zip(new_u, c.u)))
                 c.u = new_u
         lam = new_lam

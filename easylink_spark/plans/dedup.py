@@ -151,31 +151,19 @@ def run_dedup(
         if cfg.estimate_u:
             comparisons = S.estimate_u(recs, comparisons)
         if cfg.em_iterations:
-            cols = sorted({c.input_col for c in comparisons})
-            gammas = S.compute_gammas(
-                S.attach_pair_attributes(pairs, recs, cols), comparisons
-            ).persist()
+            gammas = S.comparison_vectors(pairs, recs, comparisons).persist()
             comparisons, _ = S.estimate_m_u_em(
                 gammas, comparisons, cfg.prior, max_iter=cfg.em_iterations
             )
             gammas.unpersist()
-        # two-phase scoring: phase 1 runs the full-text Jaccard, role
-        # signature AND the Jaro-Winkler pandas UDF (short first-turn
-        # strings, cheap even as pure Python); only pairs whose phase-1
-        # weight can still clear the threshold join the fat per-turn
-        # arrays and pay the O(L^2) turn-alignment comparator.  The bound
-        # is sound, so the final links are byte-identical to single-phase
-        # scoring.  Deferring JW into its own middle tier was measured
-        # SLOWER at >=4 cores (interleaved A/B at local[4], 60k entities:
-        # links 163-169 s three-tier vs 87-113 s two-phase, identical
-        # checksums): the exact role_tool_sig comparator alone admits a
-        # pair past any cheap-only bound (weight +2.12 vs the -3.88 cut),
-        # so the extra tier pruned almost nothing and its pairs<->records
-        # join + Arrow boundary were pure overhead.
+        # Only pairs whose weight without the O(L^2) turn alignment can
+        # still clear the threshold join the per-turn arrays.  One deferred
+        # phase, not a cascade: deferring Jaro-Winkler to a middle tier
+        # measured slower (ARCHITECTURE.md "Scoring").
         return S.score_pairs(
             pairs, recs, comparisons, prior=cfg.prior,
             threshold=cfg.threshold, validate=False,
-            expensive_cols=[{"turn_texts"}],
+            expensive_cols={"turn_texts"},
         )
 
     links = runner.stage(

@@ -393,8 +393,7 @@ def fs_score(spark: SparkSession, sf_dir: str) -> DataFrame:
                      S._leveled(C.levenshtein_similarity, [0.9, 0.6]),
                      m=_FS_M["type"], u=_FS_U["type"]),
     ]
-    attrs = S.attach_pair_attributes(pairs, records, ["nameword", "type"])
-    gammas = S.compute_gammas(attrs, comps)
+    gammas = S.comparison_vectors(pairs, records, comps)
     scored = S.fs_probability(gammas, comps, _FS_PRIOR)
     return scored.select(
         F.col(f"`{K.LEFT_ID}`").alias("left_id"),
@@ -467,11 +466,7 @@ def fs_score_tf(spark: SparkSession, sf_dir: str) -> DataFrame:
                      m=_FS_M["nameword"], u=_FS_U["nameword"],
                      tf_adjustment=True, tf_weight=1.0),
     ]
-    records_tf = S.with_term_frequencies(records, comps)
-    attrs = S.attach_pair_attributes(
-        pairs, records_tf, ["nameword", comps[0].tf_col()]
-    )
-    gammas = S.compute_gammas(attrs, comps)
+    gammas = S.comparison_vectors(pairs, records, comps)
     scored = S.fs_probability(gammas, comps, _FS_PRIOR)
     return scored.select(
         F.col(f"`{K.LEFT_ID}`").alias("left_id"),

@@ -127,10 +127,7 @@ def run_splink_dummy_pipeline(
     comparisons = splink_dummy_comparisons()
     if estimate:
         comparisons = S.estimate_u(records, comparisons, seed=1234)
-        cols = sorted({c.input_col for c in comparisons})
-        gammas = S.compute_gammas(
-            S.attach_pair_attributes(pairs, records, cols), comparisons
-        ).persist()
+        gammas = S.comparison_vectors(pairs, records, comparisons).persist()
         comparisons, _ = S.estimate_m_u_em(gammas, comparisons, prior)
         gammas.unpersist()
     links = S.score_pairs(pairs, records, comparisons,

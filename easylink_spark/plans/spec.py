@@ -34,6 +34,8 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
+from easylink_spark.sources.readers import read_table
+
 
 class SpecError(ValueError):
     """Invalid pipeline specification."""
@@ -90,16 +92,17 @@ def run_spec(spec: dict, spark: SparkSession | None = None) -> DataFrame:
             cores=sp_cfg.get("cores"),
             shuffle_partitions=sp_cfg.get("shuffle_partitions"),
         )
-    inputs = {
-        name: spark.read.parquet(str(path))
-        for name, path in spec["input"].items()
+    # dedup takes its input as a path; every other pipeline takes
+    # DataFrames (each read is one schema-inference job, so only they read)
+    inputs = {} if spec["pipeline"] == "dedup" else {
+        name: read_table(spark, path) for name, path in spec["input"].items()
     }
     cfg = spec.get("config") or {}
 
     if spec["pipeline"] == "dedup":
         from easylink_spark.plans.dedup import DedupConfig, run_dedup
 
-        if "transcripts" not in inputs:
+        if "transcripts" not in spec["input"]:
             raise SpecError("dedup pipeline needs input slot 'transcripts'")
         ckpt = spec.get("checkpoint_dir")
         if not ckpt:

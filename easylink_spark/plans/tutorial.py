@@ -28,8 +28,9 @@ Stage-by-stage parity map (reference step -> here):
 - splink_evaluating_pairs (estimate_u seed=1234 max_pairs=5e6 ->
   EM per training rule with u fixed -> averaged m -> Fellegi-Sunter
   predict at PROBABILITY_TWO_RANDOM_RECORDS_MATCH,
-  splink_evaluating_pairs.py:67-150) -> scoring.estimate_u(link_only=True)
-  + scoring.estimate_m_u_em per session + scoring.fs_probability
+  splink_evaluating_pairs.py:67-150) -> scoring.comparison_vectors +
+  scoring.estimate_u_exact(link_only=True) (exact, not sampled u) +
+  scoring.estimate_m_u_em per session + scoring.fs_probability
 - one_to_many_links_to_clusters @ THRESHOLD_MATCH_PROBABILITY
   (cascading/one_to_many_links_to_clusters.py) ->
   clustering.one_to_many_links_to_clusters
@@ -175,10 +176,6 @@ class TutorialLinkageConfig:
     prior: float = 1e-4          # PROBABILITY_TWO_RANDOM_RECORDS_MATCH
     threshold: float = 0.996     # THRESHOLD_MATCH_PROBABILITY
     no_duplicates_dataset: str = "input_file_ssa"
-    u_method: str = "exact"      # "exact" (deterministic closed form) or
-    #                              "sampled" (splink's seeded random pairs)
-    u_max_pairs: float = 5e6     # splink_evaluating_pairs.py:67 (sampled only)
-    u_seed: int = 1234           # (sampled only)
     preprocess_middle_initial: tuple[str, ...] = ("input_file_ssa",)
     accept_all: bool = False     # cascading/accept_all_pairs.py: prob 1.0
 
@@ -240,18 +237,8 @@ def run_tutorial_linkage(
             links, cfg.no_duplicates_dataset, cfg.threshold
         )
 
-    # comparison vectors, computed once and shared by training + predict;
-    # term frequencies (splink df_concat_with_tf) attach to the records
-    # BEFORE the pair join, so the fat pairs table never joins tf tables
-    if any(c.tf_adjustment for c in comps):
-        records = S.with_term_frequencies(records, comps)
-    attach_cols = sorted({c.input_col for c in comps}) + sorted(
-        c.tf_col() for c in comps if c.tf_adjustment
-    )
-    gammas = S.compute_gammas(
-        S.attach_pair_attributes(pairs, records, attach_cols),
-        comps,
-    ).persist()
+    # comparison vectors, computed once and shared by training + predict
+    gammas = S.comparison_vectors(pairs, records, comps).persist()
     try:
         # u: EXACT — closed form for equality comparisons, weighted
         # distinct-value-pair enumeration for leveled ones.  Deterministic
@@ -259,27 +246,7 @@ def run_tutorial_linkage(
         # (splink_evaluating_pairs.py:67), whose noise can flip
         # threshold-marginal patterns; on these fixtures the exact values
         # reproduce the reference's golden decisions.
-        if cfg.u_method == "sampled":
-            # splink's own method, for parity experiments: seeded random
-            # pair sampling (noise can flip threshold-marginal patterns)
-            comps = S.estimate_u(
-                records, comps, max_pairs=int(cfg.u_max_pairs),
-                seed=cfg.u_seed, link_only=True,
-            )
-        elif cfg.u_method == "exact":
-            comps = S.estimate_u_exact(records, comps, link_only=True)
-            if any(not c.is_exact_equality for c in comps):
-                leveled = S.estimate_u_by_value_pairs(
-                    records,
-                    [c for c in comps if not c.is_exact_equality],
-                    link_only=True,
-                )
-                by_name = {c.name: c for c in leveled}
-                comps = [by_name.get(c.name, c) for c in comps]
-        else:
-            raise ValueError(
-                f"u_method must be 'exact' or 'sampled', got {cfg.u_method!r}"
-            )
+        comps = S.estimate_u_exact(records, comps, link_only=True)
 
         # one EM session per training rule: pairs = candidates whose rule
         # column agrees exactly (equivalent to re-blocking on the rule, since

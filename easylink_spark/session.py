@@ -200,6 +200,11 @@ def _dump(build: str, archive: str) -> None:
 def _build_at_exit(gateway, archive: str, empty_conf: str) -> None:
     """Stop this process's JVM, then build the archive in a fresh process
     (see the module docstring)."""
+    # first the context: its accumulator server would read EOF from the
+    # stopped JVM's socket and print the EOFError
+    sc = SparkContext._active_spark_context
+    if sc is not None:
+        sc.stop()
     if _stop_jvm(gateway) is None:
         return
     cache = os.path.dirname(archive)

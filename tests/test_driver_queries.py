@@ -1,8 +1,9 @@
 """Driver queries against their DuckDB oracles.
 
 Each text-operator query in ``__spark_entry__.queries()`` runs on Spark and
-its ``oracle_sql()`` twin runs on DuckDB over the same smoke-scale
-``documents`` table; the two must agree the way ``tools/oracle_check.py``
+its ``oracle_sql()`` twin runs on DuckDB over the same ``documents``
+table — the smoke-scale one, and for the grouping and punctuation queries
+a hand-made one too; the two must agree the way ``tools/oracle_check.py``
 compares them (column-name set, row count, values sorted by column name).
 """
 
@@ -24,23 +25,67 @@ oracle_check = importlib.util.module_from_spec(_spec)
 _spec.loader.exec_module(oracle_check)
 
 
+# Shapes the smoke table lacks (its 500 texts are distinct, lower-case and
+# unpunctuated): exact duplicates, texts that differ only in case, and
+# punctuation whose ratio is not a round number.
+HANDMADE = [
+    "The quick brown fox jumps over the lazy dog.",
+    "The quick brown fox jumps over the lazy dog.",
+    "the quick brown fox jumps over the lazy dog.",
+    "THE QUICK BROWN FOX JUMPS OVER THE LAZY DOG.",
+    "Hello, world! Is this (really) a test? Yes: it is.",
+    "hello world is this really a test yes it is",
+    "Spark & DuckDB agree; 100% of the time... maybe?",
+    "Spark & DuckDB agree; 100% of the time... maybe?",
+    "a-b-c d_e f.g h/i j",
+    "x",
+]
+
+
+@pytest.fixture(scope="module")
+def smoke_documents():
+    if not DOCUMENTS.exists():
+        pytest.skip(f"{DOCUMENTS} not found")
+    return DOCUMENTS.parent
+
+
+@pytest.fixture(scope="module")
+def handmade_documents(tmp_path_factory):
+    pa = pytest.importorskip("pyarrow")
+    pq = pytest.importorskip("pyarrow.parquet")
+    d = tmp_path_factory.mktemp("handmade_documents")
+    pq.write_table(pa.table({
+        "doc_id": pa.array(range(len(HANDMADE)), pa.int64()),
+        "text": HANDMADE,
+        "lang": ["en"] * len(HANDMADE),
+        "source": [f"src{i % 3}" for i in range(len(HANDMADE))],
+        "n_chars": pa.array([len(t) for t in HANDMADE], pa.int64()),
+    }), d / "documents.parquet")
+    return d
+
+
 @pytest.fixture(scope="module")
 def duck():
     duckdb = pytest.importorskip("duckdb")
-    if not DOCUMENTS.exists():
-        pytest.skip(f"{DOCUMENTS} not found")
     con = duckdb.connect()
-    con.execute("CREATE VIEW documents AS "
-                f"SELECT * FROM read_parquet('{DOCUMENTS}')")
     yield con
     con.close()
 
 
-@pytest.mark.parametrize("name", [
-    "exact_dedup", "doc_fingerprint", "language_id", "quality_score",
-    "token_count", "simhash_near_dup"])
-def test_driver_query_matches_oracle(spark, duck, name):
-    sdf = E.queries()[name](spark, str(DOCUMENTS.parent))
+_QUERIES = ["exact_dedup", "doc_fingerprint", "language_id", "quality_score",
+            "token_count", "simhash_near_dup"]
+
+
+@pytest.mark.parametrize("name,docs", [
+    *[pytest.param(n, "smoke_documents", id=n) for n in _QUERIES],
+    *[pytest.param(n, "handmade_documents", id=f"{n}-handmade")
+      for n in ("exact_dedup", "quality_score")],
+])
+def test_driver_query_matches_oracle(spark, duck, request, name, docs):
+    docs_dir = request.getfixturevalue(docs)
+    duck.execute("CREATE OR REPLACE VIEW documents AS "
+                 f"SELECT * FROM read_parquet('{docs_dir}/documents.parquet')")
+    sdf = E.queries()[name](spark, str(docs_dir))
     scols, srows = sdf.columns, [tuple(r) for r in sdf.collect()]
     cur = duck.execute(E.oracle_sql()[name])
     ocols, orows = [d[0] for d in cur.description], cur.fetchall()

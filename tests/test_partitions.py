@@ -77,7 +77,7 @@ def test_score_pairs_links_independent_of_partitions(records):
     pairs = B.block_on_key(records, F.col("first_prefix")).cache()
     runs = [
         sorted(S.score_pairs(pairs, records, prior=0.01, threshold=0.85,
-                             validate=False, expensive_cols=[{"turn_texts"}],
+                             validate=False, expensive_cols={"turn_texts"},
                              partitions=n).collect())
         for n in (1, 4, 16)
     ]

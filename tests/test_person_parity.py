@@ -126,6 +126,17 @@ def test_person_one_to_many(spark):
     assert sizes.count() == 0
 
 
+def test_splink_dummy_with_estimated_parameters(spark):
+    """estimate=True (sampled u, then EM) runs end to end and returns a
+    valid clusters contract."""
+    from easylink_spark.plans.person_linkage import run_splink_dummy_pipeline
+
+    datasets, _ = make_person_datasets(spark, 40)
+    clusters = K.validate_clusters(
+        run_splink_dummy_pipeline(spark, datasets, estimate=True))
+    assert clusters.count() > 0
+
+
 # ---------------------------------------------------------------------------
 # GOLDEN-FIXTURE PARITY vs the reference's shipped e2e artifacts
 # ---------------------------------------------------------------------------

@@ -87,6 +87,19 @@ def test_e2e_f1_gate(pipeline):
     assert f1 >= 0.99, f"pairwise F1 {f1:.4f} (p={prec:.4f}, r={rec:.4f}) < 0.99"
 
 
+def test_e2e_f1_gate_with_trained_parameters(spark, tmp_path):
+    """Sampled u plus EM-trained m (the non-default training path) still
+    clears the F1 gate."""
+    t = synth_transcripts(spark, n_entities=60, seed=42).cache()
+    clusters = run_dedup(
+        spark, t.drop("entity_id"), str(tmp_path),
+        DedupConfig(estimate_u=True, em_iterations=3),
+    )
+    prec, rec, f1 = pairwise_f1(labels_of(t), clusters)
+    t.unpersist()
+    assert f1 >= 0.99, f"pairwise F1 {f1:.4f} (p={prec:.4f}, r={rec:.4f}) < 0.99"
+
+
 def test_e2e_partition_equality(pipeline):
     """Label-invariant partition equality vs the truth partition restricted
     to duplicated entities (singletons are excluded by links_to_clusters

@@ -177,20 +177,17 @@ def test_two_phase_scoring_identical_links(spark):
         pairs, recs, prior=0.01, threshold=0.85, validate=False,
         expensive_cols={"turn_texts", "first_text_norm"})
     assert {tuple(r) for r in one.collect()} == {tuple(r) for r in three.collect()}
-    # the flagship's ordered CASCADE (JVM comparators -> Python JW ->
-    # O(L^2) turn alignment), each phase re-tightening the bound — the
-    # link set must still be byte-identical to single-phase scoring
-    four = S.score_pairs(
-        pairs, recs, prior=0.01, threshold=0.85, validate=False,
-        expensive_cols=[{"first_text_norm"}, {"turn_texts"}])
-    assert {tuple(r) for r in one.collect()} == {tuple(r) for r in four.collect()}
 
 
 def test_value_pairs_u_matches_bruteforce_both_universes(spark):
-    """estimate_u_by_value_pairs vs brute-force u over ALL record pairs of
-    the universe — link_only (cross-dataset) and dedupe (all unordered
-    pairs, no self-pairs) must both agree to float precision."""
+    """estimate_u_exact vs brute-force u over ALL record pairs of the
+    universe, for an equality comparison (closed form) and a leveled one
+    (distinct-value-pair enumeration) — link_only (cross-dataset) and
+    dedupe (all unordered pairs, no self-pairs) must both agree to float
+    precision."""
     import itertools
+
+    from easylink_spark.functions.comparators import _jaro_winkler
 
     rows = [
         ("a", "1", "smith"), ("a", "2", "smith"), ("a", "3", "smyth"),
@@ -198,17 +195,20 @@ def test_value_pairs_u_matches_bruteforce_both_universes(spark):
         ("b", "7", "jonez"), ("b", "8", "smyth"), ("b", "9", "smith"),
     ]
     recs = _records(spark, rows)
-    comp = S.Comparison(
+    jw = S.Comparison(
         "name", "name", S._leveled(C.jaro_winkler, [0.94, 0.85]),
         m=[0.1, 0.2, 0.7], u=[0.7, 0.2, 0.1],
     )
+    eq = S.Comparison(
+        "name_eq", "name", S._leveled(C.exact_match, [0.5]),
+        m=[0.1, 0.9], u=[0.9, 0.1], is_exact_equality=True,
+    )
 
-    def gamma_py(v1, v2):
-        from easylink_spark.functions.comparators import _jaro_winkler
-
+    def jw_level(v1, v2):
         sim = _jaro_winkler(v1, v2)
         return 2 if sim >= 0.94 else (1 if sim >= 0.85 else 0)
 
+    levels = {"name": jw_level, "name_eq": lambda v1, v2: int(v1 == v2)}
     for link_only in (True, False):
         if link_only:
             universe = [
@@ -217,11 +217,13 @@ def test_value_pairs_u_matches_bruteforce_both_universes(spark):
             ]
         else:
             universe = list(itertools.combinations(rows, 2))
-        counts = [0, 0, 0]
-        for x, y in universe:
-            counts[gamma_py(x[2], y[2])] += 1
-        expect = [c / len(universe) for c in counts]
-        [got] = S.estimate_u_by_value_pairs(recs, [comp], link_only=link_only)
-        assert all(
-            abs(g - e) < 1e-9 for g, e in zip(got.u, expect)
-        ), f"link_only={link_only}: {got.u} vs {expect}"
+        got = S.estimate_u_exact(recs, [jw, eq], link_only=link_only)
+        assert [c.name for c in got] == ["name", "name_eq"]
+        for c in got:
+            counts = [0] * c.n_levels
+            for x, y in universe:
+                counts[levels[c.name](x[2], y[2])] += 1
+            expect = [n / len(universe) for n in counts]
+            assert all(
+                abs(g - e) < 1e-9 for g, e in zip(c.u, expect)
+            ), f"{c.name} link_only={link_only}: {c.u} vs {expect}"

@@ -31,6 +31,13 @@ print("PROBE", conf.get("spark.easylink.probe", "-"))
 print("SUM", s.range(100).selectExpr("sum(id)").collect()[0][0])
 """
 
+# one job through Python workers: the process then has an accumulator
+# server, which must be down before the exit stops the JVM
+_ARROW_JOB = _JOB + """
+print("ARROW", s.range(10).mapInPandas(
+    lambda bs: (b + 1 for b in bs), "id long").count())
+"""
+
 # a JVM started to dump its classes is killed at exit: stdin closed, then
 # SIGKILL; the build's promotion step then sees its exit code
 _KILLED = """
@@ -78,6 +85,7 @@ def _run(script: str, cache: pathlib.Path, *args: str,
     assert not [ln for ln in lines if "[cds" in ln or "[warning]" in ln], lines
     tags = dict(ln.split(" ", 1) for ln in lines if " " in ln)
     assert tags["SUM"] == "4950"
+    tags["STDERR"] = out.stderr
     return tags
 
 
@@ -89,13 +97,16 @@ def _cds(cache: pathlib.Path) -> pathlib.Path:
 def test_cold_process_builds_archive_warm_process_maps_it(tmp_path):
     """A miss starts normally and, at exit, builds exactly one
     ``<key>.jsa`` in another process; other keys' archives and old build
-    dirs are dropped.  The next process starts from the archive."""
+    dirs are dropped.  The next process starts from the archive.  The
+    miss exits without a traceback, after a job through Python workers."""
     cache = tmp_path / "cache"
     cds = _cds(cache)
     (cds / "0ldkey.build").mkdir(parents=True)
     (cds / "0ldkey.jsa").write_bytes(b"old")
-    cold = _run(_JOB, cache)
+    cold = _run(_ARROW_JOB, cache)
     key = session._cds_key(_find_spark_home())
+    assert cold["ARROW"] == "10"
+    assert "Traceback" not in cold["STDERR"], cold["STDERR"][-2000:]
     assert cold["OPTS"] == "-"
     assert cold["CONF_DIR"] == "-"
     assert {p.name for p in cds.iterdir()} == {"conf", f"{key}.jsa"}

@@ -86,13 +86,15 @@ def test_language_id(spark):
 
 def test_quality_features(spark):
     df = _docs(spark, [(1, "the quick brown fox jumps over it"),
-                       (2, "x")])
+                       (2, "x"), (3, "Hello, world!")])
     rows = {r["doc_id"]: r for r in
             T.quality_features(df, "text").collect()}
     assert rows[1]["n_tokens"] == 7
     assert rows[1]["quality_ok"] is True
     assert rows[2]["quality_ok"] is False
     assert 0 < rows[1]["stop_ratio"] < 1
+    assert rows[1]["punct_ratio"] == 0.0
+    assert rows[3]["punct_ratio"] == round(2 / 13, 6)  # "," and "!"
 
 
 def test_token_count(spark):
