@@ -330,8 +330,9 @@ def score_pairs(
     plan).
     """
     comparisons = comparisons or default_transcript_comparisons()
-    deferred = [c for c in comparisons if c.input_col in (expensive_cols or ())]
-    cheap = [c for c in comparisons if c.input_col not in (expensive_cols or ())]
+    expensive_cols = expensive_cols or set()
+    deferred = [c for c in comparisons if c.input_col in expensive_cols]
+    cheap = [c for c in comparisons if c.input_col not in expensive_cols]
 
     if deferred and cheap:
         # The pruning bound below assumes a deferred comparison's weight is
