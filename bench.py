@@ -145,7 +145,6 @@ def run_dedup_bench(spark, ckpt: str) -> dict:
     from pyspark.sql import functions as F
 
     from easylink_spark.plans.dedup import DedupConfig, run_dedup
-    from easylink_spark.sources.checkpoint import _parquet_footer_stats
 
     input_dir, provision_sec, owned = provision_corpus(spark)
     try:

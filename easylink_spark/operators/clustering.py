@@ -9,10 +9,10 @@
   label propagation (steps/splink/splink_links_to_clusters.py:37-51) and
   networkx (steps/cascading/one_to_many_links_to_clusters.py:84-100) —
   both single-node; this kernel is the distributed replacement.  Inputs
-  at or under ``SMALL_GRAPH_EDGES`` rows skip the rounds: one Arrow
-  collect and a numpy union-find on the driver, like the reference's
-  single node.  A NULL-``dst`` row declares its ``src`` as a node
-  (a singleton unless an edge reaches it).
+  at or under ``SMALL_GRAPH_EDGES`` rows skip the rounds: one bounded
+  Arrow collect sizes the input and a numpy union-find on the driver
+  labels it, like the reference's single node.  A NULL-``dst`` row
+  declares its ``src`` as a node (a singleton unless an edge reaches it).
 - ``links_to_clusters``: G1/G2 — threshold links, CC, stable cluster ids.
   Every linked record gets a cluster (singletons too) unless
   ``emit_singletons=False``, which excludes records NOT involved in an
@@ -53,17 +53,18 @@ from easylink_spark.contracts import (
     validate_clusters,
     validate_ids_to_remove,
 )
+from easylink_spark.operators.blocking import _pair_select, canonicalize_pairs
 
 SRC, DST = "src", "dst"
 # Prefix of cluster-marker nodes (update_clusters).  \x7f sorts after any
 # printable record key, so component minima are always record keys.
 MARKER = "\x7f"
-# Frontier size (edges) at or under which connected components finishes
-# with the driver-side union-find instead of distributed star rounds.  The
-# driver collects the whole frontier, so this caps driver memory: at most
-# about 3x this many rows of two string keys (links_to_clusters' edges
-# plus endpoint declarations), plus the numpy kernel's arrays.  A cluster
-# driver needs that headroom.
+# Size (rows) at or under which connected components labels on the driver
+# with a union-find instead of distributed star rounds: the input itself,
+# when one collect of at most this many rows plus one holds all of it, or
+# the frontier the star rounds leave.  That collect caps driver memory at
+# this many rows plus one of two string keys, plus the numpy kernel's
+# arrays.  A cluster driver needs that headroom.
 SMALL_GRAPH_EDGES = 500_000
 
 
@@ -106,29 +107,25 @@ def _small_star(edges: DataFrame) -> DataFrame:
     )
 
 
-def _union_find_assignments(edges: DataFrame) -> DataFrame:
-    """Small-frontier finish: union-find over the edge list on the driver.
-    The ``src``/``dst`` columns are collected once with ``toArrow`` (one
-    job: no Exchange, no Python worker), a numpy kernel labels the
-    components, and the result comes back as a one-partition DataFrame of
-    (node, component=min node id in component) for every node appearing in
-    either column — identical semantics to the star-forest extraction, and
-    a pure function of the edge set (deterministic at any parallelism).
-    This call runs that job; the returned DataFrame only rescans the
-    driver's result.
+def _union_find_assignments(spark, table) -> DataFrame:
+    """Small-graph finish: a numpy union-find on the driver over
+    ``table``, the Arrow ``src``/``dst`` rows the caller collected.
+    Returns a one-partition DataFrame of (node, component=min node id in
+    component) for every node in either column — identical semantics to
+    the star-forest extraction, and a pure function of the edge set
+    (deterministic at any parallelism).
 
     Rows with a NULL ``dst`` are node declarations: the ``src`` node joins
     the universe (and becomes its own singleton component unless some real
     edge connects it) — the meaning ``connected_components`` gives them on
     every path.
 
-    Only called on inputs bounded by ``SMALL_GRAPH_EDGES`` (at most 3x that
-    many rows, see links_to_clusters), where log-n distributed rounds are
-    pure fixed overhead: each large-star/small-star round costs 2+
-    shuffles plus a driver job barrier, which no core count speeds up —
-    this was THE serial tail in the round-3 scaling decomposition (CC
-    scaled 1.79x 2->8 vs 3.1-3.3x for every other stage).  The reference
-    clusters on one node too (networkx,
+    Only called on tables bounded by ``SMALL_GRAPH_EDGES`` rows, where
+    log-n distributed rounds are pure fixed overhead: each
+    large-star/small-star round costs 2+ shuffles plus a driver job
+    barrier, which no core count speeds up — this was THE serial tail in
+    the round-3 scaling decomposition (CC scaled 1.79x 2->8 vs 3.1-3.3x for
+    every other stage).  The reference clusters on one node too (networkx,
     one_to_many_links_to_clusters.py:84-100).  At 100 TB the first
     distributed rounds shrink the frontier geometrically, so the tail
     handed to this kernel stays small.
@@ -137,7 +134,6 @@ def _union_find_assignments(edges: DataFrame) -> DataFrame:
     import pandas as pd
     import pyarrow as pa
 
-    table = edges.select(SRC, DST).toArrow()
     s = table.column(SRC).to_pandas()
     d = table.column(DST).to_pandas()
     # sort=True: codes are STRING RANKS, so the min-code fixpoint below
@@ -178,7 +174,7 @@ def _union_find_assignments(edges: DataFrame) -> DataFrame:
     # one partition: left to itself createDataFrame splits the rows over
     # the default parallelism, and a writer downstream then writes one
     # file per split
-    return edges.sparkSession.createDataFrame(result).coalesce(1)
+    return spark.createDataFrame(result).coalesce(1)
 
 
 def connected_components(
@@ -186,7 +182,6 @@ def connected_components(
     max_iter: int = 50,
     small_graph_edges: int | None = None,
     stats: dict | None = None,
-    edge_count_hint: int | None = None,
 ) -> DataFrame:
     """Rows (``src``, ``dst``: string node ids, any orientation) ->
     (node, component) where component = min node id in the component
@@ -198,15 +193,14 @@ def connected_components(
     singleton semantics, G4); self-loop rows are neither edges nor
     declarations.
 
-    One size bound picks the path: ``edge_count_hint`` — an UPPER BOUND on
-    the rows the caller already knows without a job (e.g. the links
-    stage's checkpoint manifest row count) — or else one ``count()`` of the
-    rows.  At or under ``small_graph_edges`` (``None`` means
-    ``SMALL_GRAPH_EDGES``; ``0`` forces star rounds, which property tests
-    compare against) the rows go straight to the driver-side union-find
-    (``_union_find_assignments``: one collect job, result in one
-    partition); duplicates and orientation do not change its result, so
-    an upper bound is all the routing needs.  Above it, large-star /
+    The input sizes itself: one collect of at most ``small_graph_edges``
+    rows plus one (``None`` means ``SMALL_GRAPH_EDGES``; ``0`` skips it and
+    forces star rounds, which property tests compare against).  If that
+    holds every row, the driver-side union-find labels it
+    (``_union_find_assignments``, result in one partition).  On a
+    multi-partition input that collect is one ``CollectLimit`` job, which
+    shuffles the per-partition limits into one partition (no ``Exchange``
+    node in the plan).  Otherwise large-star /
     small-star rounds (Kiveris et al.) run while the frontier exceeds
     ``small_graph_edges``, then the union-find finishes what is left.  The
     rounds preserve connectivity and never drop a non-root node, so that
@@ -223,32 +217,34 @@ def connected_components(
     """
     if small_graph_edges is None:
         small_graph_edges = SMALL_GRAPH_EDGES
+    # Dataset.limit takes a Java int
+    small_graph_edges = min(small_graph_edges, 2**31 - 2)
+    spark = edges.sparkSession
     rows = edges.select(SRC, DST).filter(
         F.col(SRC).isNotNull()
         & (F.col(DST).isNull() | (F.col(SRC) != F.col(DST)))
     )
     if 0 < small_graph_edges:
-        # a present hint is authoritative: no count job to second-guess it
-        bound = rows.count() if edge_count_hint is None else edge_count_hint
-        if bound <= small_graph_edges:
+        table = rows.limit(small_graph_edges + 1).toArrow()
+        if table.num_rows <= small_graph_edges:
             if stats is not None:
                 stats.update({
                     "rounds": 0,
-                    # an upper bound (hint, or the pre-dedup row count),
-                    # not the distinct edge count
-                    "initial_edges": bound,
-                    "edge_count_hint": edge_count_hint,
+                    # rows, duplicates and declarations included
+                    "initial_edges": table.num_rows,
                     "final_edges": None,
                     "finish": "union_find",
                 })
-            return _union_find_assignments(rows)
-    cur = (
-        rows.filter(F.col(DST).isNotNull())
-        .distinct()
-        # lazy plan-side; under AQE the checkpoint still materializes at
-        # the signature() action below — one job either way
-        .localCheckpoint(eager=False)
-    )
+            return _union_find_assignments(spark, table)
+
+    def truncated(df: DataFrame) -> DataFrame:
+        # Lazy: the signature() action below materializes it.  toDF gives
+        # the rounds fresh attribute ids: on edges built by a union
+        # (links_to_clusters with ``known``) Spark 4.1's optimizer failed
+        # the round's plan over the bare checkpoint ("key not found").
+        return df.localCheckpoint(eager=False).toDF(SRC, DST)
+
+    cur = truncated(rows.filter(F.col(DST).isNotNull()).distinct())
 
     def signature(df: DataFrame) -> tuple[int, int]:
         # bit_xor is an order-independent, overflow-free edge-set checksum
@@ -265,7 +261,7 @@ def connected_components(
     for _ in range(max_iter):
         if prev_sig[0] <= small_graph_edges:
             break
-        cur = _small_star(_large_star(cur)).localCheckpoint(eager=False)
+        cur = truncated(_small_star(_large_star(cur)))
         sig = signature(cur)
         rounds += 1
         if sig == prev_sig:
@@ -286,7 +282,7 @@ def connected_components(
             else "union_find",
         })
     if not at_fixpoint and prev_sig[0] > 0:
-        assign = _union_find_assignments(cur)
+        assign = _union_find_assignments(spark, cur.toArrow())
     else:
         # At the fixpoint the edge set is a star forest: (node -> min).
         members = cur.select(F.col(SRC).alias("node"),
@@ -323,7 +319,6 @@ def links_to_clusters(
     threshold: float = 0.5,
     validate: bool = True,
     emit_singletons: bool = True,
-    edge_count_hint: int | None = None,
     known: DataFrame | None = None,
 ) -> DataFrame:
     """Threshold links, run CC, emit clusters contract.
@@ -345,13 +340,9 @@ def links_to_clusters(
     the endpoint declarations and ``known``'s record->marker edges (the
     streaming merge's per-batch path).
 
-    ``edge_count_hint`` is an upper bound on the rows of ``links`` plus the
-    rows of ``known``, known to the caller without a job (e.g. parquet
-    footer metadata); with no hint, one count of those rows stands in.  At
-    or under ``SMALL_GRAPH_EDGES`` the driver collects at most 3x the hint
-    rows for the union-find: each link's edge and its two endpoint
-    declarations, plus one row per known record.  That collect runs here,
-    in this call; the returned DataFrame reads its one-partition result.
+    The connected-components call sizes those rows with its own bounded
+    collect, which runs here, in this call; on the small-graph path the
+    returned DataFrame reads the union-find's one-partition result.
     """
     keyed = links.select(
         record_key(f"`{LEFT_DATASET}`", f"`{LEFT_ID}`").alias(SRC),
@@ -369,15 +360,7 @@ def links_to_clusters(
         # update_clusters' record->marker graph without its "new"
         # markers: the links' own edges already connect what those would
         rows = rows.union(_cluster_marker_edges(known, "known"))
-    # Without a hint, count the rows of ``links`` (and ``known``), not the
-    # thresholded edges: the declarations make every link a row, so only
-    # the link count bounds the union-find's input.  One narrow scan job.
-    if edge_count_hint is None:
-        edge_count_hint = links.count() + (
-            known.count() if known is not None else 0
-        )
-    assign = connected_components(rows, edge_count_hint=edge_count_hint)
-    return _clusters(assign, validate)
+    return _clusters(connected_components(rows), validate)
 
 
 # ---------------------------------------------------------------------------
@@ -397,18 +380,9 @@ def clusters_to_links(clusters: DataFrame) -> DataFrame:
         r,
         (F.col("l._cid") == F.col("r._cid")) & (F.col("l._rk") < F.col("r._rk")),
     )
-    # native-type id comparison (integer ids order numerically, matching the
-    # reference's astype(int) pair ordering — see blocking.canonicalize_pairs)
-    lds, rds = F.col("l._ds"), F.col("r._ds")
-    lid, rid = F.col("l._id"), F.col("r._id")
-    swap = (lds > rds) | ((lds == rds) & (lid > rid))
-    return pairs.select(
-        F.when(swap, rds).otherwise(lds).alias(LEFT_DATASET),
-        F.when(swap, F.col("r._id")).otherwise(F.col("l._id")).alias(LEFT_ID),
-        F.when(swap, lds).otherwise(rds).alias(RIGHT_DATASET),
-        F.when(swap, F.col("l._id")).otherwise(F.col("r._id")).alias(RIGHT_ID),
-        F.lit(1.0).alias(PROBABILITY),
-    )
+    return canonicalize_pairs(pairs.select(
+        *_pair_select(), F.lit(1.0).alias(PROBABILITY)
+    ))
 
 
 # ---------------------------------------------------------------------------

@@ -11,9 +11,10 @@ block -> compare -> score -> cluster over a transcripts table
                Jaccard / turn-alignment) -> Fellegi-Sunter probability ->
                threshold (scoring.py)
   clustering : thresholded links + endpoint declarations -> one
-               connected-components call (driver union-find under
-               SMALL_GRAPH_EDGES, large-star/small-star above) -> stable
-               cluster ids (clustering.py)
+               connected-components call, sized by its own bounded
+               collect (driver union-find under SMALL_GRAPH_EDGES,
+               large-star/small-star above) -> stable cluster ids
+               (clustering.py)
 
 Every stage lands in a checkpoint table with a lineage manifest
 (sources/checkpoint.py), so a killed run resumes from the last completed
@@ -171,23 +172,9 @@ def run_dedup(
         validator=validate_links,
     )
 
-    def build_clusters() -> DataFrame:
-        # The links stage row count (known with zero extra jobs: from the
-        # stage's eager cache materialization, or the resumed manifest)
-        # is the size bound links_to_clusters needs, so it runs no count
-        # job; under the small-graph threshold its one
-        # connected_components call goes straight to the driver
-        # union-find.
-        return G.links_to_clusters(
-            links,
-            cfg.threshold,
-            validate=False,
-            edge_count_hint=runner.row_counts.get("links"),
-        )
-
     runner.stage(
         "clusters",
-        build_clusters,
+        lambda: G.links_to_clusters(links, cfg.threshold, validate=False),
         inputs=["links"],
         validator=validate_clusters,
     )

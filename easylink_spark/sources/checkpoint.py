@@ -28,8 +28,10 @@ Scale notes (the round-1 serial bottleneck lived here):
   repartition.  Downstream stages read the cache, not the files, and
   parquet re-reads split large files by row-group anyway, so re-shuffling
   every stage's bytes just to shape the file count is pure overhead;
-- row counts come from parquet footer metadata via pyarrow on the driver —
-  zero Spark jobs per stage boundary (the round-1 count() re-scan is gone).
+- manifest row counts come from parquet footer metadata via pyarrow on
+  the driver — zero Spark jobs per stage boundary (the round-1 count()
+  re-scan is gone).  They serve lineage only: no operator sizes its
+  input from them.
 """
 
 from __future__ import annotations
@@ -50,8 +52,8 @@ def _stable_hash(obj) -> str:
 
 
 def _parquet_footer_stats(path: Path) -> tuple[int, list[tuple[str, int, int]]]:
-    """(total_rows, [(file, rows, bytes)]) from parquet footers — driver-side
-    metadata reads only, no Spark job."""
+    """(total_rows, [(file, rows, bytes)]) for a manifest, from parquet
+    footers — driver-side metadata reads only, no Spark job."""
     import pyarrow.parquet as pq
 
     files = sorted(p for p in path.glob("*.parquet"))
@@ -85,11 +87,6 @@ class StageRunner:
         # core count speeds up) overlaps downstream compute.
         self._pending: dict[str, threading.Thread] = {}
         self._errors: list[BaseException] = []
-        # Row count per completed stage, known the moment the stage's cache
-        # is materialized (or its manifest is resumed) — no extra job.
-        # Callers use it e.g. as connected_components' edge_count_hint
-        # without waiting for an in-flight manifest write.
-        self.row_counts: dict[str, int] = {}
         # Live stage caches, released at flush() (the durability barrier).
         self._cached: dict[str, DataFrame] = {}
         # per-stage seconds a background writer spent WAITING on its inputs'
@@ -224,7 +221,6 @@ class StageRunner:
                 validator(df)
             mpath.write_text(json.dumps(manifest, indent=1))
         self.manifests[name] = manifest
-        self.row_counts[name] = n_rows
         return df
 
     def stage(
@@ -243,15 +239,15 @@ class StageRunner:
         resumes from the last *completed* stage (SURVEY §7.4.4).
 
         Every stage takes one write path: its output is persisted and
-        materialized by one eager ``count()`` (published as
-        ``row_counts[name]``); ``validator`` (a contracts.validate_*
-        function) then runs on that cache in the caller's frame, so a
-        violation raises here and nothing is written.  Otherwise the stage
-        returns the PERSISTED DataFrame immediately and the durable write +
-        manifest happen in a background thread that first joins its inputs'
-        writers (so lineage hashes are final).  Downstream stages chain on
-        the in-memory copy instead of waiting for a write->read round-trip;
-        ``flush()`` is the durability barrier and releases the caches.
+        materialized by one eager ``count()``; ``validator`` (a
+        contracts.validate_* function) then runs on that cache in the
+        caller's frame, so a violation raises here and nothing is written.
+        Otherwise the stage returns the PERSISTED DataFrame immediately and
+        the durable write + manifest happen in a background thread that
+        first joins its inputs' writers (so lineage hashes are final).
+        Downstream stages chain on the in-memory copy instead of waiting
+        for a write->read round-trip; ``flush()`` is the durability barrier
+        and releases the caches.
         """
         from easylink_spark.contracts import _validation_enabled
 
@@ -271,7 +267,6 @@ class StageRunner:
             m = json.loads(mpath.read_text())
             if m.get("config_hash") == self.config_hash and m.get("lineage") == lineage:
                 self.manifests[name] = m
-                self.row_counts[name] = m["rows"]
                 return self.read(name)
 
         t0 = time.time()
@@ -285,9 +280,8 @@ class StageRunner:
         # sf0.1/local[32]).
         # With the cache materialized first, the background thread pays only
         # parquet encode+IO and downstream compute (and the validator) start
-        # from the cache.  The count also publishes the stage's row count
-        # with no extra job.
-        self.row_counts[name] = cached.count()
+        # from the cache.
+        cached.count()
         if validator is not None and _validation_enabled():
             validator(cached)
 
@@ -313,7 +307,7 @@ class StageRunner:
     ) -> None:
         lineage = self._lineage_of(inputs)
         if self.iceberg_catalog:
-            n_rows = self.row_counts[name]
+            n_rows = df.count()  # df is the stage's materialized cache
             file_stats: list[tuple[str, int, int]] = []
         else:
             n_rows, file_stats = _parquet_footer_stats(self._table_path(name))
@@ -342,4 +336,3 @@ class StageRunner:
         }
         self._manifest_path(name).write_text(json.dumps(manifest, indent=1))
         self.manifests[name] = manifest
-        self.row_counts[name] = n_rows

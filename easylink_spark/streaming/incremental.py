@@ -16,10 +16,10 @@ Here the loop is plain driver control flow over DataFrames
 update to a Structured Streaming micro-batch sink: each arriving batch of
 links is merged into the running cluster state.  Steps 3 and 4 are one
 call there, ``links_to_clusters(batch, known=state)``: on small graphs one
-Arrow collect of the batch's links and the state's record->cluster edges
-and a union-find on the driver, with the collect's size bound read from the
-state's parquet footers plus one batch count rather than a probe job.  The
-merged state comes back in one partition and is written as one file.  A
+bounded Arrow collect of the batch's links and the state's record->cluster
+edges and a union-find on the driver; the collect sizes its own input, so
+no count job or footer read comes first.  The merged state comes back in
+one partition and is written as one file: two Spark jobs per batch.  A
 missing state means the first batch; a state that exists but cannot be
 read fails the batch.  The reference has no streaming operators; this is
 the batch-incremental semantics it does have, exposed on Spark's streaming
@@ -32,7 +32,6 @@ import glob
 import os
 import shutil
 from collections.abc import Callable
-from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -44,7 +43,6 @@ from easylink_spark.contracts import (
     RECORD_ID,
 )
 from easylink_spark.operators import clustering as G
-from easylink_spark.sources.checkpoint import _parquet_footer_stats
 
 # A linkage pass: records-in -> clusters-out (e.g. a configured
 # blocking+scoring+clustering sub-pipeline).
@@ -119,17 +117,12 @@ def merge_batch(
         known = batch_df.sparkSession.read.schema(CLUSTERS_SCHEMA).parquet(
             state_path
         )
-        known_rows, _ = _parquet_footer_stats(Path(state_path))
     else:
-        known, known_rows = None, 0
+        known = None
     # One connected-components call over the batch's links and the known
-    # state (a driver-side union-find on small graphs); its row bound is footer metadata plus one batch count, so no
-    # probe job re-reads the state.  Called through the module so
-    # instrumentation that wraps G.links_to_clusters sees it.
-    merged = G.links_to_clusters(
-        batch_df, threshold, known=known,
-        edge_count_hint=batch_df.count() + known_rows,
-    )
+    # state (a driver-side union-find on small graphs).  Called through
+    # the module so instrumentation that wraps G.links_to_clusters sees it.
+    merged = G.links_to_clusters(batch_df, threshold, known=known)
     # Never overwrite the path the plan is still reading: an in-place
     # overwrite relies on cached blocks surviving until the write ends —
     # eviction mid-write would recompute against deleted files and corrupt

@@ -85,8 +85,9 @@ def test_cc_long_chain_converges(spark):
 def test_cc_hybrid_paths_identical(spark):
     """All three kernels — pure star rounds (small_graph_edges=0), pure
     union-find finish (threshold above |E|), and the hybrid (threshold mid
-    contraction, exercising star-rounds-then-union-find) — must produce the
-    IDENTICAL (node, component-min) map on adversarial shapes."""
+    contraction: star rounds, then the union-find on their frontier) —
+    must produce the IDENTICAL (node, component-min) map on adversarial
+    shapes."""
     rng = random.Random(13)
     edges = []
     for comp in range(60):
@@ -101,10 +102,17 @@ def test_cc_hybrid_paths_identical(spark):
             edges += [(a, b) for a in ns for b in ns if a < b]  # clique
     rng.shuffle(edges)
     df = spark.createDataFrame(edges, "src string, dst string")
+    # under |E| = 1,058, and at least the 499 edges one star round leaves,
+    # so the hybrid really hands a frontier to the union-find (a lower
+    # threshold runs the rounds to their star-forest fixpoint instead)
+    mid = 600
     results = []
-    for thr in (0, len(edges) // 3, 10**9):
-        assign = G.connected_components(df, small_graph_edges=thr)
+    for thr in (0, mid, 10**9):
+        stats: dict = {}
+        assign = G.connected_components(df, small_graph_edges=thr, stats=stats)
         results.append({(r["node"], r["component"]) for r in assign.collect()})
+        if thr == mid:
+            assert stats["finish"] == "union_find" and stats["rounds"] > 0, stats
     assert results[0] == results[1] == results[2]
     # bench.py's hybrid cases pass None: the default threshold, which this
     # graph is under, so the kernel finishes with union-find at round 0
@@ -122,7 +130,7 @@ def test_cc_hybrid_paths_identical(spark):
         "src string, dst string",
     )
     maps = []
-    for thr in (0, len(edges) // 3, 10**9):
+    for thr in (0, mid, 10**9):
         assign = G.connected_components(declared, small_graph_edges=thr)
         maps.append({r["node"]: r["component"] for r in assign.collect()})
     assert maps[0] == maps[1] == maps[2]
@@ -220,27 +228,6 @@ def test_links_to_clusters_threshold_and_exclusion(spark):
     }
 
 
-def test_links_to_clusters_hint_path_identical(spark):
-    """A call with ``edge_count_hint`` (no count job) must produce exactly
-    the clusters of a call without one — singletons from sub-threshold
-    links included."""
-    random.seed(11)
-    rows = []
-    for i in range(200):
-        a, b = random.randrange(60), random.randrange(60)
-        rows.append(("d", str(a), "d", str(b), random.random()))
-    links = _links(spark, rows)
-    general = G.links_to_clusters(links, threshold=0.5)
-    hinted = G.links_to_clusters(links, threshold=0.5, edge_count_hint=len(rows))
-    assert partition_of(hinted) == partition_of(general)
-    # emit_singletons=False with a hint: union-find over edges only
-    gen_ex = G.links_to_clusters(links, threshold=0.5, emit_singletons=False)
-    hint_ex = G.links_to_clusters(
-        links, threshold=0.5, emit_singletons=False, edge_count_hint=len(rows)
-    )
-    assert partition_of(hint_ex) == partition_of(gen_ex)
-
-
 def test_clusters_to_links_roundtrip(spark):
     clusters = spark.createDataFrame(
         [("d", "1", "c1"), ("d", "2", "c1"), ("d", "3", "c1"), ("e", "9", "c2")],
@@ -315,8 +302,6 @@ def test_links_to_clusters_known_equals_update_clusters(spark, monkeypatch):
         frozenset({"e-__-2", "e-__-3"}), frozenset({"e-__-9"}),
     }
     assert _rows(G.links_to_clusters(links, t, known=known)) == expected
-    hinted = G.links_to_clusters(links, t, known=known, edge_count_hint=13)
-    assert _rows(hinted) == expected
     expected_linked = _rows(G.update_clusters(
         known, G.links_to_clusters(links, t, emit_singletons=False)
     ))
@@ -342,39 +327,59 @@ def test_links_to_clusters_known_equals_update_clusters(spark, monkeypatch):
             G.update_clusters(rk, G.links_to_clusters(rl, t))
         )
 
-    # a bound above SMALL_GRAPH_EDGES (5 links + 8 known rows) takes the
-    # star rounds
-    monkeypatch.setattr(G, "SMALL_GRAPH_EDGES", 12)
+    # 11 distinct edges (3 links over the threshold, 8 known records) above
+    # SMALL_GRAPH_EDGES take the star rounds
+    monkeypatch.setattr(G, "SMALL_GRAPH_EDGES", 4)
+    runs = []
+    cc = G.connected_components
+
+    def recording_cc(rows):
+        runs.append({})
+        return cc(rows, stats=runs[-1])
+
+    monkeypatch.setattr(G, "connected_components", recording_cc)
     assert _rows(G.links_to_clusters(links, t, known=known)) == expected
     assert _rows(G.links_to_clusters(
         links, t, emit_singletons=False, known=known
     )) == expected_linked
+    assert len(runs) == 2 and all(r["rounds"] > 0 for r in runs), runs
 
 
 def test_union_find_task_rows_stay_bounded(spark, monkeypatch):
-    """Without a hint, the driver-side union-find never collects more than
-    3x SMALL_GRAPH_EDGES rows — also when every link is below the threshold
-    (no edges, but two endpoint declarations per link) and with ``known`` —
-    so SMALL_GRAPH_EDGES bounds the driver's memory."""
+    """No collect takes more than SMALL_GRAPH_EDGES + 1 rows, and the
+    driver-side union-find gets at most SMALL_GRAPH_EDGES: with every link
+    below the threshold (no edges, but two endpoint declarations per link),
+    with ``known``, and when star rounds hand their frontier over — so
+    SMALL_GRAPH_EDGES bounds the driver's memory."""
     monkeypatch.setattr(G, "SMALL_GRAPH_EDGES", 4)
-    sizes = []
+    collected, labelled = [], []
+    to_arrow = type(spark.range(1)).toArrow
+
+    def recording_to_arrow(df):
+        table = to_arrow(df)
+        collected.append(table.num_rows)
+        return table
+
     real = G._union_find_assignments
 
-    def counting(edges):
-        sizes.append(edges.count())
-        return real(edges)
+    def recording_union_find(session, table):
+        labelled.append(table.num_rows)
+        return real(session, table)
 
-    monkeypatch.setattr(G, "_union_find_assignments", counting)
+    monkeypatch.setattr(type(spark.range(1)), "toArrow", recording_to_arrow)
+    monkeypatch.setattr(G, "_union_find_assignments", recording_union_find)
     below = _links(spark, [("d", f"1{i}", "d", f"2{i}", 0.1) for i in range(7)])
+    chain = _links(spark, [("d", f"{i}", "d", f"{i + 1}", 0.9) for i in range(7)])
     known = spark.createDataFrame(
         [("d", "1", "k"), ("d", "2", "k")],
         f"`{K.INPUT_RECORD_DATASET}` string, `{K.INPUT_RECORD_ID}` string, "
         f"`{K.CLUSTER_ID}` string",
     )
-    for links, k in ((below, None), (below.limit(2), None), (below.limit(1), known)):
-        expected = 2 * links.count() + (k.count() if k is not None else 0)
+    for links, k, expected in ((below, None, 14), (below.limit(2), None, 4),
+                               (below.limit(1), known, 4), (chain, None, 8)):
         assert G.links_to_clusters(links, 0.5, known=k).count() == expected
-    assert sizes and max(sizes) <= 3 * 4, sizes
+    assert collected and max(collected) <= 4 + 1, collected
+    assert labelled and max(labelled) <= 4, labelled
 
 
 def test_empty_inputs_give_empty_string_typed_frames(spark):

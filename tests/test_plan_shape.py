@@ -172,9 +172,12 @@ def test_no_operator_reads_the_shuffle_width():
 def test_small_graph_clustering_runs_no_python_or_single_partition_exchange(
     spark, monkeypatch
 ):
-    """On the small-graph path the union-find runs on the driver: neither
-    the collect it runs nor the plan it returns holds a Python-evaluation
-    node or a shuffle into one partition — with and without ``known``."""
+    """On the small-graph path the union-find runs on the driver: the
+    plan text of the bounded collect and of the returned DataFrame holds
+    no Python-evaluation node and no ``Exchange SinglePartition`` — with
+    and without ``known``.  Only plan text is checked: on a multi-partition
+    input the collect is a ``CollectLimit``, whose own shuffle into one
+    partition is accepted and is not an Exchange node."""
     links = spark.createDataFrame(
         [("d", str(i), "d", str(i + 7), 0.6 + (i % 4) / 10) for i in range(0, 80, 4)],
         f"`{K.LEFT_DATASET}` string, `{K.LEFT_ID}` string, "
@@ -209,8 +212,8 @@ def test_small_graph_clustering_runs_no_python_or_single_partition_exchange(
 
 def test_stream_merge_job_count(spark, tmp_path, monkeypatch):
     """One streaming merge of a ~100-link batch into a small state, state
-    write included, runs at most 4 Spark jobs: the batch count (two jobs
-    under AQE), the driver-side union-find's one collect, and the one
+    write included, runs at most 2 Spark jobs: the one bounded collect
+    that sizes the graph and feeds the driver-side union-find, and the one
     write.  The two-pass merge (``links_to_clusters`` with its own count
     probe, then ``update_clusters`` on an inferred-schema state read) ran
     9."""
@@ -239,5 +242,30 @@ def test_stream_merge_job_count(spark, tmp_path, monkeypatch):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     jobs = sc.statusTracker().getJobIdsForGroup("stream_merge_jobs")
-    assert 0 < len(jobs) <= 4, sorted(jobs)
+    assert 0 < len(jobs) <= 2, sorted(jobs)
     assert sorted(spark.read.parquet(state).collect()) == expected
+
+
+def test_links_to_clusters_on_parquet_runs_one_job(spark, tmp_path):
+    """Over a multi-file parquet links table, ``links_to_clusters`` runs
+    exactly one Spark job: the bounded collect that both sizes the graph
+    and feeds the driver-side union-find."""
+    links_dir = str(tmp_path / "links")
+    spark.createDataFrame(
+        [("d", str(i), "d", str(i + 7), 0.6 + (i % 4) / 10) for i in range(0, 400, 4)],
+        f"`{K.LEFT_DATASET}` string, `{K.LEFT_ID}` string, "
+        f"`{K.RIGHT_DATASET}` string, `{K.RIGHT_ID}` string, "
+        f"`{K.PROBABILITY}` double",
+    ).repartition(3).write.parquet(links_dir)
+    assert len(list(pathlib.Path(links_dir).glob("*.parquet"))) == 3
+    links = spark.read.parquet(links_dir)  # schema inference runs here
+
+    sc = spark.sparkContext
+    sc.setJobGroup("links_to_clusters_jobs", "one links_to_clusters")
+    try:
+        clusters = G.links_to_clusters(links, 0.85, validate=False)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("links_to_clusters_jobs")
+    assert len(jobs) == 1, sorted(jobs)
+    assert clusters.count() == 200
